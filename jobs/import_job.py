@@ -35,23 +35,27 @@ def main() -> None:
     ap.add_argument(
         "--incremental",
         action="store_true",
-        help="MERGE-equivalent steady-state mode: fold ONLY this run's "
-        "delta into the persistent IncrementalGraphStore under "
-        "<checkpoint>/graph_state (per-batch cost O(|graph| + |delta|), "
-        "not O(corpus history)) and derive the output tables from the "
-        "merged state. Requires --no-entity-linking: owl:sameAs fusion "
-        "is corpus-global and invalidates per-node state (run "
-        "kg_sameas_cc over the derived tables instead).",
+        help="MERGE-equivalent steady-state mode: append ONLY this run's "
+        "delta to the IncrementalGraphStore under <checkpoint>/graph_state "
+        "(a bucketed triple log) and re-materialize just the buckets it "
+        "touches from their logged rows. Periodic log compaction drops "
+        "re-imported and superseded rows, so a touched bucket costs its "
+        "share of the graph plus the batches since the last compaction, "
+        "not the whole ingest history. Runs the ledger committed but the "
+        "store never merged "
+        "(a crash between the two) are merged first. Requires "
+        "--no-entity-linking: owl:sameAs fusion is corpus-global (use "
+        "--canonicalize for the periodic reconcile).",
     )
     ap.add_argument(
         "--canonicalize",
         action="store_true",
         help="(with --incremental) run the periodic sameAs reconcile: "
-        "connected components over the store's owl:sameAs edges, applied "
-        "as a view-level remap + re-aggregation to THIS run's output "
-        "tables (tables_canonicalized — the state itself stays "
-        "canonical-free and append-only). The out-of-band refresh that "
-        "replaces per-batch entity linking in steady-state mode.",
+        "connected components over the store's owl:sameAs edges, and THIS "
+        "run's output tables materialized from the canonicalized log "
+        "(tables_canonicalized — the store itself stays canonical-free). "
+        "The out-of-band refresh that replaces per-batch entity linking "
+        "in steady-state mode.",
     )
     ap.add_argument(
         "--shapes",
@@ -92,58 +96,45 @@ def main() -> None:
     )
     src = spark.read.parquet(args.input)
     cp = ImportCheckpoint(spark, args.checkpoint)
-    res = cp.run(src, run_id=args.run_id, cfg=cfg)
-    if res.triples is None:
-        print(json.dumps({"run_id": res.run_id, "new_files": 0, "status": "up-to-date"}))
-        return
     from pyspark.sql import functions as F
 
     ns = {}
     if args.incremental:
-        # MERGE-equivalent steady state: transforms + merge run over THIS
-        # run's delta only; the persistent partial-aggregate state makes
-        # the derived tables equal to a from-scratch import of every
-        # batch (operators/incremental.py) — the loop a 100 TB ingest
-        # actually runs, O(|graph| + |delta|) per batch
         import os
 
-        from neosemantics_spark.config import STANDARD_PREFIXES
-        from neosemantics_spark.operators.incremental import (
-            IncrementalGraphStore,
-            extend_prefix_map,
-        )
+        from neosemantics_spark.operators.incremental import IncrementalGraphStore
+        from neosemantics_spark.pipeline import ingest_batch
 
         if not args.no_entity_linking:
             sys.exit(
                 "--incremental requires --no-entity-linking: owl:sameAs "
                 "fusion is corpus-global and invalidates per-node state; "
-                "use --canonicalize for the view-level reconcile refresh "
-                "over the derived tables instead."
+                "use --canonicalize for the reconcile refresh over the "
+                "store instead."
             )
-        delta = res.triples.filter(F.col("parse_error").isNull()).cache()
-        ns_path = os.path.join(args.checkpoint, "ns_prefixes.json")
-        if cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):
-            # prefixes persist across batches and are never re-assigned
-            # (the reference's _NsPrefDef contract)
-            if os.path.exists(ns_path):
-                with open(ns_path) as fh:
-                    ns = json.load(fh)
-            else:
-                ns = {v: k for k, v in STANDARD_PREFIXES.items()}
-            ns = extend_prefix_map(ns, collect_namespaces(delta))
-            tmp = ns_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(ns, fh, sort_keys=True)
-            os.replace(tmp, ns_path)
         store = IncrementalGraphStore(
             spark,
             os.path.join(args.checkpoint, "graph_state"),
             cfg,
             order="arrival",
         )
-        store.merge_batch(transform_triples(delta, cfg, ns), batch_id=res.run_id)
+        # prefixes persist across batches and are never re-assigned (the
+        # reference's _NsPrefDef contract)
+        res, ns, runs = ingest_batch(
+            cp, store, src, cfg,
+            ns_path=os.path.join(args.checkpoint, "ns_prefixes.json"),
+            run_id=args.run_id,
+        )
+        if not runs:
+            print(json.dumps({"run_id": res.run_id, "new_files": 0, "status": "up-to-date"}))
+            return
         tables = store.tables_canonicalized() if args.canonicalize else store.tables()
     else:
+        res = cp.run(src, run_id=args.run_id, cfg=cfg)
+        if res.triples is None:
+            print(json.dumps({"run_id": res.run_id, "new_files": 0, "status": "up-to-date"}))
+            return
+        runs = [res.run_id]
         # full-recompute mode: the graph ACCUMULATES across runs — only
         # the delta was parsed (the expensive Arrow-batched Python
         # stage), but transforms + materialize run over every
@@ -185,18 +176,21 @@ def main() -> None:
                     return pref + PREFIX_SEPARATOR + iri[len(nsp):]
             return iri
 
-        delta = touched_nodes(cp, res.run_id)
-        violations = ShaclValidator(tables, iri_map if ns else None).validate_delta(
-            shapes, delta
-        )
-        vdir = f"{args.output}/violations/run_id={res.run_id}"
-        violations.write.mode("overwrite").parquet(vdir)
-        n_violations = spark.read.parquet(vdir).count()
+        # a replayed run (see ingest_batch) is validated like a new one
+        n_violations = 0
+        for rid in runs:
+            violations = ShaclValidator(tables, iri_map if ns else None).validate_delta(
+                shapes, touched_nodes(cp, rid)
+            )
+            vdir = f"{args.output}/violations/run_id={rid}"
+            violations.write.mode("overwrite").parquet(vdir)
+            n_violations += spark.read.parquet(vdir).count()
 
     print(
         json.dumps(
             {
                 "run_id": res.run_id,
+                "runs": runs,
                 "new_files": res.new_files,
                 "skipped_files": res.skipped_files,
                 # count the cached tables (a partitioned dir with zero

@@ -31,11 +31,11 @@ import time
 from dataclasses import asdict, dataclass
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import GraphConfig
-from .sources.parse import extract_triples
+from .sources.parse import TRIPLES_SCHEMA, extract_triples
 
 
 def _table(spark: SparkSession, path: str) -> Optional[DataFrame]:
@@ -78,6 +78,7 @@ class ImportCheckpoint:
         self.lineage_path = os.path.join(root, "lineage")
         self.metrics_path = os.path.join(root, "metrics")
         self.triples_root = os.path.join(root, "triples")
+        self.run_order_path = os.path.join(root, "run_order.json")
 
     # ---------------------------------------------------------------- read
     def processed(self) -> Optional[DataFrame]:
@@ -92,21 +93,38 @@ class ImportCheckpoint:
     def all_triples(self) -> Optional[DataFrame]:
         return _table(self.spark, self.triples_root)
 
-    # ---------------------------------------------------------------- run
-    def _derive_run_id(self, todo: DataFrame, key: list[str]) -> str:
-        """Deterministic run id from the todo-set content: an
-        order-independent sum of per-file hashes (decimal — no overflow)
-        plus the file count. A retry after a crash recomputes the SAME
-        todo set → SAME run_id → overwrites its own run directory and
-        partitions instead of duplicating them."""
-        row = todo.agg(
-            F.sum(F.xxhash64(*key).cast("decimal(20,0)")).alias("h"),
-            F.count("*").alias("n"),
-        ).first()
-        digest = int(row["h"] or 0) % (16**12)
-        return f"r{row['n']}x{digest:012x}"
+    def _run_order(self) -> list:
+        try:
+            with open(self.run_order_path) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return []
 
-    def _prune_orphan_runs(self) -> None:
+    def run_ids(self) -> list:
+        """Committed run ids, oldest commit first. The order is the commit
+        record `run_order.json`, written just before each run's processed
+        partition lands, so it survives copying the root. A committed run
+        missing from it (a root written before the record existed) comes
+        first, by partition mtime — the only order such a root kept."""
+        if not os.path.isdir(self.processed_path):
+            return []
+        committed = {
+            d.split("=", 1)[1] for d in os.listdir(self.processed_path) if d.startswith("run_id=")
+        }
+        order = [r for r in self._run_order() if r in committed]
+        legacy = sorted(
+            committed - set(order),
+            key=lambda r: os.path.getmtime(os.path.join(self.processed_path, f"run_id={r}")),
+        )
+        return legacy + order
+
+    def run_triples(self, run_id: str) -> DataFrame:
+        """One run's checkpointed triples, quarantine rows included."""
+        path = os.path.join(self.triples_root, f"run_id={run_id}")
+        return self.spark.read.schema(TRIPLES_SCHEMA).parquet(path)
+
+    # ---------------------------------------------------------------- run
+    def _prune_orphan_runs(self, committed: set) -> None:
         """Delete triples/run_id=<id> directories whose run_id never made it
         into processed_files — leftovers of a crash between the triples
         write and the checkpoint commit whose todo set has since changed
@@ -117,10 +135,6 @@ class ImportCheckpoint:
 
         if not os.path.isdir(self.triples_root):
             return
-        done = self.processed()
-        committed = set()
-        if done is not None and "run_id" in done.columns:
-            committed = {r["run_id"] for r in done.select("run_id").distinct().collect()}
         for name in os.listdir(self.triples_root):
             if name.startswith("run_id=") and name.split("=", 1)[1] not in committed:
                 shutil.rmtree(os.path.join(self.triples_root, name), ignore_errors=True)
@@ -140,6 +154,21 @@ class ImportCheckpoint:
                 "ImportCheckpoint at a fresh root."
             )
 
+    def _record_run(self, run_id: str) -> None:
+        """Append `run_id` to the commit record (a retry moves it to the
+        end), atomically: tmp file + rename."""
+        order = [r for r in self._run_order() if r != run_id] + [run_id]
+        tmp = self.run_order_path + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(order, fh)
+        os.replace(tmp, self.run_order_path)
+
+    def _write_metrics(self, *row) -> None:
+        self.spark.createDataFrame(
+            [row],
+            "run_id string, files_processed long, files_skipped long, triples long, parse_errors long, config_hash string",
+        ).write.mode("append").parquet(self.metrics_path)
+
     def run(
         self,
         src_files: DataFrame,
@@ -150,6 +179,11 @@ class ImportCheckpoint:
         """Process only files not yet in the checkpoint; write triples for
         this run under triples/run_id=<id>/, then commit lineage +
         processed rows.
+
+        One aggregation over the source, marked against the ledger, gives
+        the new-file count, the total and the run id; the triple and
+        parse-error counts are observed on the triples write. A malformed
+        file is quarantined as a parse_error row, never fatal.
 
         Crash safety: run_id is derived from the todo-set content hash, so
         a retry after a crash anywhere before the final commit recomputes
@@ -169,59 +203,66 @@ class ImportCheckpoint:
         src = src_files.withColumn("content_sha", F.sha2("content", 256)).withColumn(
             "config_hash", F.lit(fp)
         )
-        done = self.processed()
         key = ["repo", "path", "commit", "content_sha", "config_hash"]
+        done = self.processed()
         if done is not None:
             self._check_layout(done)
-            todo = src.join(done.select(*key), key, "left_anti")
+            # distinct: a file listed twice in one run has two ledger rows,
+            # and must not multiply its source rows here
+            done = done.select(*key).distinct().withColumn("_done", F.lit(True))
+            src = src.join(done, key, "left")
         else:
-            todo = src
-        self._prune_orphan_runs()
-        todo = todo.cache()
-        n_new = todo.count()
-        n_total = src.count()
-        run_id = run_id or (
-            self._derive_run_id(todo, key) if n_new else time.strftime("%Y%m%d%H%M%S")
-        )
-        if n_new == 0:
-            self.spark.createDataFrame(
-                [(run_id, 0, n_total, 0, 0, fp)],
-                "run_id string, files_processed long, files_skipped long, triples long, parse_errors long, config_hash string",
-            ).write.mode("append").parquet(self.metrics_path)
-            return IncrementalResult(run_id, 0, n_total, None)
-        triples = extract_triples(todo.drop("content_sha", "config_hash"))
-        out_dir = os.path.join(self.triples_root, f"run_id={run_id}")
-        triples.write.mode("overwrite").parquet(out_dir)
-        written = self.spark.read.parquet(out_dir)
-        # per-file lineage ledger (the per-partition commit record);
-        # partitioned by run_id + dynamic overwrite → retry-idempotent
-        lineage = (
-            written.groupBy("repo", "path", "commit")
-            .agg(
-                F.count(F.when(F.col("parse_error").isNull(), 1)).alias("n_triples"),
-                F.max(F.col("parse_error").isNotNull().cast("int")).alias("had_error"),
+            src = src.withColumn("_done", F.lit(None).cast("boolean"))
+        self._prune_orphan_runs(set(self.run_ids()))
+        new = F.col("_done").isNull()
+        # cached for the count and the parse; skipped files keep no content
+        src = src.withColumn("content", F.when(new, F.col("content"))).cache()
+        try:
+            # run id: an order-independent sum of per-file hashes (decimal —
+            # no overflow) plus the file count, so a retry of the same todo
+            # set gets the same id and overwrites its own partitions
+            row = src.agg(
+                F.count("*").alias("n_total"),
+                F.count(F.when(new, 1)).alias("n_new"),
+                F.sum(F.when(new, F.xxhash64(*key).cast("decimal(20,0)"))).alias("h"),
+            ).first()
+            n_new, n_total = row["n_new"], row["n_total"]
+            if n_new == 0:
+                run_id = run_id or time.strftime("%Y%m%d%H%M%S")
+                self._write_metrics(run_id, 0, n_total, 0, 0, fp)
+                return IncrementalResult(run_id, 0, n_total, None)
+            run_id = run_id or f"r{n_new}x{int(row['h'] or 0) % 16**12:012x}"
+            todo = src.filter(new)
+            triples = extract_triples(todo.drop("content_sha", "config_hash", "_done"), False)
+            ok = F.col("parse_error").isNull()
+            obs = Observation()
+            out_dir = os.path.join(self.triples_root, f"run_id={run_id}")
+            triples.observe(
+                obs, F.count(F.when(ok, 1)).alias("triples"), F.count(F.when(~ok, 1)).alias("errors")
+            ).write.mode("overwrite").parquet(out_dir)
+            written = self.run_triples(run_id)
+            # per-file lineage ledger (the per-partition commit record);
+            # partitioned by run_id + dynamic overwrite → retry-idempotent
+            lineage = (
+                written.groupBy("repo", "path", "commit")
+                .agg(
+                    F.count(F.when(ok, 1)).alias("n_triples"),
+                    F.max((~ok).cast("int")).alias("had_error"),
+                )
+                .withColumn("config_hash", F.lit(fp))
+                .withColumn("run_id", F.lit(run_id))
             )
-            .withColumn("config_hash", F.lit(fp))
-            .withColumn("run_id", F.lit(run_id))
-        )
-        (
-            lineage.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .parquet(self.lineage_path)
-        )
-        (
-            todo.select(*key)
-            .withColumn("run_id", F.lit(run_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id")
-            .parquet(self.processed_path)
-        )
-        n_triples = written.filter(F.col("parse_error").isNull()).count()
-        n_errors = written.filter(F.col("parse_error").isNotNull()).count()
-        self.spark.createDataFrame(
-            [(run_id, n_new, n_total - n_new, n_triples, n_errors, fp)],
-            "run_id string, files_processed long, files_skipped long, triples long, parse_errors long, config_hash string",
-        ).write.mode("append").parquet(self.metrics_path)
+            self._record_run(run_id)
+            for df, path in ((lineage, self.lineage_path),
+                             (todo.select(*key).withColumn("run_id", F.lit(run_id)), self.processed_path)):
+                (
+                    df.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("run_id")
+                    .parquet(path)
+                )
+        finally:
+            src.unpersist()
+        counts = obs.get
+        self._write_metrics(run_id, n_new, n_total - n_new, counts["triples"], counts["errors"], fp)
         return IncrementalResult(run_id, n_new, n_total - n_new, written)

@@ -64,7 +64,6 @@ class GraphConfig:
     predicate_exclusion_list: Optional[List[str]] = None
     language_filter: Optional[str] = None
     verify_uri_syntax: bool = True
-    abort_on_error: bool = True
     strict_data_type_check: bool = False
     stream_triple_limit: int = 1000  # RDFParserConfig.java:18
     # spark-side knobs (no reference analogue; commitSize is replaced by

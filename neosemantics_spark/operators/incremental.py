@@ -6,54 +6,56 @@ upserts every incoming batch into the live store: find-or-create node,
 merge property arrays, last-write-wins scalars (its incremental fixtures
 `src/test/resources/incremental/step{1,2,3}.ttl` pin exactly this:
 ARRAY-mode values accumulate across imports, OVERWRITE-mode re-imports
-replace). `ImportCheckpoint` already parses only each run's delta, but
-the materialize step still re-aggregated EVERY checkpointed run's
-triples — O(total corpus) per batch, which at 100 TB steady state is the
-wrong loop.
+replace). `ImportCheckpoint` already parses only each run's delta; this
+module re-materializes only the part of the graph that delta touches.
 
-This module keeps the materialize aggregation's PARTIAL STATE as
-persistent tables and folds each new batch in with the aggregations'
-own merge functions — materialized-view maintenance, Spark-first:
+The store persists two things:
 
-- every materialize aggregate is algebraic (max_by over a content-
-  derived canonical order, min/max, sorted value lists, label sets,
-  edge-row distinct), so `merge(state, partial(batch)) ==
-  aggregate(union)` EXACTLY — incremental output is bit-identical to a
-  from-scratch import of the union, a property the reference's
-  arrival-order store does not have (re-import order changes its
-  OVERWRITE results; canonical order makes ours deterministic).
-  `order='arrival'` reproduces the reference's temporal last-wins
-  instead (the batch sequence number is prefixed to the order key).
-- the state tables are HASH-BUCKETED by their entity key (subject /
-  src / uri — `pmod(xxhash64(key), n_buckets)`), one parquet
-  directory per bucket, and the manifest records a per-bucket version
-  pointer. A batch merge reads and rewrites ONLY the buckets its delta
-  touches: per-batch shuffle and write are O(|delta| + touched_buckets
-  × bucket_size), NOT O(|state|) — the parquet stand-in for a
-  co-partitioned Iceberg MERGE INTO. Sizing rule at scale: pick
-  n_buckets ≈ |state| / target_bucket_rows so bucket size stays
-  bounded as the graph grows; a delta touching k entities then costs
-  ≤ k bounded-size bucket rewrites regardless of total state
-  (BASELINE.md round-6 has the flat-merge measurement). Untouched
-  buckets keep their old version pointer, so live data spans several
-  v=<n> directories; when more than `max_live_versions` are
-  referenced, the next merge compacts everything into one (amortized
-  LSM-style). Commit protocol is unchanged: commits/MANIFEST-<n> +
-  atomic HEAD rename — crash anywhere leaves HEAD on a complete older
-  snapshot whose buckets are all still on disk (GC keeps every version
-  referenced by the current AND previous manifest).
+- a LOG of `transform_triples` rows (the columns `materialize` reads,
+  plus one statement-order column `ord`), hash-bucketed by entity key —
+  `pmod(xxhash64(key), n_buckets)` where the key is the subject, or the
+  quoted triple's subject for an RDF-star row. The log is append-only:
+  each batch adds one segment `log/seg=<n>/bucket=<b>`.
+- the three OUTPUT tables `nodes`, `edges` and `node_props` under
+  `v=<n>/<table>/bucket=<b>`, bucketed by uri / src / uri, with a
+  per-bucket version pointer in the manifest.
 
-Scope boundary (documented, not silent): entity linking
-(`canonicalize_triples`, the owl:sameAs connected-components fusion) is
-corpus-global — a new sameAs edge can merge two nodes that were
-distinct in every earlier batch, which invalidates per-node state. The
-incremental store therefore takes ALREADY-TRANSFORMED, NON-canonicalized
-triples (the reference's loader has no sameAs fusion either); pipelines
-that need sameAs fusion run `kg_sameas_cc` over the derived tables or
-use the full-recompute path. Similarly, SHORTEN-mode prefix assignment
-must be stable across batches: pass the store a persistent namespace
-map (the reference's `_NsPrefDef` contract — prefixes are never
-re-assigned; see `extend_prefix_map`).
+A batch appends its segment, then rebuilds only the buckets it touched by
+calling `materialize` itself over those buckets' log rows and keeping the
+output rows whose key hashes into them. Equality with a batch build of
+the union therefore holds by construction. `order='canonical'` logs
+`materialize`'s own content-derived order, so merge-of-batches ==
+materialize-of-union exactly; `order='arrival'` prefixes the batch
+version, reproducing the reference's temporal last-write-wins.
+
+Object-only nodes: a node's row comes from its own subject rows AND from
+object references in other subjects' buckets (`graph = min(graph)` spans
+both). So every object-reference row whose object hashes elsewhere is
+also filed, as a copy, in the object's bucket. Copies carry no literal,
+and `materialize` is insensitive to duplicate resource rows (edges,
+labels and uris are deduplicated), so they only ever complete a node.
+
+Untouched buckets keep their pointer, so live data spans several
+versions; when more than `max_live_versions` are referenced, the next
+merge compacts the log into one segment and rebuilds every bucket
+(amortized LSM-style). Compaction keeps only the rows `materialize` can
+still select (`_prune`): re-imported statements and, in OVERWRITE mode,
+superseded literal values are dropped. A touched bucket therefore costs
+its share of the graph plus the batches logged since the last
+compaction, not the whole ingest history. Commit protocol: commits/MANIFEST-<n> + atomic
+HEAD rename — a crash anywhere leaves HEAD on a complete older snapshot
+whose files are all still on disk (GC keeps everything referenced by the
+current AND previous manifest; a retry overwrites the orphaned version).
+
+Scope boundary (documented, not silent): owl:sameAs fusion is
+corpus-global — a new sameAs edge can merge two nodes that were distinct
+in every earlier batch — so the store takes ALREADY-TRANSFORMED,
+NON-canonicalized triples (the reference's loader has no sameAs fusion
+either). `tables_canonicalized` is the periodic reconcile: it
+canonicalizes the whole log and materializes it. SHORTEN-mode prefix
+assignment must be stable across batches: pass the store a persistent
+namespace map (the reference's `_NsPrefDef` contract — prefixes are
+never re-assigned; see `extend_prefix_map`).
 """
 
 from __future__ import annotations
@@ -62,30 +64,24 @@ import json
 import os
 import re
 import shutil
+from collections import defaultdict
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..config import ARRAY, LABELS, LABELS_AND_NODES, NODES, GraphConfig
-from ..rdf.terms import OWL_SAMEAS, RDF_TYPE
-from .materialize import GraphTables, _ord
-from .transforms import split_star_rows
+from ..config import ARRAY, NODES, LABELS_AND_NODES, GraphConfig
+from ..rdf.terms import RDF_TYPE
+from .materialize import GraphTables, _ord, materialize
 
-_TABLES = ("prop_state", "label_state", "edge_state", "rel_raw_state",
-           "star_state", "uri_state")
-
-# the entity column each state table is hash-bucketed on: the leading
-# column of its group key, so co-bucketing holds for every aggregation
-# and one delta entity touches at most one bucket per table
-_BUCKET_KEY = {
-    "prop_state": "subject",
-    "label_state": "subject",
-    "edge_state": "src",
-    "rel_raw_state": "src",
-    "star_state": "src",
-    "uri_state": "uri",
-}
+# output table -> the column it is bucketed on
+_KEY = {"nodes": "uri", "edges": "src", "node_props": "uri"}
+# what `materialize`, `canonicalize_triples` and `sameas_edges` read
+_LOG_COLS = (
+    "subject", "predicate", "object", "is_literal", "datatype", "lang",
+    "graph", "sspo", "pred_t", "rel_t", "label_t", "value", "value_type",
+)
 
 
 def _cfg_fingerprint(
@@ -99,10 +95,10 @@ def _cfg_fingerprint(
         "with_graph_identity": with_graph_identity,
         "order": order,
         "n_buckets": n_buckets,
-        # bumped when the persisted state-table schemas change (r6:
-        # bucketed layout + uri_state.has_real) — old roots refuse loudly
-        # instead of failing on a missing column mid-merge
-        "state_schema": 2,
+        # bumped when the persisted layout changes (3: triple log +
+        # per-bucket output tables) — old roots refuse loudly instead of
+        # failing on a missing table mid-merge
+        "state_schema": 3,
     }
     return hashlib.sha256(
         json.dumps(payload, sort_keys=True, default=str).encode()
@@ -110,11 +106,10 @@ def _cfg_fingerprint(
 
 
 class IncrementalGraphStore:
-    """Persistent partial-aggregate state for nodes/edges/node_props,
-    upserted one batch at a time; `tables()` derives the same
-    GraphTables `materialize` would produce from the union of every
-    merged batch (pytest + the `kg_incremental*` driver oracles pin the
-    equality)."""
+    """A bucketed triple log plus the nodes/edges/node_props tables
+    `materialize` derives from it, upserted one batch at a time;
+    `tables()` equals `materialize` over the union of every merged batch
+    (pytest + the `kg_incremental*` driver oracles pin the equality)."""
 
     def __init__(
         self,
@@ -148,9 +143,6 @@ class IncrementalGraphStore:
         self.order = order
         self.n_buckets = n_buckets
         self.max_live_versions = max(1, max_live_versions)
-        self.need_arrays = (
-            self.cfg.handle_multival == ARRAY or self.cfg.strict_data_type_check
-        )
         self.p_commits = os.path.join(root, "commits")
         self.p_meta = os.path.join(root, "meta.json")
         fp = _cfg_fingerprint(self.cfg, with_graph_identity, order, n_buckets)
@@ -161,10 +153,9 @@ class IncrementalGraphStore:
                 raise ValueError(
                     "IncrementalGraphStore config mismatch: this state was "
                     f"built with fingerprint {meta['fingerprint']}, caller "
-                    f"passed {fp}. Aggregation state is config-specific "
-                    "(OVERWRITE state has no value lists an ARRAY run "
-                    "needs, and the bucket layout is n_buckets-specific) — "
-                    "use a fresh root for a new config."
+                    f"passed {fp}. The materialized tables are config-specific "
+                    "and the bucket layout is n_buckets-specific — use a "
+                    "fresh root for a new config."
                 )
         self.fingerprint = fp
 
@@ -188,77 +179,66 @@ class IncrementalGraphStore:
     def _vdir(self, version: int, table: str) -> str:
         return os.path.join(self.root, f"v={version:06d}", table)
 
-    def _bucket_col(self, table: str):
-        return F.pmod(
-            F.xxhash64(F.col(_BUCKET_KEY[table])), F.lit(self.n_buckets)
-        ).cast("int")
+    def _seg(self, version: int) -> str:
+        return os.path.join(self.root, "log", f"seg={version:06d}")
 
-    def _read_buckets(
-        self, table: str, bucket_map: dict, buckets: Optional[set]
-    ) -> Optional[DataFrame]:
-        """Assemble (a subset of) one state table from its per-bucket
-        version pointers: buckets sharing a version are read in one call
-        against that version's partitioned directory (explicit bucket=
-        sub-paths — directory-level pruning, no filter needed), then
-        unioned. `buckets=None` reads the whole table. Returns None when
-        nothing is selected; the `bucket` partition column is dropped."""
-        from collections import defaultdict
+    def _bucket(self, col):
+        return F.pmod(F.xxhash64(col), F.lit(self.n_buckets)).cast("int")
 
-        by_ver: dict = defaultdict(list)
-        for b_str, v in bucket_map.items():
-            b = int(b_str)
-            if buckets is None or b in buckets:
-                by_ver[v].append(b)
-        parts = []
-        for v, bs in sorted(by_ver.items()):
-            base = self._vdir(v, table)
-            paths = [os.path.join(base, f"bucket={b}") for b in sorted(bs)]
-            parts.append(
-                self.spark.read.option("basePath", base).parquet(*paths)
-            )
-        if not parts:
+    def _read(self, schema_json: str, base: str, dirs: dict) -> Optional[DataFrame]:
+        """One scan, with the recorded schema (no inference job), over the
+        wanted buckets of several `<key>=<n>` directories under `base`,
+        {dir: buckets}. A directory whose every bucket is wanted is passed
+        whole, which keeps the path list short enough for driver-side
+        listing. None when nothing is selected."""
+        paths = []
+        for d, want in sorted(dirs.items()):
+            have = {int(x.split("=", 1)[1]) for x in os.listdir(d) if x.startswith("bucket=")}
+            if have <= want:
+                paths.append(d)
+            else:
+                paths += [os.path.join(d, f"bucket={b}") for b in sorted(want & have)]
+        if not paths:
             return None
+        schema = StructType.fromJson(json.loads(schema_json))
+        return self.spark.read.schema(schema).option("basePath", base).parquet(*paths)
+
+    def _read_log(self, m: dict, buckets: Optional[set]) -> Optional[DataFrame]:
+        """Log rows of the wanted buckets (all when None), with the bucket
+        each is filed in."""
+        dirs: dict = defaultdict(set)
+        for b, vs in m.get("log", {}).items():
+            if buckets is None or int(b) in buckets:
+                for v in vs:
+                    dirs[self._seg(v)].add(int(b))
+        df = self._read(m["schemas"]["log"], os.path.join(self.root, "log"), dirs)
+        return None if df is None else df.drop("seg")
+
+    def _read_table(self, m: dict, table: str) -> DataFrame:
+        """Each version directory is its own scan (the `<table>` level
+        between `v=<n>` and `bucket=<b>` ends partition discovery)."""
+        dirs: dict = defaultdict(set)
+        for b, v in m["buckets"].get(table, {}).items():
+            dirs[self._vdir(v, table)].add(int(b))
+        schema = m["schemas"][table]
+        parts = [self._read(schema, d, {d: bs}) for d, bs in sorted(dirs.items())]
+        if not parts:
+            return self.spark.createDataFrame([], StructType.fromJson(json.loads(schema)))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
         return df.drop("bucket")
 
-    def _empty_table(self, table: str, manifest: dict) -> DataFrame:
-        from pyspark.sql.types import StructType
-
-        schema_json = manifest.get("schemas", {}).get(table)
-        if schema_json is None:
-            raise ValueError(
-                f"state table {table} has no rows and no recorded schema"
-            )
-        return self.spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema_json))
-        )
-
-    def _state(self, table: str) -> Optional[DataFrame]:
-        m = self._read_manifest()
-        if m["version"] == 0:
-            return None
-        df = self._read_buckets(table, m.get("buckets", {}).get(table, {}), None)
-        return self._empty_table(table, m) if df is None else df
-
-    def _publish(
-        self,
-        new_version: int,
-        batch_id: str,
-        n_rows: dict,
-        buckets: dict,
-        counts: dict,
-        schemas: dict,
-    ) -> None:
+    def _publish(self, new_version: int, batch_id: str, totals: dict, m: dict,
+                 log: dict, buckets: dict, counts: dict, schemas: dict) -> None:
         os.makedirs(self.p_commits, exist_ok=True)
         if not os.path.exists(self.p_meta):
             with open(self.p_meta, "w") as fh:
                 json.dump({"fingerprint": self.fingerprint}, fh)
-        m = self._read_manifest()
         manifest = {
             "version": new_version,
-            "batches": m["batches"] + [{"batch_id": batch_id, **n_rows}],
+            "batches": m["batches"] + [{"batch_id": batch_id, **totals}],
+            "log": log,
             "buckets": buckets,
             "counts": counts,
             "schemas": schemas,
@@ -270,489 +250,186 @@ class IncrementalGraphStore:
         with open(tmp, "w") as fh:
             fh.write(name)
         os.rename(tmp, os.path.join(self.p_commits, "HEAD"))
-        # GC: keep every version directory referenced by the NEW manifest
-        # (live buckets may point at several versions) plus everything the
-        # PREVIOUS manifest referenced (manual rollback = point HEAD back
-        # one manifest); anything else is unreachable
-        keep = {new_version, new_version - 1}
+        # GC: keep every version the NEW manifest references (live buckets
+        # may point at several) plus everything the PREVIOUS one referenced
+        # (manual rollback = point HEAD back one manifest)
+        keep_v, keep_seg = {new_version, new_version - 1}, {new_version}
         for mf in (manifest, m):
             for tmap in mf.get("buckets", {}).values():
-                keep.update(tmap.values())
-        keep_names = {f"v={v:06d}" for v in keep}
-        for name_ in os.listdir(self.root):
-            if name_.startswith("v=") and name_ not in keep_names:
-                shutil.rmtree(os.path.join(self.root, name_), ignore_errors=True)
+                keep_v.update(tmap.values())
+            for vs in mf.get("log", {}).values():
+                keep_seg.update(vs)
+        for base, prefix, keep in ((self.root, "v=", keep_v),
+                                   (os.path.join(self.root, "log"), "seg=", keep_seg)):
+            names = {f"{prefix}{v:06d}" for v in keep}
+            for name_ in os.listdir(base) if os.path.isdir(base) else ():
+                if name_.startswith(prefix) and name_ not in names:
+                    shutil.rmtree(os.path.join(base, name_), ignore_errors=True)
 
-    # ------------------------------------------------------------ partials
-    def _ord_col(self, version: int):
-        """Canonical (content-derived) or arrival (batch-seq-prefixed)
-        statement order. Canonical makes merge-of-batches == aggregate-
-        of-union; arrival reproduces the reference's temporal
-        last-write-wins (RDFToLPGStatementProcessor.java:346-349)."""
+    # ----------------------------------------------------------------- API
+    def _log_rows(self, triples_t: DataFrame, version: int) -> DataFrame:
+        """The batch as log rows: the columns `materialize` reads, the
+        statement order (canonical, or batch-version-prefixed for arrival
+        order — RDFToLPGStatementProcessor.java:346-349), and the bucket
+        each row is filed in. An object reference is filed a second time
+        in its object's bucket when that differs."""
         o = _ord()
         if self.order == "arrival":
             o = F.concat(F.lpad(F.lit(version), 8, "0"), F.lit("|"), o)
-        return o
-
-    def _partials(self, triples_t: DataFrame, version: int) -> dict:
-        cfg = self.cfg
-        g = (
-            F.coalesce(F.col("graph"), F.lit(""))
-            if self.with_graph_identity
-            else F.lit("")
-        )
-        t = triples_t.withColumn("gkey", g)
-        regular, star = split_star_rows(t)
         is_type = (F.col("predicate") == RDF_TYPE) & ~F.col("is_literal")
-        ordc = self._ord_col(version)
+        node_mode = self.cfg.handle_rdf_types in (NODES, LABELS_AND_NODES)
+        is_ref = F.col("sspo").isNull() & ~F.col("is_literal")
+        if not node_mode:
+            is_ref = is_ref & ~is_type
+        home = self._bucket(F.coalesce(F.col("sspo")[0], F.col("subject")))
+        ref = F.when(is_ref, self._bucket(F.col("object")))
+        return triples_t.select(
+            *_LOG_COLS,
+            o.alias("ord"),
+            F.explode(F.array_compact(F.array_distinct(F.array(home, ref)))).alias("bucket"),
+        )
 
-        lit_rows = regular.filter(F.col("is_literal"))
-        aggs = [
-            F.max(ordc).alias("last_ord"),
-            F.max_by(
-                F.struct(
-                    F.col("value").alias("v"),
-                    F.col("value_type").alias("t"),
-                    F.col("datatype").alias("dt"),
-                    F.col("lang").alias("lg"),
-                ),
-                ordc,
-            ).alias("last"),
-            F.min("value_type").alias("vt_min"),
-            F.max("value_type").alias("vt_max"),
-            F.min("graph").alias("g_min"),
-            F.min("predicate").alias("pred_raw_min"),
+    def _prune(self, rows: DataFrame) -> DataFrame:
+        """The log rows `materialize` can still select. Per distinct row
+        content: the last statement, plus a literal's first when value
+        arrays are built (their order is by first occurrence). In
+        OVERWRITE mode a literal's value is superseded too: one latest
+        row per (subject, graph, predicate, value_type) keeps last-wins,
+        min(graph) and the type set behind n_types."""
+        arrays = self.cfg.handle_multival == ARRAY or self.cfg.strict_data_type_check
+        vary = () if arrays else ("object", "datatype", "lang", "value")
+        cols = [*_LOG_COLS, "bucket"]
+        keys = [
+            (F.when(~F.col("is_literal"), F.col(c)) if c in vary else F.col(c)).alias(f"_k{i}")
+            for i, c in enumerate(cols)
         ]
-        if self.need_arrays:
-            aggs.append(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            ordc.alias("o"),
-                            F.col("value").alias("v"),
-                            F.col("value_type").alias("t"),
-                        )
-                    )
-                ).alias("sorted")
-            )
-        prop = lit_rows.groupBy("subject", "gkey", "pred_t").agg(*aggs)
-
-        type_rows = regular.filter(is_type)
-        label = type_rows.groupBy("subject", "gkey").agg(
-            F.array_sort(F.collect_set("label_t")).alias("labels")
+        row = F.struct("ord", *cols)  # ord first: max/min pick by statement order
+        picks = [F.max(row)]
+        if arrays:
+            picks.append(F.min(F.when(F.col("is_literal"), row)))
+        return (
+            rows.groupBy(*keys)
+            .agg(F.array_compact(F.array_distinct(F.array(*picks))).alias("_r"))
+            .select(F.explode("_r").alias("_r"))
+            .select("_r.*")
+            .select(*_LOG_COLS, "ord", "bucket")
         )
 
-        obj_rows = regular.filter(~F.col("is_literal") & ~is_type)
-        node_mode = cfg.handle_rdf_types in (NODES, LABELS_AND_NODES)
-        if node_mode:
-            obj_rows = obj_rows.unionByName(type_rows.select(*obj_rows.columns))
-        edge = obj_rows.select(
-            F.col("subject").alias("src"),
-            F.col("rel_t").alias("rel"),
-            F.col("object").alias("dst"),
-            "graph",
-            "gkey",
-        ).dropDuplicates(["src", "rel", "dst", "gkey"])
-        rel_raw = obj_rows.select(
-            F.col("subject").alias("src"),
-            F.col("predicate").alias("_raw_rel"),
-            F.col("rel_t").alias("rel"),
-            F.col("object").alias("dst"),
-        ).dropDuplicates(["src", "_raw_rel", "dst"])
-        star_p = (
-            star.select(
-                F.col("sspo")[0].alias("src"),
-                F.col("sspo")[1].alias("_raw_rel"),
-                F.col("sspo")[2].alias("dst"),
-                F.col("pred_t").alias("prop"),
-                F.col("value"),
-                ordc.alias("_o"),
-            )
-            .groupBy("src", "_raw_rel", "dst", "prop")
-            .agg(F.max("_o").alias("last_o"), F.max_by("value", "_o").alias("value"))
-        )
-        # has_real marks provenance from a non-owl:sameAs statement: the
-        # canonical refresh (`tables_canonicalized`) must drop uris whose
-        # ONLY provenance is sameAs rows, because the full-recompute
-        # pipeline canonicalizes and then DROPS those statements
-        # (cc.canonicalize_triples drop_sameas) before materializing
-        real = F.col("predicate") != OWL_SAMEAS
-        uri = (
-            regular.select(
-                F.col("subject").alias("uri"), "gkey", "graph", real.alias("has_real")
-            )
-            .unionByName(
-                obj_rows.select(
-                    F.col("object").alias("uri"), "gkey", "graph", real.alias("has_real")
-                )
-            )
-            .groupBy("uri", "gkey")
-            .agg(F.min("graph").alias("g_min"), F.max("has_real").alias("has_real"))
-        )
-        return {
-            "prop_state": prop,
-            "label_state": label,
-            "edge_state": edge,
-            "rel_raw_state": rel_raw,
-            "star_state": star_p,
-            "uri_state": uri,
-        }
-
-    @staticmethod
-    def _merge(table: str, old: DataFrame, new: DataFrame, need_arrays: bool) -> DataFrame:
-        return IncrementalGraphStore._reaggregate(
-            table, old.unionByName(new), need_arrays
-        )
-
-    @staticmethod
-    def _reaggregate(table: str, u: DataFrame, need_arrays: bool) -> DataFrame:
-        """Re-run one state table's aggregation over an arbitrary row set
-        — the merge function applied to a union (merge_batch) or to a
-        remapped state (tables_canonicalized). Every aggregate is
-        algebraic with a single-row fixpoint, so this is also an
-        identity on untouched groups."""
-        if table == "prop_state":
-            aggs = [
-                F.max("last_ord").alias("last_ord"),
-                F.max_by("last", "last_ord").alias("last"),
-                F.min("vt_min").alias("vt_min"),
-                F.max("vt_max").alias("vt_max"),
-                F.min("g_min").alias("g_min"),
-                F.min("pred_raw_min").alias("pred_raw_min"),
-            ]
-            if need_arrays:
-                # merge of per-batch sorted runs == sort of the union:
-                # the order key is globally unique, so flatten+sort is
-                # exactly the from-scratch collect_list+sort
-                aggs.append(
-                    F.array_sort(F.flatten(F.collect_list("sorted"))).alias("sorted")
-                )
-            return u.groupBy("subject", "gkey", "pred_t").agg(*aggs)
-        if table == "label_state":
-            return u.groupBy("subject", "gkey").agg(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("labels")))
-                ).alias("labels")
-            )
-        if table == "edge_state":
-            return u.dropDuplicates(["src", "rel", "dst", "gkey"])
-        if table == "rel_raw_state":
-            return u.dropDuplicates(["src", "_raw_rel", "dst"])
-        if table == "star_state":
-            return u.groupBy("src", "_raw_rel", "dst", "prop").agg(
-                F.max("last_o").alias("last_o"),
-                F.max_by("value", "last_o").alias("value"),
-            )
-        if table == "uri_state":
-            return u.groupBy("uri", "gkey").agg(
-                F.min("g_min").alias("g_min"), F.max("has_real").alias("has_real")
-            )
-        raise ValueError(table)
-
-    # ----------------------------------------------------------------- API
     def merge_batch(self, triples_t: DataFrame, batch_id: Optional[str] = None) -> dict:
-        """Fold one batch of `transform_triples` output into the state.
-        Returns per-table total row counts. Crash-safe: all rewritten
-        buckets land in a NEW v=<n+1> directory before the single HEAD
-        rename; a retry of a crashed merge re-reads the still-HEAD old
-        pointers and overwrites the orphaned directory.
+        """Fold one batch of `transform_triples` output into the store and
+        return the running row totals of nodes, edges and node_props (also
+        under their earlier names uri_state, edge_state and prop_state).
 
-        Delta-proportional: per table, only the buckets the delta's
-        entity keys hash into are read, re-aggregated with the batch
-        partial, and rewritten — untouched buckets keep their existing
-        version pointer and are not read, shuffled, or copied. The
-        re-aggregation is an identity on groups the delta didn't touch
-        (every merge function is algebraic with a single-row fixpoint),
-        so touched-bucket rewrite == per-group upsert. When the live
-        pointer set spans more than `max_live_versions` version
-        directories, this merge compacts: every bucket is rewritten into
-        v=<n+1> and old versions become unreachable."""
-        manifest = self._read_manifest()
-        cur = manifest["version"]
-        new_v = cur + 1
-        partials = self._partials(triples_t, new_v)
-        bucket_map = {
-            t: dict(m) for t, m in manifest.get("buckets", {}).items()
-        }
-        count_map = {t: dict(m) for t, m in manifest.get("counts", {}).items()}
-        schemas = dict(manifest.get("schemas", {}))
-        live_versions = {
-            v for tmap in bucket_map.values() for v in tmap.values()
-        }
-        compacting = len(live_versions) >= self.max_live_versions
-        counts = {}
-        for table, part in partials.items():
-            schemas[table] = part.schema.json()
-            part = part.withColumn("bucket", self._bucket_col(table))
-            # delta-scale: materialize once — the partial feeds both the
-            # touched-bucket probe and the merge input
-            part = part.localCheckpoint(eager=True)
-            tmap = bucket_map.setdefault(table, {})
-            cmap = count_map.setdefault(table, {})
-            delta_buckets = {
-                r["bucket"] for r in part.select("bucket").distinct().collect()
-            }
+        Work: one log-segment write, then one write per output table over
+        the touched buckets. Touched buckets are the directories the
+        segment write created; per-bucket row counts come from an
+        Observation on each write. Crash-safe:
+        everything lands in a new segment and version directory before
+        the single HEAD rename, and a retry overwrites both."""
+        m = self._read_manifest()
+        new_v = m["version"] + 1
+        log = {b: list(vs) for b, vs in m.get("log", {}).items()}
+        buckets = {t: dict(m.get("buckets", {}).get(t, {})) for t in _KEY}
+        counts = {t: dict(m.get("counts", {}).get(t, {})) for t in _KEY}
+        schemas = dict(m.get("schemas", {}))
+        live = {v for vs in log.values() for v in vs}
+        live.update(v for tmap in buckets.values() for v in tmap.values())
+        compacting = len(live) >= self.max_live_versions
+
+        rows = self._log_rows(triples_t, new_v)
+        schemas["log"] = rows.drop("bucket").schema.json()
+        if compacting and log:
+            rows = self._prune(rows.unionByName(self._read_log(m, None)))
+            log = {}
+        seg = self._seg(new_v)
+        rows.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(seg)
+        written = {int(d.split("=", 1)[1]) for d in os.listdir(seg) if d.startswith("bucket=")}
+        for b in written:
+            log.setdefault(str(b), []).append(new_v)
+        touched = {int(b) for b in log} if compacting else written
+
+        src = self._read_log({"log": log, "schemas": schemas}, touched)
+        # the touched buckets' rows feed every aggregation of all three
+        # writes: read them once
+        src = rows.limit(0) if src is None else src.cache()
+        tables = materialize(src, self.cfg, self.with_graph_identity, order=F.col("ord"))
+        schemas.update({t: getattr(tables, t).schema.json() for t in _KEY})
+
+        def write(table: str) -> dict:
+            df = getattr(tables, table).withColumn("bucket", self._bucket(F.col(_KEY[table])))
+            df = df.filter(F.col("bucket").isin(sorted(touched)))
+            obs = Observation()
+            df = df.observe(
+                obs, *[F.count(F.when(F.col("bucket") == b, 1)).alias(str(b)) for b in sorted(touched)]
+            )
+            df.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
+                self._vdir(new_v, table)
+            )
+            return obs.get
+
+        try:
+            observed = [write(t) for t in _KEY] if touched else []
+        finally:
+            src.unpersist()
+        for table, per_bucket in zip(_KEY, observed):
             if compacting:
-                touched = delta_buckets | {int(b) for b in tmap}
-            else:
-                touched = delta_buckets
-            if not touched:
-                counts[table] = sum(cmap.values())
-                continue
-            old = self._read_buckets(table, tmap, touched)
-            merged = (
-                part.drop("bucket")
-                if old is None
-                else self._merge(table, old, part.drop("bucket"), self.need_arrays)
-            )
-            out = self._vdir(new_v, table)
-            (
-                merged.withColumn("bucket", self._bucket_col(table))
-                .repartition(F.col("bucket"))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(out)
-            )
-            written = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out)
-                if d.startswith("bucket=")
-            )
-            if written:
-                per_bucket = {
-                    r["bucket"]: r["n"]
-                    for r in self.spark.read.option("basePath", out)
-                    .parquet(*[os.path.join(out, f"bucket={b}") for b in written])
-                    .groupBy("bucket")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-            else:
-                per_bucket = {}
-            if compacting:
-                tmap.clear()
-                cmap.clear()
-            for b in written:
-                tmap[str(b)] = new_v
-                cmap[str(b)] = per_bucket.get(b, 0)
-            counts[table] = sum(cmap.values())
-        self._publish(
-            new_v,
-            batch_id or f"batch-{new_v:06d}",
-            counts,
-            bucket_map,
-            count_map,
-            schemas,
-        )
-        return counts
+                buckets[table], counts[table] = {}, {}
+            for b, n in per_bucket.items():
+                if n:
+                    buckets[table][b], counts[table][b] = new_v, n
+                else:
+                    buckets[table].pop(b, None)
+                    counts[table].pop(b, None)
+        totals = {t: sum(c.values()) for t, c in counts.items()}
+        self._publish(new_v, batch_id or f"batch-{new_v:06d}", totals, m,
+                      log, buckets, counts, schemas)
+        return {**totals, "uri_state": totals["nodes"], "edge_state": totals["edges"],
+                "prop_state": totals["node_props"]}
+
+    def _manifest_or_raise(self) -> dict:
+        m = self._read_manifest()
+        if m["version"] == 0:
+            raise ValueError("IncrementalGraphStore is empty — merge a batch first")
+        return m
 
     def tables(self) -> GraphTables:
-        """GraphTables derived from the current state — column-for-column
-        the `materialize` output over the union of merged batches."""
-        if self.version() == 0:
-            raise ValueError("IncrementalGraphStore is empty — merge a batch first")
-        return self._derive_tables(
-            self._state("prop_state"),
-            self._state("label_state"),
-            self._state("edge_state"),
-            self._state("rel_raw_state"),
-            self._state("star_state"),
-            self._state("uri_state"),
-        )
+        """The stored tables — column-for-column the `materialize` output
+        over the union of merged batches."""
+        m = self._manifest_or_raise()
+        return GraphTables(**{t: self._read_table(m, t) for t in _KEY})
+
+    def _log_home(self, m: dict) -> DataFrame:
+        """Every logged row once: the copies filed in an object's bucket
+        are dropped."""
+        log = self._read_log(m, None)
+        key = F.coalesce(F.col("sspo")[0], F.col("subject"))
+        return log.filter(F.col("bucket") == self._bucket(key)).drop("bucket")
 
     def canonical_remap(self) -> DataFrame:
         """(uri, component) over the owl:sameAs cliques recorded in the
-        store — the periodic entity-linking reconcile (VERDICT r5 item
-        6). sameAs fusion is corpus-global (a new edge can merge nodes
-        distinct in every earlier batch — the documented reason the
-        per-batch merge excludes it), so the refresh runs the engine's
-        skew-hardened CC over the STORE's derived sameAs edge list
-        (rel_raw_state keeps the raw predicate exactly so this filter is
-        precise), never over corpus history. Reference semantics:
+        store — the periodic entity-linking reconcile, run over the logged
+        triples with the engine's CC. Reference semantics:
         CommonProcedures.java:41-43 uri uniqueness."""
-        from .cc import connected_components
+        from .cc import canonical_map
 
-        if self.version() == 0:
-            raise ValueError("IncrementalGraphStore is empty — merge a batch first")
-        edges = (
-            self._state("rel_raw_state")
-            .filter(F.col("_raw_rel") == OWL_SAMEAS)
-            .select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-            .distinct()
-        )
-        return connected_components(edges)
+        return canonical_map(self._log_home(self._manifest_or_raise()))
 
     def tables_canonicalized(
         self, comp: Optional[DataFrame] = None, broadcast_limit: int = 100_000
     ) -> GraphTables:
-        """GraphTables with owl:sameAs entity linking applied as a
-        VIEW-level remap + algebraic re-aggregation over the state — NOT
-        a state rewrite: the store stays canonical-free (append-only
-        merges keep working), and this derivation equals
-        `materialize(canonicalize_triples(transform(union)))`
-        column-for-column (pinned by test_incremental +
-        the `kg_sameas_refresh` driver oracle). Why the equality holds:
-        every state aggregate is algebraic, so re-aggregating remapped
-        partial-aggregate rows with the same merge functions IS
-        aggregating the remapped row set.
+        """GraphTables with owl:sameAs entity linking applied: the whole
+        log canonicalized and materialized — a view, not a state rewrite
+        (the store stays canonical-free, so later merges keep working).
+        Equals `materialize(canonicalize_triples(transform(union)))`
+        column-for-column by construction (pinned by test_incremental and
+        the `kg_sameas_refresh` driver oracle)."""
+        from .cc import canonicalize_triples
 
-        Parity details mirrored from `cc.canonicalize_triples`:
-        - sameAs statements themselves are dropped (edge/rel_raw rows
-          identified via rel_raw_state's raw predicate; uris whose only
-          provenance was a sameAs row are dropped via the has_real
-          flag). Caveat (documented, matching the full pipeline's own
-          ambiguity): a DIFFERENT raw predicate transforming to the same
-          rel name between the same endpoints would be dropped with it.
-        - RDF-star rows are NOT remapped (canonicalize_triples leaves
-          sspo untouched), so star props on remapped edges drop out of
-          the join exactly as they do in the full pipeline.
-        """
+        log = self._log_home(self._manifest_or_raise())
         if comp is None:
             comp = self.canonical_remap()
-        comp = comp.localCheckpoint(eager=True)
-        small = comp.limit(broadcast_limit + 1).count() <= broadcast_limit
-        cmap = F.broadcast(comp) if small else comp
-
-        def remap(df: DataFrame, cols: list) -> DataFrame:
-            for c in cols:
-                df = (
-                    df.join(
-                        cmap.select(
-                            F.col("uri").alias(c), F.col("component").alias(f"_c_{c}")
-                        ),
-                        c,
-                        "left",
-                    )
-                    .withColumn(c, F.coalesce(f"_c_{c}", c))
-                    .drop(f"_c_{c}")
-                )
-            return df
-
-        na = self.need_arrays
-        rel_raw0 = self._state("rel_raw_state")
-        sameas_keys = rel_raw0.filter(F.col("_raw_rel") == OWL_SAMEAS).select(
-            "src", "rel", "dst"
-        )
-        prop = self._reaggregate(
-            "prop_state", remap(self._state("prop_state"), ["subject"]), na
-        )
-        label = self._reaggregate(
-            "label_state", remap(self._state("label_state"), ["subject"]), na
-        )
-        edge = self._reaggregate(
-            "edge_state",
-            remap(
-                self._state("edge_state").join(
-                    sameas_keys, ["src", "rel", "dst"], "left_anti"
-                ),
-                ["src", "dst"],
-            ),
-            na,
-        )
-        rel_raw = self._reaggregate(
-            "rel_raw_state",
-            remap(rel_raw0.filter(F.col("_raw_rel") != OWL_SAMEAS), ["src", "dst"]),
-            na,
-        )
-        uri = self._reaggregate(
-            "uri_state", remap(self._state("uri_state"), ["uri"]), na
-        ).filter(F.col("has_real"))
-        return self._derive_tables(
-            prop, label, edge, rel_raw, self._state("star_state"), uri
-        )
-
-    def _derive_tables(
-        self,
-        prop: DataFrame,
-        label: DataFrame,
-        edge: DataFrame,
-        rel_raw: DataFrame,
-        star: DataFrame,
-        uri: DataFrame,
-    ) -> GraphTables:
-        cfg = self.cfg
-        mixed = F.col("vt_min") != F.col("vt_max")
-        per_prop = prop.withColumn("n_types", F.when(mixed, 2).otherwise(1))
-        if self.need_arrays:
-            kept = F.col("sorted")
-            if cfg.strict_data_type_check:
-                first_t = F.element_at(F.col("sorted"), 1)["t"]
-                kept = F.filter(kept, lambda x: x["t"] == first_t)
-            all_values = F.array_distinct(F.transform(kept, lambda x: x["v"]))
-        else:
-            all_values = F.array(F.col("last")["v"])
-        if cfg.handle_multival == ARRAY:
-            if cfg.multival_prop_list:
-                values = F.when(
-                    F.col("pred_raw_min").isin(cfg.multival_prop_list), all_values
-                ).otherwise(F.array(F.col("last")["v"]))
-            else:
-                values = all_values
-        else:
-            values = F.array(F.col("last")["v"])
-        node_props = per_prop.select(
-            F.col("subject").alias("uri"),
-            F.col("gkey"),
-            F.col("g_min").alias("graph"),
-            F.col("pred_t").alias("prop"),
-            F.col("pred_raw_min").alias("prop_raw"),
-            values.alias("values"),
-            F.col("last")["t"].alias("value_type"),
-            F.col("last")["dt"].alias("datatype"),
-            F.col("last")["lg"].alias("lang"),
-            F.col("n_types"),
-        )
-
-        label_mode = cfg.handle_rdf_types in (LABELS, LABELS_AND_NODES)
-        props_map = node_props.groupBy("uri", "gkey").agg(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("prop").alias("key"),
-                            F.when(F.size("values") == 1, F.col("values")[0])
-                            .otherwise(F.to_json("values"))
-                            .alias("value"),
-                        )
-                    )
-                )
-            ).alias("props")
-        )
-        all_uris = uri.select("uri", "gkey", F.col("g_min").alias("graph"))
-        nodes = all_uris.join(props_map, ["uri", "gkey"], "left")
-        if label_mode:
-            nodes = nodes.join(
-                label.select(F.col("subject").alias("uri"), "gkey", "labels"),
-                ["uri", "gkey"],
-                "left",
-            )
-        else:
-            nodes = nodes.withColumn("labels", F.lit(None).cast("array<string>"))
-        nodes = nodes.select(
-            "uri",
-            "graph",
-            F.coalesce("labels", F.array()).alias("labels"),
-            F.coalesce("props", F.expr("cast(map() as map<string,string>)")).alias("props"),
-        )
-
-        star_props = star.groupBy("src", "_raw_rel", "dst").agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("prop", "value")))
-            ).alias("props")
-        )
-        star_mapped = star_props.join(
-            rel_raw, ["src", "_raw_rel", "dst"], "inner"
-        ).select("src", "rel", "dst", "props")
-        edges = (
-            edge.join(star_mapped, ["src", "rel", "dst"], "left")
-            .select("src", "rel", "dst", "graph", "props")
-        )
-        node_props_out = node_props.select(
-            "uri", "graph", "prop", "prop_raw", "values", "value_type",
-            "datatype", "lang", "n_types",
-        )
-        return GraphTables(nodes=nodes, edges=edges, node_props=node_props_out)
+        t = canonicalize_triples(log, comp, broadcast_limit=broadcast_limit)
+        return materialize(t, self.cfg, self.with_graph_identity, order=F.col("ord"))
 
 
 def extend_prefix_map(existing: dict, namespaces: list) -> dict:

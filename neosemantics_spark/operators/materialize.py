@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from typing import Dict, NamedTuple, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ARRAY, LABELS, LABELS_AND_NODES, NODES, GraphConfig
@@ -121,10 +121,17 @@ def materialize(
     cfg: GraphConfig,
     with_graph_identity: bool = True,
     cache_intermediate: bool = False,
+    order: Optional[Column] = None,
 ) -> GraphTables:
     """Transformed triples → GraphTables. `triples_t` is the output of
     `transform_triples`. Node identity is (uri, graph) when quads are
-    present (RDFQuadToLPGStatementProcessor.java:54-57,99-113)."""
+    present (RDFQuadToLPGStatementProcessor.java:54-57,99-113).
+
+    `order` is the statement-order key behind OVERWRITE last-wins, ARRAY
+    value order and RDF-star prop last-wins; it defaults to the canonical
+    `_ord()`. The incremental store passes its logged arrival-order key."""
+    if order is None:
+        order = _ord()
     g = F.coalesce(F.col("graph"), F.lit("")) if with_graph_identity else F.lit("")
     t = triples_t.withColumn("gkey", g)
     regular, star = split_star_rows(t)
@@ -138,7 +145,7 @@ def materialize(
     # unique `_o` returns the same last-written row — `_o` is unique per
     # statement, so the struct comparison never consults the payload
     # fields — with a quarter of the per-task aggregation state.
-    lit_rows = regular.filter(F.col("is_literal")).withColumn("_o", _ord())
+    lit_rows = regular.filter(F.col("is_literal")).withColumn("_o", order)
     need_arrays = cfg.handle_multival == ARRAY or cfg.strict_data_type_check
     aggs = [
         F.max(F.struct("_o", "value", "value_type", "datatype", "lang")).alias("_last"),
@@ -243,7 +250,7 @@ def materialize(
             F.col("sspo")[2].alias("dst"),
             F.col("pred_t").alias("prop"),
             F.col("value"),
-            _ord().alias("_o"),
+            order.alias("_o"),
         )
         .groupBy("src", "_raw_rel", "dst", "prop")
         .agg(F.max_by("value", "_o").alias("value"))

@@ -11,13 +11,16 @@ at most one shuffle; the parse stage is narrow (SURVEY.md §3.1).
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
-from typing import Dict, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import GraphConfig
+from .checkpoint import IncrementalResult
+from .config import STANDARD_PREFIXES, GraphConfig
 from .operators.cc import canonical_map, canonicalize_triples
 from .operators.materialize import GraphTables, materialize, transform_triples
 from .operators.prefixes import build_prefix_map, collect_namespaces
@@ -45,7 +48,7 @@ def import_rdf(
     cache_triples: bool = True,
 ) -> ImportResult:
     cfg = cfg or GraphConfig()
-    raw = extract_triples(src_files, abort_on_error=cfg.abort_on_error and False)
+    raw = extract_triples(src_files, abort_on_error=False)
     if cache_triples:
         # the parse is the expensive Python stage — materialize it once,
         # every downstream branch (props/labels/edges/CC) reuses it
@@ -76,3 +79,61 @@ def import_rdf(
         parse_errors=parse_errors,
         config_hash=config_fingerprint(cfg, mapping),
     )
+
+
+def ingest_batch(
+    cp,
+    store,
+    src_files: DataFrame,
+    cfg: GraphConfig,
+    ns_path: Optional[str] = None,
+    run_id: Optional[str] = None,
+) -> Tuple[IncrementalResult, Dict[str, str], List[str]]:
+    """One steady-state incremental batch: checkpoint the new files in
+    `src_files` (an `ImportCheckpoint`), then merge their triples into
+    `store` (an `IncrementalGraphStore`).
+
+    The ledger commits a run before the store merges it, so a crash in
+    between would lose that run from the graph. Every committed run the
+    store has not merged is therefore merged first, oldest first. The
+    store's batch ids are the ledger's run ids, so a store fed by this
+    function should be fed by nothing else.
+
+    SHORTEN modes extend one persistent prefix map (`ns_path`, JSON
+    {namespace: prefix}) and save it before each merge, so a prefix the
+    store has used is never re-assigned. Returns the checkpoint result,
+    the prefix map and the run ids merged by this call."""
+    from .operators.incremental import extend_prefix_map
+
+    shorten = cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT")
+    ns: Dict[str, str] = {}
+    if shorten:
+        ns = {v: k for k, v in STANDARD_PREFIXES.items()}
+        if ns_path and os.path.exists(ns_path):
+            with open(ns_path) as fh:
+                ns = json.load(fh)
+
+    def merge(rid: str, triples: DataFrame) -> None:
+        nonlocal ns
+        delta = triples.filter(F.col("parse_error").isNull()).cache()
+        try:
+            if shorten:
+                ns = extend_prefix_map(ns, collect_namespaces(delta))
+                if ns_path:
+                    tmp = ns_path + ".tmp"
+                    with open(tmp, "w") as fh:
+                        json.dump(ns, fh, sort_keys=True)
+                    os.replace(tmp, ns_path)
+            store.merge_batch(transform_triples(delta, cfg, ns), batch_id=rid)
+        finally:
+            delta.unpersist()
+
+    merged = {b["batch_id"] for b in store.batches()}
+    runs = [r for r in cp.run_ids() if r not in merged]
+    for rid in runs:
+        merge(rid, cp.run_triples(rid))
+    res = cp.run(src_files, run_id=run_id, cfg=cfg)
+    if res.triples is not None:
+        merge(res.run_id, res.triples)
+        runs.append(res.run_id)
+    return res, ns, runs

@@ -35,7 +35,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -48,6 +48,14 @@ def get_spark(
     spark = b.getOrCreate()
     _prewarm_python_workers(spark, cpus)
     return spark
+
+
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, at least 1g and at most 4g: in local
+    mode the driver JVM is the whole cluster, and a heap sized past the
+    machine gets it OOM-killed instead of spilling."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(4, total // 2**30 // 4))}g"
 
 
 def _prewarm_python_workers(spark: SparkSession, cpus: int) -> None:

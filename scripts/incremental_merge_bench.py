@@ -1,7 +1,7 @@
 """Flat-merge measurement for the bucketed IncrementalGraphStore
 (VERDICT r5 item 1 'done' criterion; BASELINE.md round-6 section).
 
-The claim under test: with hash-bucketed state tables and per-bucket
+The claim under test: with a hash-bucketed triple log, output tables and per-bucket
 version pointers, the per-batch merge cost is proportional to the DELTA
 (touched buckets x bounded bucket size), not to the TOTAL state — so a
 small batch merged into a 10x larger graph costs roughly the same,
@@ -46,7 +46,7 @@ N_BIG = 500_000
 # bucket size, and hence per-touched-entity cost, stays bounded).
 DELTA_SUBJECTS = 8
 PROPS_PER_SUBJECT = 4
-TARGET_BUCKET_ROWS = 6_250  # prop_state rows per bucket at either scale
+TARGET_BUCKET_ROWS = 6_250  # node_props rows per bucket at either scale
 REPS = 3
 
 
@@ -103,7 +103,7 @@ def synth_triples(spark, subjects, tag):
     df = rows[0]
     for r in rows[1:]:
         df = df.unionByName(r)
-    # the columns transform_triples emits that _partials + _ord consume
+    # the transform_triples columns the store logs, plus the order source
     return df.select(
         "subject",
         "predicate",

@@ -9,7 +9,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from neosemantics_spark.session import get_spark
 
-    s = get_spark("neosemantics-tests", cpus=8)
+    # get_spark reads SPARK_GRAFT_CPUS; without it, use the cores this
+    # process may run on
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    s = get_spark("neosemantics-tests", cpus=cpus)
     yield s
     s.stop()
 
@@ -17,3 +20,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(autouse=True)
+def _release_cached_data(request):
+    """Tests share one Spark session: drop what a test left cached so the
+    heap holds one test's data at a time."""
+    yield
+    if "spark" in request.fixturenames:
+        request.getfixturevalue("spark").catalog.clearCache()

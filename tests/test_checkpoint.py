@@ -169,3 +169,42 @@ def test_legacy_checkpoint_layout_rejected(spark, tmp_path):
     legacy.write.parquet(cp.processed_path)
     with _pytest.raises(ValueError, match="Incompatible checkpoint layout"):
         cp.run(_src(spark, [("f1.nt", "c1", NT1)]))
+
+
+def test_malformed_file_is_quarantined_and_committed(spark, tmp_path):
+    """A malformed file is quarantined as one parse_error row, not fatal:
+    the run commits both files and records the error."""
+    cp = ImportCheckpoint(spark, str(tmp_path / "ckpt8"))
+    src = _src(spark, [("f1.nt", "c1", NT1), ("bad.nt", "c1", "<http://e/x> <http://e/p> .\n")])
+    r = cp.run(src)
+    assert r.new_files == 2
+    met = cp.metrics().toPandas()
+    assert int(met.parse_errors.iloc[0]) == 1 and int(met.triples.iloc[0]) == 1
+    lin = cp.lineage().toPandas().set_index("path")
+    assert int(lin.loc["bad.nt", "had_error"]) == 1 and int(lin.loc["f1.nt", "n_triples"]) == 1
+    assert cp.run(src).new_files == 0
+
+
+def test_duplicate_source_row_counted_once_per_listing(spark, tmp_path):
+    """A file listed twice in one source has two ledger rows; a rerun
+    still skips exactly the two listed rows, not their product."""
+    cp = ImportCheckpoint(spark, str(tmp_path / "ckpt9"))
+    rows = [("f1.nt", "c1", NT1), ("f1.nt", "c1", NT1), ("f2.nt", "c1", NT2)]
+    assert cp.run(_src(spark, rows)).new_files == 3
+    r = cp.run(_src(spark, rows + [("f3.nt", "c1", NT3)]))
+    assert (r.new_files, r.skipped_files) == (1, 3)
+    met = cp.metrics().toPandas().set_index("run_id")
+    assert int(met.loc[r.run_id, "files_skipped"]) == 3
+
+
+def test_run_ids_follow_commit_record_not_mtime(spark, tmp_path):
+    """run_ids() lists runs in commit order even when the partition
+    mtimes say otherwise (a copied or restored root)."""
+    import os
+
+    cp = ImportCheckpoint(spark, str(tmp_path / "ckpt10"))
+    cp.run(_src(spark, [("f2.nt", "c1", NT2)]), run_id="zz")
+    cp.run(_src(spark, [("f1.nt", "c1", NT1)]), run_id="aa")
+    for rid, t in (("zz", 2_000_000_000), ("aa", 1_000_000_000)):
+        os.utime(os.path.join(cp.processed_path, f"run_id={rid}"), (t, t))
+    assert cp.run_ids() == ["zz", "aa"]

@@ -224,3 +224,22 @@ def test_pipeline_facade(spark):
     assert res.triples_parsed > 40
     assert res.tables.nodes.count() > 10
     assert res.tables.edges.count() > 5
+
+
+def test_cc_fast_path_equals_distributed_loop(spark):
+    """The small-graph union-find and the distributed hash-min loop give
+    the same (uri, component) table on a chain, a hub and a lone pair."""
+    from neosemantics_spark.operators.cc import connected_components
+
+    chain = [(f"http://c/{i}", f"http://c/{i + 1}") for i in range(12)]
+    hub = [("http://h/0", f"http://h/{i}") for i in range(1, 15)]
+    edges = spark.createDataFrame(
+        chain[::-1] + hub + [("http://z/b", "http://z/a")], "a string, b string"
+    )
+    fast = connected_components(edges)
+    loop = connected_components(edges, small_graph_limit=0)
+    rows = lambda df: sorted(tuple(r) for r in df.select("uri", "component").collect())  # noqa: E731
+    assert rows(fast) == rows(loop)
+    got = dict(rows(fast))
+    assert got["http://c/12"] == "http://c/0" and got["http://h/9"] == "http://h/0"
+    assert got["http://z/b"] == "http://z/a" and len(got) == 13 + 15 + 2
