@@ -122,7 +122,11 @@ def connected_components(
     # round-0 join input, and the up-front checkpoint time for nothing
     # (measured on the 500k-doc clustering stage: the two eager 2×-edge
     # materializations, not round count, dominated the fixed cost).
-    e = edges.localCheckpoint(eager=True)
+    # an edge with a null endpoint links nothing; dropping it here keeps
+    # the fast path's non-null schema and the loop's output identical
+    e = edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull()).localCheckpoint(
+        eager=True
+    )
     if on_round is None and small_graph_limit > 0:
         # ---- small-graph fast path: the iterative loop's fixed cost is
         # ~10 eager-materialization jobs (pins, convergence probes,

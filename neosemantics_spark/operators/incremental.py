@@ -67,6 +67,7 @@ import shutil
 from collections import defaultdict
 from typing import Optional
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -362,10 +363,19 @@ class IncrementalGraphStore:
             df = df.observe(
                 obs, *[F.count(F.when(F.col("bucket") == b, 1)).alias(str(b)) for b in sorted(touched)]
             )
-            df.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(
-                self._vdir(new_v, table)
-            )
-            return obs.get
+            path = self._vdir(new_v, table)
+            df.repartition("bucket").write.mode("overwrite").partitionBy("bucket").parquet(path)
+            try:
+                return obs.get
+            except Py4JJavaError:
+                # when AQE finds the input empty at run time it can prune
+                # the observed node, and the observation completes with an
+                # empty row that `get` cannot convert: count the write
+                n = {str(b): 0 for b in touched}
+                if any(d.startswith("bucket=") for d in os.listdir(path)):
+                    for r in self.spark.read.parquet(path).groupBy("bucket").count().collect():
+                        n[str(r["bucket"])] = r["count"]
+                return n
 
         try:
             observed = [write(t) for t in _KEY] if touched else []

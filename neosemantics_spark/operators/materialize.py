@@ -129,7 +129,13 @@ def materialize(
 
     `order` is the statement-order key behind OVERWRITE last-wins, ARRAY
     value order and RDF-star prop last-wins; it defaults to the canonical
-    `_ord()`. The incremental store passes its logged arrival-order key."""
+    `_ord()`. The incremental store passes its logged arrival-order key.
+
+    `cache_intermediate=True` persists all three output tables (lazily:
+    the first action computes them). The writes, SHACL validation, export
+    and any counts then read one computed copy instead of re-deriving
+    `nodes` and `edges` from the triples per consumer. Unpersist them
+    (or `spark.catalog.clearCache()`) when the build is done."""
     if order is None:
         order = _ord()
     g = F.coalesce(F.col("graph"), F.lit("")) if with_graph_identity else F.lit("")
@@ -214,9 +220,8 @@ def materialize(
         F.col("n_types"),
     )
     if cache_intermediate:
-        # the expensive per-prop aggregation feeds BOTH the node_props
-        # output and the nodes props-map — persist it once so the two
-        # consumers (and any SHACL/export fan-out) don't recompute it
+        # the per-prop aggregation feeds both node_props and the nodes
+        # props-map; persisted here, and nodes/edges below
         node_props = node_props.persist()
 
     # ---------------- labels [A2/T9]
@@ -310,6 +315,8 @@ def materialize(
     node_props = node_props.select(
         "uri", "graph", "prop", "prop_raw", "values", "value_type", "datatype", "lang", "n_types"
     )
+    if cache_intermediate:
+        nodes, edges = nodes.persist(), edges.persist()
     return GraphTables(nodes=nodes, edges=edges, node_props=node_props)
 
 

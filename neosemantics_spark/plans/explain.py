@@ -34,9 +34,21 @@ def has_broadcast(plan: str) -> bool:
     return "BroadcastExchange" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def exchange_count(plan: str) -> int:
-    return sum(
-        1
-        for l in plan.splitlines()
-        if l.strip().startswith("(") and "Exchange" in l and "Broadcast" not in l
-    )
+def physical_operators(df: DataFrame) -> list[str]:
+    """Operator names of the physical plan (the adaptive plan's current
+    one; call before executing `df`). A cached relation is one leaf scan:
+    the plan that computed it is not descended into."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def exchange_count(df: DataFrame) -> int:
+    """Shuffle and broadcast exchanges in the physical plan of `df`."""
+    return sum("Exchange" in name for name in physical_operators(df))

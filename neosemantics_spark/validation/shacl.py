@@ -1,16 +1,34 @@
-"""SHACL validation re-expressed as DataFrame constraint checks.
+"""SHACL validation as one DataFrame plan over the graph tables.
 
 Reference pipeline (/root/reference/src/main/java/n10s/validation/):
 shapes doc → 3 SPARQL extraction queries (SHACLValidator.java:59-180) →
-constraint records → compiled Cypher violation queries
+constraint records → one compiled Cypher violation query per constraint
 (SHACLValidator.java:1219-1533) → UNION batches (ValidatorConfig.java:115-145).
 
-Here: shapes doc parsed DRIVER-SIDE with our own Turtle parser → constraint
-records (plain dicts, the `ValidatorConfig` analogue) → each constraint
-family compiles to one DataFrame check over the materialized graph tables
-(broadcast-friendly: the shapes are tiny, the graph is huge) →
-`unionByName` fan-in (no batching cap needed — Spark schedules stages in
-parallel; SURVEY.md §2.6/L3).
+Here: the shapes doc is parsed driver-side with our own Turtle parser into
+constraint records (the `ValidatorConfig` analogue), which flatten into a
+small constraint table, `CompiledShapes.checks`: one row per (shape,
+target, path, component, params). `ShaclValidator` evaluates the whole
+table in one plan whose shape depends on which kinds of check occur, never
+on how many (a query per constraint is the shape Spark handles worst):
+
+- focus rows: `nodes` × the table, which travels as one literal array
+  (broadcast with the tasks) exploded on target-label membership; each
+  distinct sh:targetQuery adds one filtered subset;
+- facts: one pass over `node_props` filtered to the constrained props and
+  one over `edges` filtered to the constrained rels, with one left join
+  for the far end's labels when a sh:class check needs them;
+- one left join of focus rows to facts on (uri, path), then one grouped
+  aggregation per (focus node, check): the count (0 for a node without
+  facts), the hasValue hit and the offending values, each decided by one
+  CASE on the check kind (value checks: datatype, in, pattern, lengths,
+  ranges, class/nodeKind on a literal; edge checks: class, in over IRIs,
+  nodeKind literal, datatype "used as relationship"; focus checks:
+  min/maxCount, hasValue, sh:not, class of the focus node);
+- closed shapes and sh:disjoint add one join each.
+
+A node-set or delta scope is one filter on the nodes, below the join and
+the aggregation.
 
 Result schema follows ValidatorConfig.java:21-23 / ValidationResult.java:
 (focus_node, node_type, shape_id, property_shape, offending_value,
@@ -21,9 +39,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from functools import reduce
-from typing import Dict, List, Optional
+from typing import Dict, List, NamedTuple, Optional, Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -93,10 +111,124 @@ class NodeConstraint:
     severity: str = SH_VIOLATION
 
 
+class Check(NamedTuple):
+    """One row of the compiled constraint table. `kind` names the rule
+    that decides a violation (see ShaclValidator._plan); `arg`/`args` hold
+    its parameter (an IRI for the kinds in _IRI_ARG/_IRI_ARGS)."""
+
+    shape_id: str
+    target_class: Optional[str]
+    target_query: Optional[str]
+    path: Optional[str]  # None for node-level checks
+    inverse: bool  # read edges object→subject
+    kind: str
+    component: str
+    num: Optional[float] = None
+    arg: Optional[str] = None
+    args: Optional[List[str]] = None
+    severity: str = SH_VIOLATION
+    message: str = ""
+
+
+# check kinds by the rows they read; focus kinds decide once per focus node
+_READS_VALUES = ("datatype", "literal", "in", "pattern", "min_length", "max_length",
+                 "min_inclusive", "max_inclusive", "min_exclusive", "max_exclusive",
+                 "min_count", "max_count", "has_value")
+_READS_EDGES = ("relationship", "class", "in_iri", "min_count", "max_count", "has_edge")
+_FOCUS_RULES = ("min_count", "max_count", "has_value", "has_edge", "has_label",
+                "not_class", "required_class")
+_IRI_ARG = ("class", "has_edge", "has_label", "not_class", "required_class", "disjoint")
+_IRI_ARGS = ("in_iri", "closed")
+
+_XSD_CAST = {
+    XSD + "integer": "long", XSD + "long": "long", XSD + "int": "long",
+    XSD + "decimal": "double", XSD + "double": "double", XSD + "float": "double",
+    XSD + "boolean": "boolean", XSD + "dateTime": "timestamp", XSD + "date": "date",
+}
+
+
+def _property_checks(c: PropertyConstraint) -> List[Check]:
+    out: List[Check] = []
+
+    def add(kind, component, message, inverse=False, **kw) -> None:
+        out.append(Check(
+            c.shape_id, c.target_class, c.target_query, c.path, inverse, kind,
+            component + "ConstraintComponent", severity=c.severity,
+            message=c.message or message, **kw,
+        ))
+
+    # cardinality = #values + #out-rels (inverse → in-rels)
+    # (SHACLValidator.java:1418-1487)
+    if c.min_count is not None:
+        add("min_count", "MinCount", f"minCount {c.min_count}", c.inverse, num=c.min_count)
+    if c.max_count is not None:
+        add("max_count", "MaxCount", f"maxCount {c.max_count}", c.inverse, num=c.max_count)
+    if c.datatype is not None:
+        add("datatype", "Datatype", f"datatype {c.datatype}", arg=_XSD_CAST.get(c.datatype))
+        # property used as relationship (SHACLValidator.java:1234-1256)
+        add("relationship", "Datatype", "property used as relationship")
+    if c.class_constraint is not None:
+        # object must bear the class label (J6 anti-join family,
+        # SHACLValidator.java:1332-1354); a literal value violates too
+        add("class", "Class", f"class {c.class_constraint}", c.inverse, arg=c.class_constraint)
+        add("literal", "Class", "literal where resource expected")
+    if c.node_kind is not None:
+        if c.node_kind.endswith("Literal"):
+            add("relationship", "NodeKind", "expected literal")
+        else:  # sh:IRI / sh:BlankNodeOrIRI: must not be a stored property
+            add("literal", "NodeKind", "expected IRI")
+    if c.has_value_uri is not None:
+        kind = "has_label" if c.path == RDF_TYPE else "has_edge"
+        add(kind, "HasValue", f"missing required value {c.has_value_uri}", arg=c.has_value_uri)
+    if c.has_value_literal is not None:
+        add("has_value", "HasValue", f"missing required value {c.has_value_literal}",
+            arg=c.has_value_literal)
+    if c.in_literals is not None:
+        add("in", "In", "value not in enumeration", args=c.in_literals)
+    if c.in_uris is not None:
+        add("in_iri", "In", "value not in enumeration", args=c.in_uris)
+    if c.pattern is not None:
+        add("pattern", "Pattern", f"pattern {c.pattern}", arg=c.pattern)
+    for kind, component in (
+        ("min_length", "MinLength"), ("max_length", "MaxLength"),
+        ("min_inclusive", "MinInclusive"), ("max_inclusive", "MaxInclusive"),
+        ("min_exclusive", "MinExclusive"), ("max_exclusive", "MaxExclusive"),
+    ):
+        v = getattr(c, kind)
+        if v is not None:
+            add(kind, component, f"{component[0].lower()}{component[1:]} {v}", num=v)
+    if c.disjoint_path is not None:
+        # value sets of two props must not overlap (SHACLValidator.java:1446-1479)
+        add("disjoint", "Disjoint", f"disjoint {c.disjoint_path}", arg=c.disjoint_path)
+    return out
+
+
+def _node_checks(c: NodeConstraint) -> List[Check]:
+    specs = [
+        (c.closed, "closed", "Closed", "closed shape violation", None),
+        (c.not_class, "not_class", "Not", f"must not be a {c.not_class}", c.not_class),
+        (c.required_class, "required_class", "Class", f"must also be a {c.required_class}",
+         c.required_class),
+    ]
+    return [
+        Check(c.shape_id, c.target_class, c.target_query, None, False, kind,
+              component + "ConstraintComponent", arg=arg, severity=c.severity, message=msg,
+              args=c.allowed_props + c.ignored_props if kind == "closed" else None)
+        for on, kind, component, msg, arg in specs if on
+    ]
+
+
 @dataclass
 class CompiledShapes:
     props: List[PropertyConstraint]
     nodes: List[NodeConstraint]
+
+    @property
+    def checks(self) -> List[Check]:
+        """The constraint table: one row per check the validator runs."""
+        return [k for c in self.props for k in _property_checks(c)] + [
+            k for c in self.nodes for k in _node_checks(c)
+        ]
 
 
 def _term_key(t) -> str:
@@ -183,16 +315,12 @@ def compile_shapes(shapes_doc: str) -> CompiledShapes:
                 inverse=inverse, target_query=target_query,
             )
 
-            def geti(p):
+            def num(p, conv=float):
                 v = one(pk, SH + p)
-                return int(v.lexical) if isinstance(v, Literal) else None
+                return conv(v.lexical) if isinstance(v, Literal) else None
 
-            def getf(p):
-                v = one(pk, SH + p)
-                return float(v.lexical) if isinstance(v, Literal) else None
-
-            c.min_count = geti("minCount")
-            c.max_count = geti("maxCount")
+            c.min_count = num("minCount", int)
+            c.max_count = num("maxCount", int)
             dt = one(pk, SH + "datatype")
             c.datatype = _term_key(dt) if dt else None
             cls = one(pk, SH + "class")
@@ -212,12 +340,12 @@ def compile_shapes(shapes_doc: str) -> CompiledShapes:
                 c.in_uris = uris or None
             pat = one(pk, SH + "pattern")
             c.pattern = pat.lexical if isinstance(pat, Literal) else None
-            c.min_length = geti("minLength")
-            c.max_length = geti("maxLength")
-            c.min_inclusive = getf("minInclusive")
-            c.max_inclusive = getf("maxInclusive")
-            c.min_exclusive = getf("minExclusive")
-            c.max_exclusive = getf("maxExclusive")
+            c.min_length = num("minLength", int)
+            c.max_length = num("maxLength", int)
+            c.min_inclusive = num("minInclusive")
+            c.max_inclusive = num("maxInclusive")
+            c.min_exclusive = num("minExclusive")
+            c.max_exclusive = num("maxExclusive")
             dis = one(pk, SH + "disjoint")
             c.disjoint_path = _term_key(dis) if dis else None
             sev = one(pk, SH + "severity")
@@ -243,28 +371,84 @@ def compile_shapes(shapes_doc: str) -> CompiledShapes:
 
 
 # ---------------------------------------------------------------- runtime
-_XSD_CAST = {
-    XSD + "integer": "long", XSD + "long": "long", XSD + "int": "long",
-    XSD + "decimal": "double", XSD + "double": "double", XSD + "float": "double",
-    XSD + "boolean": "boolean", XSD + "dateTime": "timestamp", XSD + "date": "date",
-}
+# the literal constraint table's struct fields
+_TABLE = (
+    ("cid", "int"), ("shape", "string"), ("tgt", "string"), ("ntype", "string"),
+    ("kind", "string"), ("comp", "string"), ("path", "string"), ("rpath", "string"),
+    ("inv", "boolean"), ("rv", "boolean"), ("re", "boolean"), ("num", "double"),
+    ("arg", "string"), ("raw", "string"), ("args", "array<string>"),
+    ("sev", "string"), ("msg", "string"),
+)
+
+Scope = Union[None, List[str], DataFrame]
 
 
-def _result(df: DataFrame, c, component: str, path, offending, message: str) -> DataFrame:
+def _scoped(df: DataFrame, scope: Scope, col: str = "uri") -> DataFrame:
+    # a literal delta list also prunes the fact scans (parquet row groups
+    # are skipped); a semi-join scope prunes at the focus join
+    return df.filter(F.col(col).isin(scope)) if isinstance(scope, list) else df
+
+
+def _literal_table(rows: List[dict]) -> Column:
+    """Constraint rows as one constant array<struct> (folded to a single
+    literal, so it ships with every task like a broadcast)."""
+    return F.array(*[
+        F.struct(*[F.lit(r[k]).cast(t).alias(k) for k, t in _TABLE]) for r in rows
+    ])
+
+
+def _rule(cases: Dict[str, Column], key: str = "c.kind") -> Column:
+    """CASE key WHEN ...: the violation condition of each check kind
+    (NULL, i.e. no violation, for the kinds not listed)."""
+    rule = F
+    for k, cond in cases.items():
+        rule = rule.when(F.col(key) == k, cond)
+    return rule
+
+
+def _fact_rule() -> Column:
+    """Whether one value (`val`, stored type `vtype`) or one edge's far
+    end (`val`, its labels `olabels`) violates the check in `c`."""
+    val, num, arg = F.col("val"), F.col("c.num"), F.col("c.arg")
+    as_num = F.expr("try_cast(val as double)")
+    cast_failed = _rule(
+        {t: F.expr(f"try_cast(val as {t})").isNull() for t in sorted(set(_XSD_CAST.values()))},
+        key="c.arg",
+    )
+    return _rule({
+        # no cast type: string-ish expected, any non-string stored type violates
+        "datatype": F.when(arg.isNull(), ~F.col("vtype").isin("STRING"))
+        .otherwise(cast_failed & val.isNotNull()),
+        "literal": F.lit(True),
+        "in": ~F.array_contains("c.args", val),
+        "pattern": ~F.expr("val rlike c.arg"),
+        "min_length": F.length(val) < num,
+        "max_length": F.length(val) > num,
+        "min_inclusive": as_num.isNull() | (as_num < num),
+        "max_inclusive": as_num.isNull() | (as_num > num),
+        "min_exclusive": as_num.isNull() | (as_num <= num),
+        "max_exclusive": as_num.isNull() | (as_num >= num),
+        "relationship": F.lit(True),
+        "class": F.coalesce(~F.array_contains("olabels", arg), F.lit(True)),
+        "in_iri": ~F.array_contains("c.args", val),
+    })
+
+
+def _result(df: DataFrame, offending: Column) -> DataFrame:
     return df.select(
         F.col("uri").alias("focus_node"),
-        F.lit(c.target_class if c.target_class is not None else "query:" + (c.target_query or "")).alias("node_type"),
-        F.lit(c.shape_id).alias("shape_id"),
-        F.lit(SH + component).alias("property_shape"),
+        F.col("c.ntype").alias("node_type"),
+        F.col("c.shape").alias("shape_id"),
+        F.col("c.comp").alias("property_shape"),
         offending.cast("string").alias("offending_value"),
-        F.lit(path).cast("string").alias("result_path"),
-        F.lit(c.severity).alias("severity"),
-        F.lit(message).alias("result_message"),
+        F.col("c.rpath").alias("result_path"),
+        F.col("c.sev").alias("severity"),
+        F.col("c.msg").alias("result_message"),
     )
 
 
 class ShaclValidator:
-    """Runtime: constraint records + graph tables → results DF.
+    """Runtime: constraint table + graph tables → results DF.
 
     Labels may be stored transformed (SHORTEN/IGNORE); pass `iri_map` to
     translate shape IRIs into stored form (the reference compiles the
@@ -273,17 +457,6 @@ class ShaclValidator:
     def __init__(self, tables: GraphTables, iri_map=None):
         self.t = tables
         self.m = iri_map or (lambda x: x)
-        # focus universe: nodes with their labels; props in long form;
-        # out/in edges per (node, rel)
-        self.nodes = tables.nodes.select("uri", "labels")
-        self.props = tables.node_props
-        self.edges = tables.edges
-        # small-delta pushdown: when validate_delta collects the delta as
-        # a literal uri list, every focus-side scan (nodes/props/edges)
-        # carries an In(uri, ...) predicate that reaches the parquet
-        # reader (row-group skipping) instead of a join that prunes only
-        # AFTER the full scan — the O(delta) path for per-batch validation
-        self._delta_uris: Optional[List[str]] = None
 
     # SQL functions a sh:targetQuery may NOT call: these escape the
     # declarative sandbox into arbitrary JVM invocation. The reference
@@ -292,350 +465,206 @@ class ShaclValidator:
     # reflect()/java_method() are legal expressions.
     _FORBIDDEN_FNS = ("reflect", "java_method")
 
-    def _focus(self, c, node_set: Optional[DataFrame] = None) -> DataFrame:
-        """Focus-node selection: sh:targetClass label membership, or the
-        sh:targetQuery extension point — a SQL predicate over the focus
-        columns (uri, labels), validated before use exactly like the
-        reference validates its Cypher fragment
-        (SHACLValidator.java:885-895).
-
-        `node_set` (DataFrame[uri]) intersects the focus set UP FRONT —
-        the validateSet/delta scoping of SHACLValidator.java:922-936
-        (node-set-scoped query variants): every downstream check family
-        (incl. the cardinality and closed-shape aggregations) then prunes
-        to the set via this one semi-join instead of aggregating the full
-        graph and filtering results."""
-        if c.target_class is not None:
-            focus = self.nodes.filter(F.array_contains("labels", self.m(c.target_class)))
-        else:
-            q = c.target_query
-            try:
-                focus = self.nodes.filter(F.expr(q))
-                focus.schema  # force analysis — rejects bad columns/syntax
-            except Exception as e:  # noqa: BLE001
+    def _target_query(self, q: str) -> Column:
+        """The sh:targetQuery extension point: a SQL predicate over the
+        focus columns (uri, labels), validated before use exactly like the
+        reference validates its Cypher fragment (SHACLValidator.java:885-895)."""
+        try:
+            focus = self.t.nodes.select("uri", "labels").filter(F.expr(q))
+            focus.schema  # force analysis — rejects bad columns/syntax
+        except Exception as e:  # noqa: BLE001
+            raise ValueError(
+                f'Invalid SQL expression: "{q}". The SQL fragment in a '
+                "sh:targetQuery element should form a valid query when "
+                "embedded in the following template: "
+                '"SELECT * FROM nodes(uri, labels) WHERE <your sql>"'
+            ) from e
+        analyzed = focus._jdf.queryExecution().analyzed().toString().lower()
+        for fn in self._FORBIDDEN_FNS:
+            if fn + "(" in analyzed:
                 raise ValueError(
-                    f'Invalid SQL expression: "{q}". The SQL fragment in a '
-                    "sh:targetQuery element should form a valid query when "
-                    "embedded in the following template: "
-                    '"SELECT * FROM nodes(uri, labels) WHERE <your sql>"'
-                ) from e
-            analyzed = focus._jdf.queryExecution().analyzed().toString().lower()
-            for fn in self._FORBIDDEN_FNS:
-                if fn + "(" in analyzed:
-                    raise ValueError(
-                        f'Forbidden function "{fn}" in sh:targetQuery "{q}": '
-                        "shapes documents may only use pure SQL predicates "
-                        "over (uri, labels)."
-                    )
-        if node_set is not None:
-            if self._delta_uris is not None:
-                # literal In predicate — pushes to the scan; exactly
-                # equivalent to the semi-join (the list IS the node set)
-                focus = focus.filter(F.col("uri").isin(self._delta_uris))
+                    f'Forbidden function "{fn}" in sh:targetQuery "{q}": '
+                    "shapes documents may only use pure SQL predicates "
+                    "over (uri, labels)."
+                )
+        return F.expr(q)
+
+    def _rows(self, checks: List[Check]) -> List[dict]:
+        """The constraint table with shape IRIs in stored form."""
+        m, rows = self.m, []
+        for i, c in enumerate(checks):
+            rows.append({
+                "cid": i, "shape": c.shape_id,
+                "tgt": m(c.target_class) if c.target_class is not None else None,
+                "tq": None if c.target_class is not None else c.target_query,
+                "ntype": c.target_class if c.target_class is not None
+                else "query:" + (c.target_query or ""),
+                "kind": c.kind, "comp": SH + c.component,
+                "path": m(c.path) if c.path is not None else None, "rpath": c.path,
+                "inv": c.inverse, "rv": c.kind in _READS_VALUES, "re": c.kind in _READS_EDGES,
+                "num": c.num, "arg": m(c.arg) if c.kind in _IRI_ARG else c.arg, "raw": c.arg,
+                "args": sorted({m(a) for a in c.args}) if c.kind in _IRI_ARGS else c.args,
+                "sev": c.severity, "msg": c.message,
+            })
+        return rows
+
+    def _focus(self, rows: List[dict], scope: Scope) -> DataFrame:
+        """Focus rows (uri, graph, labels, c): one per (node, check `c`
+        targeting it). Target-class checks explode on label membership;
+        each distinct sh:targetQuery filters its own subset. `scope`
+        restricts the nodes first: a literal uri list (an In predicate
+        that reaches the scan) or a DataFrame[uri] (semi-join) — the
+        validateSet/delta scoping of SHACLValidator.java:922-936, below
+        every join and aggregation."""
+        nodes = _scoped(self.t.nodes.select("uri", "graph", "labels"), scope)
+        if isinstance(scope, DataFrame):
+            nodes = nodes.join(scope.select("uri"), "uri", "left_semi")
+        by_class = [r for r in rows if r["tq"] is None]
+        parts = []
+        if by_class:
+            table = F.filter(
+                _literal_table(by_class), lambda c: F.array_contains("labels", c["tgt"])
+            )
+            parts.append(nodes.select("*", F.explode(table).alias("c")))
+        for q in sorted({r["tq"] for r in rows if r["tq"] is not None}):
+            table = _literal_table([r for r in rows if r["tq"] == q])
+            parts.append(nodes.filter(self._target_query(q)).select("*", F.explode(table).alias("c")))
+        return reduce(DataFrame.unionByName, parts)
+
+    def _props(self, paths, scope: Scope) -> DataFrame:
+        """(fu, fpath, val, vtype): one row per stored value of `paths`."""
+        p = _scoped(self.t.node_props.filter(F.col("prop").isin(sorted(paths))), scope)
+        return p.select(
+            F.col("uri").alias("fu"), F.col("prop").alias("fpath"),
+            F.explode("values").alias("val"), F.col("value_type").alias("vtype"),
+        )
+
+    def _facts(self, rows: List[dict], scope: Scope) -> DataFrame:
+        """The value and edge rows the checks read, keyed by the focus
+        side (fu, fpath): values of the constrained props, and out-edges
+        (in-edges where `finv`) of the constrained rels with the far end's
+        labels when a sh:class check needs them."""
+        none = F.lit(None).cast("array<string>")
+        # the value part is there even when empty (`prop IN ()` folds away)
+        parts = [self._props({r["path"] for r in rows if r["rv"]}, scope).withColumns(
+            {"edge": F.lit(False), "finv": F.lit(False), "olabels": none}
+        )]
+        edges = []
+        for inv, near, far in ((False, "src", "dst"), (True, "dst", "src")):
+            rels = {r["path"] for r in rows if r["re"] and r["inv"] == inv}
+            if rels:
+                e = _scoped(self.t.edges.filter(F.col("rel").isin(sorted(rels))), scope, near)
+                edges.append(e.select(
+                    F.col(near).alias("fu"), F.col("rel").alias("fpath"), F.col(far).alias("val"),
+                    F.lit(None).cast("string").alias("vtype"), F.lit(True).alias("edge"),
+                    F.lit(inv).alias("finv"),
+                ))
+        if edges:
+            e = reduce(DataFrame.unionByName, edges)
+            if any(r["kind"] == "class" for r in rows):
+                labels = self.t.nodes.select(F.col("uri").alias("val"), F.col("labels").alias("olabels"))
+                parts.append(e.join(labels, "val", "left"))
             else:
-                focus = focus.join(node_set.select("uri"), "uri", "left_semi")
-        return focus
+                parts.append(e.withColumn("olabels", none))
+        return reduce(DataFrame.unionByName, parts)
 
-    def _prop_vals(self, focus: DataFrame, path: str) -> DataFrame:
-        p = self.props.filter(F.col("prop") == self.m(path))
-        if self._delta_uris is not None:
-            p = p.filter(F.col("uri").isin(self._delta_uris))
-        p = p.select("uri", F.explode("values").alias("value"), "value_type", "datatype")
-        return focus.select("uri").join(p, "uri", "inner")
-
-    def _out_edges(self, focus: DataFrame, path: str, inverse: bool = False) -> DataFrame:
-        e = self.edges.filter(F.col("rel") == self.m(path))
-        if inverse:
-            e = e.select(F.col("dst").alias("uri"), F.col("src").alias("other"))
-        else:
-            e = e.select(F.col("src").alias("uri"), F.col("dst").alias("other"))
-        if self._delta_uris is not None:
-            e = e.filter(F.col("uri").isin(self._delta_uris))
-        return focus.select("uri").join(e, "uri", "inner")
-
-    # ---------------- property-constraint checks (§2.6 table)
-    def check_property(
-        self, c: PropertyConstraint, node_set: Optional[DataFrame] = None
-    ) -> List[DataFrame]:
+    def _plan(self, shapes: CompiledShapes, scope: Scope) -> DataFrame:
+        rows = self._rows(shapes.checks)
         out: List[DataFrame] = []
-        focus = self._focus(c, node_set)
-        vals = self._prop_vals(focus, c.path)
-        msg = c.message or ""
-
-        if c.min_count is not None or c.max_count is not None:
-            # cardinality = #values + #out-rels (inverse → in-rels)
-            # (SHACLValidator.java:1418-1487)
-            vc = vals.groupBy("uri").agg(F.count("*").alias("nv"))
-            ec = self._out_edges(focus, c.path, c.inverse).groupBy("uri").agg(
-                F.count("*").alias("ne")
+        main = [r for r in rows if r["kind"] not in ("closed", "disjoint")]
+        if main:
+            # one pass: every focus row left-joins the facts its check reads,
+            # then one aggregation per (focus, check) counts them (0 when
+            # none) and keeps the offending ones
+            reads = F.when(
+                F.col("edge"), F.col("c.re") & (F.col("c.inv") == F.col("finv"))
+            ).otherwise(F.col("c.rv"))
+            on = (F.col("uri") == F.col("fu")) & (F.col("c.path") == F.col("fpath")) & reads
+            focus = self._focus(main, scope).join(self._facts(main, scope), on, "left")
+            focus = focus.groupBy("uri", "graph", "labels", "c").agg(
+                F.count("fu").alias("n"),
+                F.max((F.col("val") == F.col("c.arg")).cast("int")).alias("hit"),
+                F.collect_list(F.when(_fact_rule(), F.col("val"))).alias("bad"),
             )
-            card = (
-                focus.select("uri")
-                .join(vc, "uri", "left")
-                .join(ec, "uri", "left")
-                .select(
-                    "uri",
-                    (F.coalesce("nv", F.lit(0)) + F.coalesce("ne", F.lit(0))).alias("n"),
-                )
+            n, hit = F.col("n"), F.coalesce(F.col("hit"), F.lit(0)) > 0
+            labeled = F.array_contains("labels", F.col("c.arg"))
+            violated = _rule({
+                "min_count": n < F.col("c.num"),
+                "max_count": n > F.col("c.num"),
+                "has_value": ~hit,
+                "has_edge": ~hit,
+                "has_label": ~labeled,
+                "not_class": labeled,
+                "required_class": ~labeled,
+            })
+            counted = F.col("c.kind").isin("min_count", "max_count")
+            offending = F.when(
+                F.col("c.kind").isin(*_FOCUS_RULES),
+                F.when(violated, F.array(F.when(counted, n.cast("string")).otherwise(F.col("c.raw"))))
+                .otherwise(F.array()),
+            ).otherwise(F.col("bad"))
+            out.append(_result(focus.select("uri", "c", F.explode(offending).alias("off")), F.col("off")))
+        closed = [r for r in rows if r["kind"] == "closed"]
+        if closed:
+            used = self.t.node_props.select("uri", F.col("prop").alias("used")).unionByName(
+                self.t.edges.select(F.col("src").alias("uri"), F.col("rel").alias("used"))
             )
-            if c.min_count is not None:
-                bad = card.filter(F.col("n") < c.min_count)
-                out.append(
-                    _result(bad, c, "MinCountConstraintComponent", c.path, F.col("n"),
-                            msg or f"minCount {c.min_count}")
-                )
-            if c.max_count is not None:
-                bad = card.filter(F.col("n") > c.max_count)
-                out.append(
-                    _result(bad, c, "MaxCountConstraintComponent", c.path, F.col("n"),
-                            msg or f"maxCount {c.max_count}")
-                )
-
-        if c.datatype is not None:
-            cast_t = _XSD_CAST.get(c.datatype)
-            if cast_t:
-                bad = vals.filter(
-                    F.expr(f"try_cast(value as {cast_t})").isNull() & F.col("value").isNotNull()
-                )
-            else:  # string-ish expected: any non-string stored type violates
-                bad = vals.filter(~F.col("value_type").isin("STRING"))
-            out.append(
-                _result(bad, c, "DatatypeConstraintComponent", c.path, F.col("value"),
-                        msg or f"datatype {c.datatype}")
+            bad = self._focus(closed, scope).join(_scoped(used, scope), "uri").filter(
+                (F.size("c.args") == 0) | ~F.array_contains("c.args", F.col("used"))
             )
-            # property used as relationship (SHACLValidator.java:1234-1256)
-            rel_bad = self._out_edges(focus, c.path)
-            out.append(
-                _result(rel_bad, c, "DatatypeConstraintComponent", c.path, F.col("other"),
-                        msg or "property used as relationship")
+            out.append(_result(bad, F.col("used")))
+        disjoint = [r for r in rows if r["kind"] == "disjoint"]
+        if disjoint:
+            mine = self._props({r["path"] for r in disjoint}, scope)
+            theirs = self._props({r["arg"] for r in disjoint}, scope).select(
+                F.col("fu").alias("tu"), F.col("fpath").alias("tpath"), F.col("val").alias("tval")
             )
-
-        if c.class_constraint is not None:
-            # object must bear the class label (J6 anti-join family,
-            # SHACLValidator.java:1332-1354)
-            e = self._out_edges(focus, c.path, c.inverse)
-            labeled = self.nodes.select(F.col("uri").alias("other"), "labels")
-            bad = e.join(labeled, "other", "left").filter(
-                F.coalesce(
-                    ~F.array_contains("labels", self.m(c.class_constraint)), F.lit(True)
-                )
-            )
-            out.append(
-                _result(bad, c, "ClassConstraintComponent", c.path, F.col("other"),
-                        msg or f"class {c.class_constraint}")
-            )
-            # values stored as literals also violate sh:class
-            out.append(
-                _result(vals, c, "ClassConstraintComponent", c.path, F.col("value"),
-                        msg or "literal where resource expected")
-            )
-
-        if c.node_kind is not None:
-            if c.node_kind.endswith("Literal"):
-                bad = self._out_edges(focus, c.path)
-                out.append(
-                    _result(bad, c, "NodeKindConstraintComponent", c.path, F.col("other"),
-                            msg or "expected literal")
-                )
-            else:  # sh:IRI / sh:BlankNodeOrIRI: must not be a stored property
-                out.append(
-                    _result(vals, c, "NodeKindConstraintComponent", c.path, F.col("value"),
-                            msg or "expected IRI")
-                )
-
-        if c.has_value_uri is not None:
-            have = self._out_edges(focus, c.path).filter(
-                F.col("other") == self.m(c.has_value_uri)
-            )
-            if c.path == RDF_TYPE:
-                have = focus.filter(
-                    F.array_contains("labels", self.m(c.has_value_uri))
-                ).select("uri", F.lit(None).alias("other"))
-            bad = focus.join(have.select("uri").distinct(), "uri", "left_anti")
-            out.append(
-                _result(bad, c, "HasValueConstraintComponent", c.path, F.lit(c.has_value_uri),
-                        msg or f"missing required value {c.has_value_uri}")
-            )
-        if c.has_value_literal is not None:
-            have = vals.filter(F.col("value") == c.has_value_literal)
-            bad = focus.join(have.select("uri").distinct(), "uri", "left_anti")
-            out.append(
-                _result(bad, c, "HasValueConstraintComponent", c.path,
-                        F.lit(c.has_value_literal),
-                        msg or f"missing required value {c.has_value_literal}")
-            )
-
-        if c.in_literals is not None:
-            bad = vals.filter(~F.col("value").isin(c.in_literals))
-            out.append(
-                _result(bad, c, "InConstraintComponent", c.path, F.col("value"),
-                        msg or "value not in enumeration")
-            )
-        if c.in_uris is not None:
-            allowed = [self.m(u) for u in c.in_uris]
-            bad = self._out_edges(focus, c.path).filter(~F.col("other").isin(allowed))
-            out.append(
-                _result(bad, c, "InConstraintComponent", c.path, F.col("other"),
-                        msg or "value not in enumeration")
-            )
-
-        if c.pattern is not None:
-            bad = vals.filter(~F.col("value").rlike(c.pattern))
-            out.append(
-                _result(bad, c, "PatternConstraintComponent", c.path, F.col("value"),
-                        msg or f"pattern {c.pattern}")
-            )
-        if c.min_length is not None:
-            bad = vals.filter(F.length("value") < c.min_length)
-            out.append(
-                _result(bad, c, "MinLengthConstraintComponent", c.path, F.col("value"),
-                        msg or f"minLength {c.min_length}")
-            )
-        if c.max_length is not None:
-            bad = vals.filter(F.length("value") > c.max_length)
-            out.append(
-                _result(bad, c, "MaxLengthConstraintComponent", c.path, F.col("value"),
-                        msg or f"maxLength {c.max_length}")
-            )
-        num = F.expr("try_cast(value as double)")
-        if c.min_inclusive is not None:
-            bad = vals.filter(num.isNull() | (num < c.min_inclusive))
-            out.append(
-                _result(bad, c, "MinInclusiveConstraintComponent", c.path, F.col("value"),
-                        msg or f"minInclusive {c.min_inclusive}")
-            )
-        if c.max_inclusive is not None:
-            bad = vals.filter(num.isNull() | (num > c.max_inclusive))
-            out.append(
-                _result(bad, c, "MaxInclusiveConstraintComponent", c.path, F.col("value"),
-                        msg or f"maxInclusive {c.max_inclusive}")
-            )
-        if c.min_exclusive is not None:
-            bad = vals.filter(num.isNull() | (num <= c.min_exclusive))
-            out.append(
-                _result(bad, c, "MinExclusiveConstraintComponent", c.path, F.col("value"),
-                        msg or f"minExclusive {c.min_exclusive}")
-            )
-        if c.max_exclusive is not None:
-            bad = vals.filter(num.isNull() | (num >= c.max_exclusive))
-            out.append(
-                _result(bad, c, "MaxExclusiveConstraintComponent", c.path, F.col("value"),
-                        msg or f"maxExclusive {c.max_exclusive}")
-            )
-        if c.disjoint_path is not None:
-            # value sets of two props must not overlap (arrays_overlap;
-            # SHACLValidator.java:1446-1479)
-            a = self._prop_vals(focus, c.path)
-            b = self._prop_vals(focus, c.disjoint_path).select(
-                "uri", F.col("value").alias("value_b")
-            )
-            bad = a.join(b, "uri").filter(F.col("value") == F.col("value_b"))
-            out.append(
-                _result(bad, c, "DisjointConstraintComponent", c.path, F.col("value"),
-                        msg or f"disjoint {c.disjoint_path}")
-            )
-        return out
-
-    def check_node(
-        self, c: NodeConstraint, node_set: Optional[DataFrame] = None
-    ) -> List[DataFrame]:
-        out: List[DataFrame] = []
-        focus = self._focus(c, node_set)
-        if c.closed:
-            allowed = {self.m(p) for p in c.allowed_props} | {
-                self.m(p) for p in c.ignored_props
-            }
-            used_p = self.props.select("uri", F.col("prop").alias("used"))
-            used_r = self.edges.select(F.col("src").alias("uri"), F.col("rel").alias("used"))
-            used = used_p.unionByName(used_r)
-            if self._delta_uris is not None:
-                used = used.filter(F.col("uri").isin(self._delta_uris))
             bad = (
-                focus.select("uri")
-                .join(used, "uri", "inner")
-                .filter(~F.col("used").isin(list(allowed)) if allowed else F.lit(True))
+                self._focus(disjoint, scope)
+                .join(mine, (F.col("uri") == F.col("fu")) & (F.col("c.path") == F.col("fpath")))
+                .join(theirs, (F.col("uri") == F.col("tu")) & (F.col("c.arg") == F.col("tpath"))
+                      & (F.col("val") == F.col("tval")))
             )
-            out.append(
-                _result(bad, c, "ClosedConstraintComponent", None, F.col("used"),
-                        "closed shape violation")
-            )
-        if c.not_class is not None:
-            bad = focus.filter(F.array_contains("labels", self.m(c.not_class)))
-            out.append(
-                _result(bad, c, "NotConstraintComponent", None, F.lit(c.not_class),
-                        f"must not be a {c.not_class}")
-            )
-        if c.required_class is not None:
-            bad = focus.filter(~F.array_contains("labels", self.m(c.required_class)))
-            out.append(
-                _result(bad, c, "ClassConstraintComponent", None, F.lit(c.required_class),
-                        f"must also be a {c.required_class}")
-            )
-        return out
+            out.append(_result(bad, F.col("val")))
+        if not out:
+            return self.t.nodes.sparkSession.createDataFrame([], RESULT_SCHEMA)
+        return reduce(DataFrame.unionByName, out)
 
     def view_checks(self, shapes: CompiledShapes, explain: bool = False) -> List[dict]:
         """n10s.validation.shacl.viewCypher analogue
         (ValidationProcedures.java:118-126 — the reference prints each
-        compiled Cypher violation query): enumerate the compiled DataFrame
-        checks; with explain=True each record carries the check's
-        Catalyst-OPTIMIZED plan string — the Spark equivalent of the
-        compiled query text, and the thing to eyeball when asking 'does
-        this constraint prune before it aggregates?'."""
-        out: List[dict] = []
-        for c in shapes.props:
-            for i, df in enumerate(self.check_property(c)):
-                rec = {
-                    "shape_id": c.shape_id,
-                    "target": c.target_class or ("query:" + (c.target_query or "")),
-                    "path": c.path,
-                    "check_idx": i,
-                }
-                if explain:
-                    rec["plan"] = df._jdf.queryExecution().optimizedPlan().toString()
-                out.append(rec)
-        for c in shapes.nodes:
-            for i, df in enumerate(self.check_node(c)):
-                rec = {
-                    "shape_id": c.shape_id,
-                    "target": c.target_class or ("query:" + (c.target_query or "")),
-                    "path": None,
-                    "check_idx": i,
-                }
-                if explain:
-                    rec["plan"] = df._jdf.queryExecution().optimizedPlan().toString()
-                out.append(rec)
-        return out
+        compiled Cypher violation query): one record per constraint-table
+        row; with explain=True each carries the Catalyst-OPTIMIZED plan of
+        the one validation plan they all run in — the thing to eyeball
+        when asking 'does this constraint prune before it aggregates?'."""
+        plan = (
+            self.validate(shapes)._jdf.queryExecution().optimizedPlan().toString()
+            if explain else None
+        )
+        return [
+            {
+                "shape_id": c.shape_id,
+                "target": c.target_class or ("query:" + (c.target_query or "")),
+                "path": c.path,
+                "component": SH + c.component,
+                "check_idx": i,
+                **({"plan": plan} if explain else {}),
+            }
+            for i, c in enumerate(shapes.checks)
+        ]
 
     def validate(self, shapes: CompiledShapes, node_set: Optional[DataFrame] = None) -> DataFrame:
         """Full-graph validation (ValidationProcedures.java:128-136); pass
         `node_set` (DataFrame[uri]) for the validateSet variant (:139-153).
-
-        The node_set is pushed INTO focus selection (one semi-join per
-        constraint, below every aggregation — SHACLValidator.java:922-936
-        scopes each compiled query the same way), so validating 100 nodes
-        of a huge graph never pays full-graph cardinality/closed-shape
-        aggregation. A result-level semi-join remains only as a guard for
-        checks whose offending row could surface a non-focus uri."""
-        spark = self.nodes.sparkSession
-        checks: List[DataFrame] = []
-        for c in shapes.props:
-            checks.extend(self.check_property(c, node_set))
-        for c in shapes.nodes:
-            checks.extend(self.check_node(c, node_set))
-        if not checks:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        res = reduce(DataFrame.unionByName, checks)
-        if node_set is not None:
-            res = res.join(
-                node_set.select(F.col("uri").alias("focus_node")), "focus_node", "left_semi"
-            )
-        return res
+        The node set semi-joins the focus nodes, below every aggregation,
+        so validating 100 nodes of a huge graph never pays full-graph
+        cardinality or closed-shape aggregation."""
+        return self._plan(shapes, node_set)
 
     def validate_delta(
         self,
         shapes: CompiledShapes,
         delta_nodes: DataFrame,
-        skip_untouched_shapes: bool = True,
         pushdown_threshold: int = 10_000,
     ) -> DataFrame:
         """validateTransaction analogue (ValidationProcedures.java:23-55,
@@ -644,50 +673,14 @@ class ShaclValidator:
 
         The reference indexes constraints by trigger label
         (ValidatorConfig.java:100-113,147-171) so a transaction touching no
-        Person node skips every Person shape. Spark analogue: collect the
-        (tiny — label vocabulary sized) distinct label set of the delta
-        nodes and skip constraint families whose target class has no delta
-        member; constraints targeting via sh:targetQuery can't be indexed
-        and always run (scoped to the delta by `_focus`)."""
-        spark = self.nodes.sparkSession
+        Person node skips every Person shape; here the focus explode on
+        target label does the same inside the plan. A delta of at most
+        `pushdown_threshold` uris is collected once (metadata-sized: 10k
+        uris ≈ 1 MB) and scopes every scan as a literal In predicate;
+        a larger one scopes the focus nodes by semi-join."""
         delta_nodes = delta_nodes.select("uri")
-        # small-delta pushdown: collect the uri list once (a per-batch
-        # delta is metadata-sized; 10k uris ≈ 1 MB) so every scan below
-        # carries an In(uri, ...) predicate instead of a post-scan join —
-        # with parquet/Iceberg sources the reader then skips row groups
-        delta_list = [r["uri"] for r in delta_nodes.limit(pushdown_threshold + 1).collect()]
-        use_pushdown = len(delta_list) <= pushdown_threshold
-        props, node_cons = shapes.props, shapes.nodes
-        if skip_untouched_shapes:
-            scoped = (
-                self.nodes.filter(F.col("uri").isin(delta_list))
-                if use_pushdown
-                else self.nodes.join(delta_nodes, "uri", "left_semi")
-            )
-            touched_labels = {
-                r["l"]
-                for r in scoped.select(F.explode("labels").alias("l")).distinct().collect()
-            }
-
-            def runs(c) -> bool:
-                if c.target_class is None:  # targetQuery — no label index
-                    return True
-                return self.m(c.target_class) in touched_labels
-
-            props = [c for c in props if runs(c)]
-            node_cons = [c for c in node_cons if runs(c)]
-        checks: List[DataFrame] = []
-        self._delta_uris = delta_list if use_pushdown else None
-        try:
-            for c in props:
-                checks.extend(self.check_property(c, delta_nodes))
-            for c in node_cons:
-                checks.extend(self.check_node(c, delta_nodes))
-        finally:
-            self._delta_uris = None
-        if not checks:
-            return spark.createDataFrame([], RESULT_SCHEMA)
-        return reduce(DataFrame.unionByName, checks)
+        uris = [r["uri"] for r in delta_nodes.limit(pushdown_threshold + 1).collect()]
+        return self._plan(shapes, uris if len(uris) <= pushdown_threshold else delta_nodes)
 
 
 def touched_nodes(checkpoint, run_id: str) -> DataFrame:

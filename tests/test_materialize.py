@@ -228,13 +228,15 @@ def test_pipeline_facade(spark):
 
 def test_cc_fast_path_equals_distributed_loop(spark):
     """The small-graph union-find and the distributed hash-min loop give
-    the same (uri, component) table on a chain, a hub and a lone pair."""
+    the same (uri, component) table on a chain, a hub and a lone pair; an
+    edge with a null endpoint links nothing on either path."""
     from neosemantics_spark.operators.cc import connected_components
 
     chain = [(f"http://c/{i}", f"http://c/{i + 1}") for i in range(12)]
     hub = [("http://h/0", f"http://h/{i}") for i in range(1, 15)]
     edges = spark.createDataFrame(
-        chain[::-1] + hub + [("http://z/b", "http://z/a")], "a string, b string"
+        chain[::-1] + hub + [("http://z/b", "http://z/a"), ("http://n/a", None)],
+        "a string, b string",
     )
     fast = connected_components(edges)
     loop = connected_components(edges, small_graph_limit=0)
@@ -243,3 +245,31 @@ def test_cc_fast_path_equals_distributed_loop(spark):
     got = dict(rows(fast))
     assert got["http://c/12"] == "http://c/0" and got["http://h/9"] == "http://h/0"
     assert got["http://z/b"] == "http://z/a" and len(got) == 13 + 15 + 2
+    assert "http://n/a" not in got and None not in got
+
+
+def test_cached_tables_are_computed_once(spark, raw):
+    """materialize(..., cache_intermediate=True) persists nodes, edges and
+    node_props: export reads them without a single exchange, and the SHACL
+    plan reads nodes and edges as cached relations instead of re-deriving
+    them from the triples."""
+    from neosemantics_spark.operators.export import graph_to_triples
+    from neosemantics_spark.plans.explain import exchange_count, physical_operators
+    from neosemantics_spark.validation.shacl import ShaclValidator, compile_shapes
+
+    cfg = GraphConfig(handle_vocab_uris=KEEP)
+    tables = materialize(transform_triples(raw, cfg), cfg, cache_intermediate=True)
+    export = graph_to_triples(tables, cfg)
+    assert "InMemoryTableScan" in physical_operators(export)
+    assert exchange_count(export) == 0, physical_operators(export)
+    shapes = compile_shapes(
+        """@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix foaf: <http://xmlns.com/foaf/0.1/> .
+foaf:S a sh:NodeShape ; sh:targetClass foaf:Person ;
+  sh:property [ sh:path foaf:knows ; sh:class foaf:Person ] .
+"""
+    )
+    plan = ShaclValidator(tables).validate(shapes)._jdf.queryExecution().optimizedPlan()
+    cached = [line for line in plan.toString().splitlines() if "InMemoryRelation" in line]
+    assert any("labels#" in line for line in cached), plan.toString()[:2000]
+    assert any("src#" in line and "dst#" in line for line in cached), plan.toString()[:2000]

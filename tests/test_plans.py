@@ -115,11 +115,11 @@ def test_parse_filter_prunes_source_columns(spark, sf_dir):
 
 
 def test_shacl_node_set_semi_join_below_cardinality_agg(spark):
-    """VERDICT r2: validate(node_set)/validate_delta must prune focus
-    nodes BEFORE the cardinality aggregation — the node-set semi-join has
-    to sit in the Aggregate's subtree, not as a post-filter on results.
-    Tree prints root-first, so the Aggregate must appear before a LeftSemi
-    in the optimized plan string."""
+    """validate(node_set) must prune focus nodes BEFORE the cardinality
+    aggregation — the node-set semi-join has to sit in the Aggregate's
+    subtree, not as a post-filter on results. Tree prints root-first, so
+    the Aggregate must appear before a LeftSemi in the optimized plan
+    string."""
     import pandas as pd
 
     from neosemantics_spark.config import ARRAY, KEEP, GraphConfig
@@ -146,8 +146,7 @@ ex:S a sh:NodeShape ; sh:targetClass ex:T ;
     v = ShaclValidator(tb)
     shapes = compile_shapes(shapes_doc)
     node_set = spark.createDataFrame(pd.DataFrame({"uri": ["http://example.org/b"]}))
-    [min_count_check] = v.check_property(shapes.props[0], node_set)
-    plan = min_count_check._jdf.queryExecution().optimizedPlan().toString()
+    plan = v.validate(shapes, node_set)._jdf.queryExecution().optimizedPlan().toString()
     first_agg = plan.find("Aggregate")
     assert first_agg >= 0, plan[:800]
     assert "LeftSemi" in plan[first_agg:], (
@@ -168,8 +167,8 @@ def test_chunking_is_narrow(spark, sf_dir):
 
 
 def test_shacl_prop_check_prunes_partitioned_props(spark, tmp_path):
-    """With node_props written via write_node_props_partitioned, a SHACL
-    property check's scan carries a partition filter on prop — the
+    """With node_props written via write_node_props_partitioned, the
+    SHACL plan's props scan carries a partition filter on prop — the
     storage half of the delta-validation win."""
     import pandas as pd
 
@@ -202,9 +201,69 @@ ex:S a sh:NodeShape ; sh:targetClass ex:T ;
   sh:property [ sh:path ex:name ; sh:minCount 1 ] .
 """
     )
-    [check] = ShaclValidator(tb2).check_property(shapes.props[0])
-    plan = formatted_plan(check)
+    plan = formatted_plan(ShaclValidator(tb2).validate(shapes))
     assert any("prop" in f for f in partition_filters(plan)), plan[:1200]
+
+
+def test_shacl_plan_does_not_grow_with_constraints(spark):
+    """One-plan SHACL: 40 property constraints run in as many Spark jobs
+    and exchanges as 4 of the same kinds — the plan grows with the kinds
+    of check, not with their number."""
+    import pandas as pd
+
+    from neosemantics_spark.config import ARRAY, KEEP, GraphConfig
+    from neosemantics_spark.operators.materialize import materialize, transform_triples
+    from neosemantics_spark.plans.explain import exchange_count
+    from neosemantics_spark.sources.parse import extract_triples
+    from neosemantics_spark.validation.shacl import ShaclValidator, compile_shapes
+
+    data = "@prefix ex: <http://example.org/> .\n" + "".join(
+        f'ex:n{i} a ex:T ; ex:o{i % 3} ex:n{(i + 1) % 12} ; '
+        + " ; ".join(f'ex:p{k} "{"x" * (i % 7)}{k}"' for k in range(i % 10))
+        + " .\n"
+        for i in range(12)
+    )
+    src = spark.createDataFrame(
+        pd.DataFrame(
+            [{"repo": "r", "path": "d.ttl", "commit": "c" * 40, "lang": "Turtle", "content": data}]
+        )
+    )
+    cfg = GraphConfig(handle_vocab_uris=KEEP, handle_multival=ARRAY)
+    tb = materialize(transform_triples(extract_triples(src), cfg), cfg, cache_intermediate=True)
+    for df in tb[:3]:
+        df.count()
+
+    def shapes(n_paths):
+        props = "".join(
+            f"  sh:property [ sh:path ex:p{k} ; sh:minCount 1 ] ;\n"
+            f"  sh:property [ sh:path ex:p{k} ; sh:datatype xsd:integer ] ;\n"
+            f"  sh:property [ sh:path ex:p{k} ; sh:maxLength 4 ] ;\n"
+            f"  sh:property [ sh:path ex:o{k % 3} ; sh:class ex:T ] ;\n"
+            for k in range(n_paths)
+        )
+        return compile_shapes(
+            "@prefix sh: <http://www.w3.org/ns/shacl#> .\n"
+            "@prefix ex: <http://example.org/> .\n"
+            "@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .\n"
+            "ex:S a sh:NodeShape ; sh:targetClass ex:T ;\n" + props.rstrip(" ;\n") + " .\n"
+        )
+
+    sc = spark.sparkContext
+    seen = []
+    for n_paths in (1, 10):
+        s = shapes(n_paths)
+        assert len(s.props) == 4 * n_paths
+        res = ShaclValidator(tb).validate(s)
+        n_exchanges = exchange_count(res)
+        group = f"shacl-d3-{n_paths}"
+        sc.setJobGroup(group, group)
+        try:
+            n_rows = len(res.collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        seen.append((len(sc.statusTracker().getJobIdsForGroup(group)), n_exchanges, n_rows))
+    assert seen[0][:2] == seen[1][:2], seen
+    assert seen[1][2] > seen[0][2], seen
 
 
 def test_tokenizer_materialized_once_in_shingles(spark, sf_dir):
