@@ -214,186 +214,6 @@ def q_kg_sameas_refresh(spark: SparkSession, sf: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def _doc_graph_edges(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic synthetic KG edge set over the documents table:
-    every doc i (except the dangling %10==0 nodes) links to
-    doc (2i+1 mod n) and doc (7i+13 mod n) — gcd(7,n)=1 for the sf doc
-    counts, so every node is reachable as a dst; the %10==0 nodes have
-    in-edges but no out-edges, exercising dangling-mass handling."""
-    docs = _docs(spark, sf).select("doc_id")
-    n = docs.count()
-    src = F.concat(F.lit(DOC), F.col("doc_id").cast("string"))
-    linked = docs.filter(F.col("doc_id") % 10 != 0)
-    e1 = linked.select(
-        src.alias("src"),
-        F.concat(F.lit(DOC), ((F.col("doc_id") * 2 + 1) % n).cast("string")).alias("dst"),
-    )
-    e2 = linked.select(
-        src.alias("src"),
-        F.concat(F.lit(DOC), ((F.col("doc_id") * 7 + 13) % n).cast("string")).alias("dst"),
-    )
-    return e1.unionByName(e2)
-
-
-def q_kg_pagerank(spark: SparkSession, sf: str) -> DataFrame:
-    """Fixed-iteration synchronous PageRank over the synthetic doc
-    graph (d=0.85, 5 iterations, uniform dangling-mass repayment) — the
-    entity-importance signal a KG-aware curation pass ranks by. The
-    oracle unrolls the same five iterations as chained CTEs, so the
-    iterative Spark loop (join + map-side-combined sum per round, rank
-    vector pinned each iteration) is value-checked end to end."""
-    from neosemantics_spark.operators.graphalg import pagerank
-
-    return pagerank(_doc_graph_edges(spark, sf)).select("uri", "rank_x1000")
-
-
-def q_kg_degrees(spark: SparkSession, sf: str) -> DataFrame:
-    """Structural degree profile of the synthetic doc graph."""
-    from neosemantics_spark.operators.graphalg import degree_stats
-
-    return degree_stats(_doc_graph_edges(spark, sf)).select(
-        "uri", "out_degree", "in_degree"
-    )
-
-
-def q_kg_khop(spark: SparkSession, sf: str) -> DataFrame:
-    """3-hop out-neighborhood of the %97==0 anchor docs — the subgraph
-    sampler a KG-aware curation pass uses to pick documents around seed
-    entities. Frontier BFS with per-hop visited anti-join; the oracle
-    unrolls the three expansions and takes min(hop) per node (a node
-    first reached at depth d appears in the oracle's level-d set, so the
-    min equals the BFS distance)."""
-    from neosemantics_spark.operators.graphalg import k_hop
-
-    docs = _docs(spark, sf)
-    seeds = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.concat(F.lit(DOC), F.col("doc_id").cast("string")).alias("uri")
-    )
-    return k_hop(_doc_graph_edges(spark, sf), seeds, k=3, direction="out").select(
-        "uri", "hop"
-    )
-
-
-def q_kg_labelprop(spark: SparkSession, sf: str) -> DataFrame:
-    """Synchronous label propagation (4 rounds, lexicographic-min tie
-    break) over the undirected doc graph — entity community detection
-    for cluster-balanced sampling. The oracle replays each round as a
-    vote-count CTE + row_number pick, including the self-loop drop."""
-    from neosemantics_spark.operators.graphalg import label_propagation
-
-    return label_propagation(_doc_graph_edges(spark, sf), iters=4).select(
-        "uri", "community"
-    )
-
-
-def q_kg_ppr(spark: SparkSession, sf: str) -> DataFrame:
-    """Personalized PageRank from the %97==0 anchor docs (the k_hop
-    seed set) — relevance-to-anchors scores; oracle unrolls the five
-    seed-teleport iterations as chained CTEs."""
-    from neosemantics_spark.operators.graphalg import personalized_pagerank
-
-    docs = _docs(spark, sf)
-    seeds = docs.filter(F.col("doc_id") % 97 == 0).select(
-        F.concat(F.lit(DOC), F.col("doc_id").cast("string")).alias("uri")
-    )
-    return personalized_pagerank(_doc_graph_edges(spark, sf), seeds, iters=5).select(
-        "uri", "ppr_x1000"
-    )
-
-
-def q_kg_triangles(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-node triangle count + local clustering coefficient over the
-    undirected doc graph via the degree-ordered forward algorithm; the
-    oracle recounts each node's adjacent-neighbor pairs directly, so the
-    orientation trick is value-checked against the naive definition."""
-    from neosemantics_spark.operators.graphalg import triangle_stats
-
-    return triangle_stats(_doc_graph_edges(spark, sf)).select(
-        "uri", "degree", "triangles", "lcc"
-    )
-
-
-def q_kg_neighbor_sim(spark: SparkSession, sf: str) -> DataFrame:
-    """Neighborhood-Jaccard entity-resolution candidates (shared-
-    neighbor wedge join, |A∪B| from degrees — neighbor sets never
-    materialized) over the undirected doc graph, threshold 0.2."""
-    from neosemantics_spark.operators.graphalg import neighborhood_similarity
-
-    return neighborhood_similarity(
-        _doc_graph_edges(spark, sf), min_jaccard=0.2
-    ).select("a", "b", "intersection", "jaccard")
-
-
-def q_events_sessions(spark: SparkSession, sf: str) -> DataFrame:
-    """Gap-based sessionization (30-min timeout) of the events table —
-    per-user lag/island pass, epoch-microsecond boundaries (exact
-    longs, no float timestamps in the compare)."""
-    from neosemantics_spark.streaming.stream import sessionize
-
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    return sessionize(ev, gap_minutes=30).select(
-        "user_id", "session_idx", "start_us", "end_us", "n_events", "total_value"
-    )
-
-
-def q_events_sessions_streaming(spark: SparkSession, sf: str) -> DataFrame:
-    """The STREAMING sessionizer under the same gap policy as
-    `events_sessions` — identical SQL oracle, which is the point: the
-    stateful operator (applyInPandasWithState, event-time timeout) must
-    add no semantics beyond micro-batch delivery. The events land as
-    two micro-batch files plus a far-future single-event sentinel user;
-    the sentinel advances the watermark past every real session's
-    flush point, so the final cleanup batch emits all of them (only the
-    sentinel's own session stays open, and it is filtered out)."""
-    import shutil
-    import tempfile
-
-    from neosemantics_spark.streaming.stream import streaming_sessionize
-
-    ev = spark.read.parquet(f"{sf}/events.parquet").select("user_id", "ts", "value")
-    root = tempfile.mkdtemp(prefix="ns_sess_stream_")
-    try:
-        src, out, ck = f"{root}/src", f"{root}/out", f"{root}/ck"
-        # split by user parity into two files -> two micro-batches
-        ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.parquet(src)
-        ev.filter(F.col("user_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-        sentinel = spark.createDataFrame(
-            [(-1, "2030-01-01 00:00:00", 0.0)], "user_id long, ts string, value double"
-        ).select("user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-        sentinel.coalesce(1).write.mode("append").parquet(src)
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            streaming_sessionize(stream, gap_minutes=30)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(600)
-        res = (
-            spark.read.parquet(out)
-            .filter(F.col("user_id") >= 0)
-            .select(
-                "user_id", "session_idx", "start_us", "end_us",
-                "n_events", "total_value",
-            )
-        )
-        rows = res.collect()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
-        "user_id long, session_idx long, start_us long, end_us long, "
-        "n_events long, total_value double",
-    )
-
-
 def q_dup_spans(spark: SparkSession, sf: str) -> DataFrame:
     """Sliding-window duplicated-span extraction over the dup-injected
     view (exact copies guarantee full-document spans at every sf; the
@@ -446,19 +266,6 @@ def q_span_dup_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_kg_kcore(spark: SparkSession, sf: str) -> DataFrame:
-    """4-round synchronous 3-core peel over the undirected doc graph —
-    the dense-subgraph filter. The oracle unrolls the same four
-    degree-count + both-endpoint-semi-join rounds as chained CTEs (the
-    engine's early fixpoint exit is sound against a deeper unrolling:
-    extra rounds are no-ops on a fixpoint)."""
-    from neosemantics_spark.operators.graphalg import k_core
-
-    return k_core(_doc_graph_edges(spark, sf), k=3, rounds=4).select(
-        "uri", "core_degree"
-    )
-
-
 def q_curation_prov(spark: SparkSession, sf: str) -> DataFrame:
     """PROV-O provenance triples for an exact-dedup curation decision
     over the dup-injected view (the same view as dedup_exact_groups, so
@@ -478,36 +285,6 @@ def q_curation_prov(spark: SparkSession, sf: str) -> DataFrame:
     return provenance_triples(
         dup_view, kept, "r6", ended_at="2026-01-01T00:00:00Z"
     ).select("subject", "predicate", "object", "is_literal", "datatype", "lang")
-
-
-def q_bpe_word_hist(spark: SparkSession, sf: str) -> DataFrame:
-    """The corpus-sized stage of BPE training: pretokenized word
-    histogram (letter runs | digit runs | single punctuation)."""
-    from neosemantics_spark.operators.bpe import word_histogram
-
-    return word_histogram(_docs(spark, sf)).select("word", "freq")
-
-
-def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
-    """First 20 learned BPE merges over the documents corpus — the
-    iterative merge loop (driver-sequential by nature: round t+1's pair
-    counts depend on round t's rewrite), so no SQL oracle; pinned
-    instead by tests/test_bpe.py against a pure-Python reference."""
-    from neosemantics_spark.operators.bpe import merges_table, train_bpe
-
-    merges = train_bpe(_docs(spark, sf), n_merges=20, min_freq=2)
-    return merges_table(spark, merges).select("rank", "left", "right", "freq")
-
-
-def q_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
-    """Token counts after encoding the corpus with its own 20-merge
-    tokenizer (iterative training upstream → rows-only check; the
-    encode loop itself is pinned by tests/test_bpe.py)."""
-    from neosemantics_spark.operators.bpe import encode_bpe, train_bpe
-
-    docs = _docs(spark, sf)
-    merges = train_bpe(docs, n_merges=20, min_freq=2)
-    return encode_bpe(docs, merges).select("doc_id", "n_tokens")
 
 
 def q_kg_shorten(spark: SparkSession, sf: str) -> DataFrame:
@@ -1374,20 +1151,6 @@ def q_pii_redact(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_events_window(spark: SparkSession, sf: str) -> DataFrame:
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), round4(F.avg("value")).alias("avg_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm").alias("hour"),
-            "event_type",
-            "n",
-            "avg_value",
-        )
-    )
-
-
 def q_iri_functions(spark: SparkSession, sf: str) -> DataFrame:
     src = src_files_from_documents(spark, sf, "N-Triples")
     t = extract_triples(src)
@@ -1658,23 +1421,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_edges": q_kg_edges,
         "kg_incremental": q_kg_incremental,
         "kg_sameas_refresh": q_kg_sameas_refresh,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_degrees": q_kg_degrees,
-        "kg_khop": q_kg_khop,
-        "kg_labelprop": q_kg_labelprop,
-        "kg_ppr": q_kg_ppr,
-        "kg_triangles": q_kg_triangles,
-        "kg_neighbor_sim": q_kg_neighbor_sim,
-        "kg_kcore": q_kg_kcore,
         "dup_spans": q_dup_spans,
         "span_dup_stats": q_span_dup_stats,
         "strip_spans": q_strip_spans,
-        "events_sessions": q_events_sessions,
-        "events_sessions_streaming": q_events_sessions_streaming,
         "curation_prov": q_curation_prov,
-        "bpe_word_hist": q_bpe_word_hist,
-        "bpe_merges": q_bpe_merges,
-        "bpe_encode": q_bpe_encode,
         "kg_shorten": q_kg_shorten,
         "kg_map": q_kg_map,
         "kg_sameas_cc": q_kg_sameas_cc,
@@ -1727,7 +1477,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "fingerprints": q_fingerprints,
         "text_chunks": q_text_chunks,
         "pii_redact": q_pii_redact,
-        "events_window": q_events_window,
         "iri_functions": q_iri_functions,
         "literal_functions": q_literal_functions,
         "inference_nodes": q_inference_nodes,
@@ -2108,156 +1857,6 @@ FROM documents
 UNION ALL
 SELECT DISTINCT '{DOC}src/' || source, '', 0, CAST(NULL AS VARCHAR) FROM documents
 """
-    # PageRank: the five synchronous iterations unrolled as chained CTEs
-    # (dangling-mass scalar + contribution sum + rank update per round),
-    # replaying graphalg.pagerank's loop value-exactly — float-sum order
-    # noise (~1e-16/iter) is far below the output grid
-    _pr_iters = "".join(
-        f""",
-dang{t} AS (SELECT coalesce(sum(rank), 0) AS m FROM r{t - 1} WHERE outdeg IS NULL),
-c{t} AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r{t - 1} r ON e.src = r.uri GROUP BY 1
-),
-r{t} AS (
-  SELECT b.uri, b.outdeg,
-         (1 - 0.85) / nn.n + 0.85 * (coalesce(c.in_c, 0) + dang{t}.m / nn.n) AS rank
-  FROM base b LEFT JOIN c{t} c USING (uri) CROSS JOIN nn CROSS JOIN dang{t}
-)"""
-        for t in range(1, 6)
-    )
-    out["kg_pagerank"] = f"""
-WITH nn AS (SELECT CAST(count(*) AS DOUBLE) AS n, count(*) AS ni FROM documents),
-e AS (
-  SELECT '{DOC}' || doc_id AS src,
-         '{DOC}' || ((doc_id * 2 + 1) % (SELECT ni FROM nn)) AS dst
-  FROM documents WHERE doc_id % 10 <> 0
-  UNION
-  SELECT '{DOC}' || doc_id,
-         '{DOC}' || ((doc_id * 7 + 13) % (SELECT ni FROM nn))
-  FROM documents WHERE doc_id % 10 <> 0
-),
-nodes AS (SELECT src AS uri FROM e UNION SELECT dst FROM e),
-deg AS (SELECT src AS uri, CAST(count(*) AS DOUBLE) AS outdeg FROM e GROUP BY 1),
-base AS (SELECT n.uri, d.outdeg FROM nodes n LEFT JOIN deg d USING (uri)),
-r0 AS (SELECT uri, outdeg, 1.0 / nn.n AS rank FROM base CROSS JOIN nn){_pr_iters}
-SELECT uri, floor(rank * 1000 * 10000 + 0.5) / 10000 AS rank_x1000 FROM r5
-"""
-    out["kg_degrees"] = f"""
-WITH nn AS (SELECT count(*) AS ni FROM documents),
-e AS (
-  SELECT '{DOC}' || doc_id AS src,
-         '{DOC}' || ((doc_id * 2 + 1) % (SELECT ni FROM nn)) AS dst
-  FROM documents WHERE doc_id % 10 <> 0
-  UNION
-  SELECT '{DOC}' || doc_id,
-         '{DOC}' || ((doc_id * 7 + 13) % (SELECT ni FROM nn))
-  FROM documents WHERE doc_id % 10 <> 0
-)
-SELECT uri,
-       CAST(coalesce(o.c, 0) AS BIGINT) AS out_degree,
-       CAST(coalesce(i.c, 0) AS BIGINT) AS in_degree
-FROM (SELECT src AS uri FROM e UNION SELECT dst FROM e) n
-LEFT JOIN (SELECT src, count(*) AS c FROM e GROUP BY 1) o ON n.uri = o.src
-LEFT JOIN (SELECT dst, count(*) AS c FROM e GROUP BY 1) i ON n.uri = i.dst
-"""
-    # shared doc-graph edge CTE for the k-hop / label-prop oracles
-    _dg_e = f"""
-WITH nn AS (SELECT count(*) AS ni FROM documents),
-e AS (
-  SELECT '{DOC}' || doc_id AS src,
-         '{DOC}' || ((doc_id * 2 + 1) % (SELECT ni FROM nn)) AS dst
-  FROM documents WHERE doc_id % 10 <> 0
-  UNION
-  SELECT '{DOC}' || doc_id,
-         '{DOC}' || ((doc_id * 7 + 13) % (SELECT ni FROM nn))
-  FROM documents WHERE doc_id % 10 <> 0
-)"""
-    # k-hop: three expansions unrolled; a node first reached at depth d
-    # appears in level set h_d, so min(hop) == the BFS distance the
-    # Spark frontier/anti-join loop assigns
-    out["kg_khop"] = f"""{_dg_e},
-h0 AS (SELECT '{DOC}' || doc_id AS uri FROM documents WHERE doc_id % 97 = 0),
-h1 AS (SELECT DISTINCT e.dst AS uri FROM e JOIN h0 ON e.src = h0.uri),
-h2 AS (SELECT DISTINCT e.dst AS uri FROM e JOIN h1 ON e.src = h1.uri),
-h3 AS (SELECT DISTINCT e.dst AS uri FROM e JOIN h2 ON e.src = h2.uri),
-lv AS (
-  SELECT uri, 0 AS hop FROM h0
-  UNION ALL SELECT uri, 1 FROM h1
-  UNION ALL SELECT uri, 2 FROM h2
-  UNION ALL SELECT uri, 3 FROM h3
-)
-SELECT uri, CAST(min(hop) AS INTEGER) AS hop FROM lv GROUP BY uri
-"""
-    # label propagation: four synchronous rounds unrolled — per round a
-    # neighbor-label vote count and a (count desc, label asc) pick,
-    # replaying graphalg.label_propagation's min_by(struct(-cnt, lbl))
-    _lp_rounds = "".join(
-        f""",
-v{t} AS (
-  SELECT u.src AS uri, l.community AS lbl, count(*) AS c
-  FROM und u JOIN l{t - 1} l ON u.dst = l.uri GROUP BY 1, 2
-),
-l{t} AS (
-  SELECT uri, lbl AS community FROM (
-    SELECT uri, lbl,
-           row_number() OVER (PARTITION BY uri ORDER BY c DESC, lbl) AS rn
-    FROM v{t}
-  ) WHERE rn = 1
-)"""
-        for t in range(1, 5)
-    )
-    out["kg_labelprop"] = f"""{_dg_e},
-und AS (
-  SELECT src, dst FROM e WHERE src <> dst
-  UNION
-  SELECT dst, src FROM e WHERE src <> dst
-),
-nodes AS (SELECT src AS uri FROM und UNION SELECT dst AS uri FROM und),
-l0 AS (SELECT uri, uri AS community FROM nodes){_lp_rounds}
-SELECT uri, community FROM l4
-"""
-    out["kg_kcore"] = f"""{_dg_e},
-u0 AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e WHERE src <> dst
-),
-d1 AS (
-  SELECT u FROM (SELECT a AS u FROM u0 UNION ALL SELECT b FROM u0)
-  GROUP BY 1 HAVING count(*) >= 3
-),
-u1 AS (
-  SELECT u0.a, u0.b FROM u0
-  JOIN d1 x ON u0.a = x.u JOIN d1 y ON u0.b = y.u
-),
-d2 AS (
-  SELECT u FROM (SELECT a AS u FROM u1 UNION ALL SELECT b FROM u1)
-  GROUP BY 1 HAVING count(*) >= 3
-),
-u2 AS (
-  SELECT u1.a, u1.b FROM u1
-  JOIN d2 x ON u1.a = x.u JOIN d2 y ON u1.b = y.u
-),
-d3 AS (
-  SELECT u FROM (SELECT a AS u FROM u2 UNION ALL SELECT b FROM u2)
-  GROUP BY 1 HAVING count(*) >= 3
-),
-u3 AS (
-  SELECT u2.a, u2.b FROM u2
-  JOIN d3 x ON u2.a = x.u JOIN d3 y ON u2.b = y.u
-),
-d4 AS (
-  SELECT u FROM (SELECT a AS u FROM u3 UNION ALL SELECT b FROM u3)
-  GROUP BY 1 HAVING count(*) >= 3
-),
-u4 AS (
-  SELECT u3.a, u3.b FROM u3
-  JOIN d4 x ON u3.a = x.u JOIN d4 y ON u3.b = y.u
-)
-SELECT u AS uri, CAST(count(*) AS BIGINT) AS core_degree
-FROM (SELECT a AS u FROM u4 UNION ALL SELECT b FROM u4)
-GROUP BY 1 HAVING count(*) >= 3
-"""
     out["strip_spans"] = f"""
 WITH dv AS (
   SELECT doc_id, text FROM documents
@@ -2361,33 +1960,6 @@ SELECT w.doc_id, CAST(len(w.w) AS INT) AS n_tokens,
              * 10000 + 0.5) / 10000 AS dup_frac
 FROM w LEFT JOIN pd ON w.doc_id = pd.doc_id
 """
-    # gap sessionization: identical lag/running-sum islands per user
-    out["events_sessions"] = """
-WITH b AS (SELECT user_id, epoch_us(ts) AS t_us, value AS v FROM events),
-m AS (
-  SELECT user_id, t_us, v,
-         CASE WHEN lag(t_us) OVER (PARTITION BY user_id ORDER BY t_us) IS NULL
-              OR t_us - lag(t_us) OVER (PARTITION BY user_id ORDER BY t_us)
-                 > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM b
-),
-s AS (
-  SELECT user_id, t_us, v,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY t_us
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         AS session_idx
-  FROM m
-)
-SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-       min(t_us) AS start_us, max(t_us) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       floor(sum(v) * 10000 + 0.5) / 10000 AS total_value
-FROM s GROUP BY 1, 2
-"""
-    # streaming sessionizer: same oracle as the batch operator — the
-    # stateful streaming wrapper must add no semantics
-    out["events_sessions_streaming"] = out["events_sessions"]
     # sliding-window duplicated spans over the dup-injected view: the
     # oracle groups by raw gram content (no hash), islands via
     # lag/running-sum per doc
@@ -2426,132 +1998,6 @@ SELECT doc_id, CAST(min(s) AS INT) AS span_start,
        CAST(max(s) + 8 - min(s) AS INT) AS span_tokens
 FROM gs GROUP BY doc_id, grp
 """
-    # personalized PageRank: teleport restricted to the %97 anchor set,
-    # dangling mass repaid to the seeds, five unrolled iterations
-    out["kg_ppr"] = f"""
-WITH nn AS (SELECT count(*) AS ni FROM documents),
-e AS (
-  SELECT '{DOC}' || doc_id AS src,
-         '{DOC}' || ((doc_id * 2 + 1) % (SELECT ni FROM nn)) AS dst
-  FROM documents WHERE doc_id % 10 <> 0
-  UNION
-  SELECT '{DOC}' || doc_id,
-         '{DOC}' || ((doc_id * 7 + 13) % (SELECT ni FROM nn))
-  FROM documents WHERE doc_id % 10 <> 0
-),
-nodes AS (SELECT src AS uri FROM e UNION SELECT dst FROM e),
-sd AS (
-  SELECT uri FROM (SELECT '{DOC}' || doc_id AS uri FROM documents WHERE doc_id % 97 = 0)
-  WHERE uri IN (SELECT uri FROM nodes)
-),
-ns AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM sd),
-deg AS (SELECT src AS uri, CAST(count(*) AS DOUBLE) AS outdeg FROM e GROUP BY 1),
-base AS (
-  SELECT n.uri, d.outdeg,
-         CASE WHEN s.uri IS NOT NULL THEN 1.0 / ns.k ELSE 0.0 END AS p
-  FROM nodes n LEFT JOIN deg d USING (uri) LEFT JOIN sd s ON n.uri = s.uri
-  CROSS JOIN ns
-),
-r0 AS (SELECT uri, outdeg, p, p AS rank FROM base),
-dang1 AS (SELECT coalesce(sum(rank), 0) AS m FROM r0 WHERE outdeg IS NULL),
-c1 AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r0 r ON e.src = r.uri GROUP BY 1
-),
-r1 AS (
-  SELECT b.uri, b.outdeg, b.p,
-         (1 - 0.85) * b.p + 0.85 * (coalesce(c.in_c, 0) + dang1.m * b.p) AS rank
-  FROM base b LEFT JOIN c1 c USING (uri) CROSS JOIN dang1
-),
-dang2 AS (SELECT coalesce(sum(rank), 0) AS m FROM r1 WHERE outdeg IS NULL),
-c2 AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r1 r ON e.src = r.uri GROUP BY 1
-),
-r2 AS (
-  SELECT b.uri, b.outdeg, b.p,
-         (1 - 0.85) * b.p + 0.85 * (coalesce(c.in_c, 0) + dang2.m * b.p) AS rank
-  FROM base b LEFT JOIN c2 c USING (uri) CROSS JOIN dang2
-),
-dang3 AS (SELECT coalesce(sum(rank), 0) AS m FROM r2 WHERE outdeg IS NULL),
-c3 AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r2 r ON e.src = r.uri GROUP BY 1
-),
-r3 AS (
-  SELECT b.uri, b.outdeg, b.p,
-         (1 - 0.85) * b.p + 0.85 * (coalesce(c.in_c, 0) + dang3.m * b.p) AS rank
-  FROM base b LEFT JOIN c3 c USING (uri) CROSS JOIN dang3
-),
-dang4 AS (SELECT coalesce(sum(rank), 0) AS m FROM r3 WHERE outdeg IS NULL),
-c4 AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r3 r ON e.src = r.uri GROUP BY 1
-),
-r4 AS (
-  SELECT b.uri, b.outdeg, b.p,
-         (1 - 0.85) * b.p + 0.85 * (coalesce(c.in_c, 0) + dang4.m * b.p) AS rank
-  FROM base b LEFT JOIN c4 c USING (uri) CROSS JOIN dang4
-),
-dang5 AS (SELECT coalesce(sum(rank), 0) AS m FROM r4 WHERE outdeg IS NULL),
-c5 AS (
-  SELECT e.dst AS uri, sum(r.rank / r.outdeg) AS in_c
-  FROM e JOIN r4 r ON e.src = r.uri GROUP BY 1
-),
-r5 AS (
-  SELECT b.uri, b.outdeg, b.p,
-         (1 - 0.85) * b.p + 0.85 * (coalesce(c.in_c, 0) + dang5.m * b.p) AS rank
-  FROM base b LEFT JOIN c5 c USING (uri) CROSS JOIN dang5
-)
-SELECT uri, floor(rank * 1000 * 10000 + 0.5) / 10000 AS ppr_x1000 FROM r5
-"""
-    # triangles + LCC: the oracle uses the naive neighbor-pair recount
-    # (adjacent-pair join per node) — a different formulation from the
-    # engine's degree-ordered orientation, so agreement checks the
-    # algorithm, not the implementation
-    out["kg_triangles"] = f"""{_dg_e},
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e WHERE src <> dst
-),
-adj AS (SELECT a AS w, b AS v FROM und UNION ALL SELECT b, a FROM und),
-deg AS (SELECT v AS uri, count(*) AS degree FROM adj GROUP BY 1),
-tri AS (
-  SELECT a1.w AS uri, count(*) AS t
-  FROM adj a1
-  JOIN adj a2 ON a1.w = a2.w AND a1.v < a2.v
-  JOIN und u ON u.a = a1.v AND u.b = a2.v
-  GROUP BY 1
-)
-SELECT d.uri, CAST(d.degree AS BIGINT) AS degree,
-       CAST(coalesce(t.t, 0) AS BIGINT) AS triangles,
-       CASE WHEN d.degree >= 2
-            THEN floor(2.0 * coalesce(t.t, 0) / (d.degree * (d.degree - 1.0))
-                       * 10000 + 0.5) / 10000
-            ELSE 0.0 END AS lcc
-FROM deg d LEFT JOIN tri t ON d.uri = t.uri
-"""
-    # neighborhood-Jaccard candidates: wedge join keyed on the shared
-    # neighbor, union size from degrees
-    out["kg_neighbor_sim"] = f"""{_dg_e},
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM e WHERE src <> dst
-),
-adj AS (SELECT a AS w, b AS v FROM und UNION ALL SELECT b, a FROM und),
-deg AS (SELECT v AS uri, count(*) AS degree FROM adj GROUP BY 1),
-pairs AS (
-  SELECT x.v AS a, y.v AS b, count(*) AS i
-  FROM adj x JOIN adj y ON x.w = y.w AND x.v < y.v
-  GROUP BY 1, 2
-)
-SELECT p.a, p.b, CAST(p.i AS BIGINT) AS intersection,
-       floor(p.i / (da.degree + db.degree - p.i) * 10000 + 0.5) / 10000 AS jaccard
-FROM pairs p
-JOIN deg da ON p.a = da.uri
-JOIN deg db ON p.b = db.uri
-WHERE floor(p.i / (da.degree + db.degree - p.i) * 10000 + 0.5) / 10000 >= 0.2
-"""
     # PROV-O curation provenance: every decision row rebuilt by string
     # concatenation over the dup-injected view's exact-dedup outcome
     _prov = "http://www.w3.org/ns/prov#"
@@ -2585,14 +2031,6 @@ SELECT '{_act}', '{_rdf_type}', '{_prov}Activity', FALSE, NULL, NULL
 UNION ALL
 SELECT '{_act}', '{_prov}endedAtTime', '2026-01-01T00:00:00Z', TRUE,
        'http://www.w3.org/2001/XMLSchema#dateTime', NULL
-"""
-    # BPE word histogram: same pretokenizer regex in DuckDB (RE2 \\s and
-    # Java \\s agree on the ASCII whitespace set this corpus uses)
-    out["bpe_word_hist"] = r"""
-SELECT word, count(*) AS freq FROM (
-  SELECT unnest(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS word
-  FROM documents
-) GROUP BY word
 """
     # sameAs refresh: the %10==1 docs merge into their even partners
     # (component = min uri of the pair), the pair's lang prop is last-
@@ -2801,11 +2239,6 @@ SELECT doc_id,
        CAST(len(regexp_extract_all(t, '{_PII_URL}')) AS INT) AS n_urls,
        CAST(len(regexp_extract_all(t, '{_PII_IP}')) AS INT) AS n_ips
 FROM injected
-"""
-    out["events_window"] = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M') AS hour, event_type,
-       count(*) AS n, floor(avg(value) * 10000 + 0.5) / 10000 AS avg_value
-FROM events GROUP BY 1, 2
 """
     out["iri_functions"] = _doc_triples_nt_sql(
         """

@@ -102,23 +102,6 @@ def main() -> None:
         "(dedup.strip_spans); docs stripped to nothing are dropped",
     )
     ap.add_argument(
-        "--tokenizer",
-        default=None,
-        help="BPE tokenizer artifact root (operators/bpe.py layout). "
-        "With --train-tokenizer: trained on this run's accepted docs and "
-        "saved here. Without: loaded, and the accepted docs' BPE token "
-        "count is added to the metrics line (the number a trainer "
-        "budgets by).",
-    )
-    ap.add_argument(
-        "--train-tokenizer",
-        type=int,
-        default=None,
-        metavar="N_MERGES",
-        help="train an N-merge BPE tokenizer on the accepted documents "
-        "and save it to --tokenizer",
-    )
-    ap.add_argument(
         "--compact",
         action="store_true",
         help="after the batch commits, merge all state batch directories "
@@ -188,25 +171,6 @@ def main() -> None:
         )
         res.metrics["n_after_span_dedup"] = curated.count()
     curated.write.mode(mode).partitionBy("split").parquet(args.output)
-    if args.train_tokenizer is not None:
-        if not args.tokenizer:
-            ap.error("--train-tokenizer requires --tokenizer <path>")
-        from neosemantics_spark.operators import bpe
-
-        merges = bpe.train_bpe(curated, n_merges=args.train_tokenizer)
-        bpe.save_bpe(spark, merges, args.tokenizer)
-        res.metrics["tokenizer_merges"] = len(merges)
-    elif args.tokenizer:
-        from pyspark.sql import functions as F
-
-        from neosemantics_spark.operators import bpe
-
-        merges = bpe.load_bpe(spark, args.tokenizer)
-        res.metrics["total_bpe_tokens"] = (
-            bpe.encode_bpe(curated, merges)
-            .agg(F.sum("n_tokens"))
-            .first()[0]
-        )
     print(json.dumps({"output": args.output, **res.metrics}))
 
 

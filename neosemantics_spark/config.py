@@ -50,6 +50,10 @@ CUSTOM_DATA_TYPE_SEPARATOR = "^^"  # graphconfig/Params.java:20-25
 BNODE_PREFIX = "bnode://"  # RDFToLPGStatementProcessor.java:399
 
 
+# fields that no code read; configs stored before their removal still load
+_RETIRED_FIELDS = ("verify_uri_syntax", "stream_triple_limit", "shuffle_partitions")
+
+
 @dataclass
 class GraphConfig:
     handle_vocab_uris: str = SHORTEN
@@ -63,12 +67,9 @@ class GraphConfig:
     # parser-level (RDFParserConfig.java:31-54)
     predicate_exclusion_list: Optional[List[str]] = None
     language_filter: Optional[str] = None
-    verify_uri_syntax: bool = True
     strict_data_type_check: bool = False
-    stream_triple_limit: int = 1000  # RDFParserConfig.java:18
-    # spark-side knobs (no reference analogue; commitSize is replaced by
+    # spark-side knob (no reference analogue; commitSize is replaced by
     # partitioning — SURVEY.md §1.6)
-    shuffle_partitions: int = 32
     hot_predicate_salt: int = 16
 
     def to_json(self) -> str:
@@ -76,7 +77,10 @@ class GraphConfig:
 
     @staticmethod
     def from_json(s: str) -> "GraphConfig":
-        return GraphConfig(**json.loads(s))
+        d = json.loads(s)
+        for k in _RETIRED_FIELDS:
+            d.pop(k, None)
+        return GraphConfig(**d)
 
     @property
     def is_rdf_mode(self) -> bool:

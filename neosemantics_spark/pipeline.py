@@ -53,8 +53,8 @@ def import_rdf(
         # the parse is the expensive Python stage — materialize it once,
         # every downstream branch (props/labels/edges/CC) reuses it
         raw = raw.cache()
-    triples_parsed = raw.count()
-    parse_errors = raw.filter(F.col("parse_error").isNotNull()).count()
+    # one job for both counts: count(parse_error) skips the null rows
+    triples_parsed, parse_errors = raw.agg(F.count("*"), F.count("parse_error")).first()
 
     ns_to_prefix = {}
     if cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):

@@ -11,24 +11,14 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(
-    app: str = "neosemantics-spark",
-    cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
+def get_spark(app: str = "neosemantics-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        env_sp = os.environ.get("SPARK_SHUFFLE_PARTITIONS")
-        shuffle_partitions = int(env_sp) if env_sp else max(cpus, 8)
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{cpus}]")
-        # one task per core by default; AQE re-coalesces. Heavy string
-        # aggregations at high thread counts benefit from cpus*4 (smaller
-        # per-task hash state — measured 21s -> 4s on node_props at 16
-        # threads): the scaling/bench jobs override this themselves.
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # one task per core (at least 8); AQE re-coalesces
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -67,10 +57,7 @@ def _prewarm_python_workers(spark: SparkSession, cpus: int) -> None:
     absorbs N forks × the pandas import (~3 s of the parse stage's cold
     time on this host, re-paid by every fresh process). No query data is
     touched or cached — this is infrastructure warm-up, identical in
-    spirit to a cluster's warm executor pool. Opt out with
-    SPARK_PREWARM_PYTHON=0 (e.g. for Python-free jobs)."""
-    if os.environ.get("SPARK_PREWARM_PYTHON", "1") == "0":
-        return
+    spirit to a cluster's warm executor pool."""
     if getattr(spark, "_ns_python_prewarmed", False):
         return
     try:

@@ -12,9 +12,6 @@ so we synthesize it deterministically (no randomness, no external data):
    test fixtures (multival.ttl, multilang.ttl, customDataTypes.ttl,
    datetime/*.ttl, RDFDataset.trig, beatles.ttls, mini-ld.json … — see
    /root/reference/src/test/resources/) for golden pytest cases.
-3. `scale_corpus` — distributed generator (spark.range → column exprs) for
-   bench runs: K triples per synthetic file, fully JVM-side, so datagen
-   never bottlenecks the throughput measurement.
 """
 
 from __future__ import annotations
@@ -68,70 +65,6 @@ def src_files_from_documents(spark: SparkSession, sf_dir: str, fmt: str = "N-Tri
             F.lit(".nt" if fmt == "N-Triples" else ".ttl"),
         ).alias("path"),
         F.lit("0" * 40).alias("commit"),
-        F.lit(fmt).alias("lang"),
-        content.alias("content"),
-    )
-
-
-def scale_corpus(
-    spark: SparkSession,
-    n_files: int,
-    triples_per_file: int = 50,
-    partitions: int = 64,
-    fmt: str = "Turtle",
-) -> DataFrame:
-    """Distributed deterministic corpus for throughput benches.
-
-    Each file f has `triples_per_file` entity blocks referencing entities
-    of file (f+1) mod n_files — creates cross-file edges so downstream
-    joins/CC have real work. Entirely JVM-side generation.
-    """
-    base = spark.range(0, n_files, 1, partitions).withColumnRenamed("id", "fid")
-    i = F.sequence(F.lit(0), F.lit(triples_per_file - 1))
-    if fmt == "Turtle":
-        header = F.lit(f"@prefix v: <{VOC_NS}> .\n@prefix e: <http://example.org/ent/> .\n")
-        block = F.transform(
-            i,
-            lambda k: F.concat(
-                F.lit("e:n"), F.col("fid"), F.lit("_"), k,
-                F.lit(" a v:Entity ;\n  v:name \"entity "), F.col("fid"), F.lit("_"), k,
-                F.lit("\"@en ;\n  v:rank "), k,
-                F.lit(" ;\n  v:score "), (k * 7 % 100), F.lit(".5 ;\n  v:linksTo e:n"),
-                (F.col("fid") + 1) % F.lit(n_files), F.lit("_"), k,
-                # sparse, realistic entity-resolution signal: ~1 in 8
-                # entities carries an owl:sameAs link into a medium clique
-                # (real corpora link a small fraction of mentions; the
-                # 7-global-hub skew stress lives in bench.py, not here)
-                F.when(
-                    k % 8 == 0,
-                    F.concat(
-                        F.lit(" ;\n  v:sameAs e:canon_"),
-                        (F.col("fid") % 997).cast("string"),
-                        F.lit("_"), (k % 7).cast("string"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit(" .\n"),
-            ),
-        )
-        content = F.concat(header, F.array_join(block, ""))
-        ext = ".ttl"
-    else:  # N-Triples
-        block = F.transform(
-            i,
-            lambda k: F.concat(
-                F.lit("<http://example.org/ent/n"), F.col("fid"), F.lit("_"), k,
-                F.lit(f"> <{VOC_NS}rank> \""), k, F.lit(f"\"^^<{XSD_NS}integer> .\n"),
-                F.lit("<http://example.org/ent/n"), F.col("fid"), F.lit("_"), k,
-                F.lit(f"> <{VOC_NS}linksTo> <http://example.org/ent/n"),
-                (F.col("fid") + 1) % F.lit(n_files), F.lit("_"), k, F.lit("> .\n"),
-            ),
-        )
-        content = F.array_join(block, "")
-        ext = ".nt"
-    return base.select(
-        F.concat(F.lit("org/repo"), F.pmod("fid", F.lit(97))).alias("repo"),
-        F.concat(F.lit("src/gen/f"), F.col("fid"), F.lit(ext)).alias("path"),
-        F.sha2(F.concat(F.lit("commit"), F.col("fid")), 256).substr(1, 40).alias("commit"),
         F.lit(fmt).alias("lang"),
         content.alias("content"),
     )

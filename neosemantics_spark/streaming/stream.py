@@ -10,18 +10,15 @@ StatementStreamer.java:40-56). The Spark-native engine adds true streaming:
   the continuous-ingest analogue of the resumable batch checkpoint
   (neosemantics_spark/checkpoint.py): Spark's own source tracking replaces
   the processed-file anti-join.
-- `windowed_event_counts`: watermarked tumbling-window aggregation for the
-  events stream (late data handled by the watermark).
 - `preview`: the reference's bounded preview (L1/L2 stream-triple-limit,
   RDFParserConfig.java:18) as a plain limit over the batch parse.
+- `streaming_curate`: foreachBatch wrapper that runs the incremental
+  corpus curation (curation.CurationCheckpoint) per micro-batch.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..sources.parse import TRIPLES_SCHEMA, _parse_batches
 
@@ -56,58 +53,6 @@ def run_stream_to_parquet(
     if once:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type — the standard
-    late-data-tolerant streaming aggregation shape."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.avg("value").alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "avg_value")
-    )
-
-
-def streaming_dedup_exact(docs_stream: DataFrame, text_col: str = "text") -> DataFrame:
-    """Cross-micro-batch exact dedup — the custom stateful operator a
-    continuous training-data ingest needs: the first document carrying a
-    given sha2(text) is emitted (min doc_id within the batch for
-    determinism), every later arrival in ANY micro-batch is dropped.
-
-    `applyInPandasWithState` keyed by the content hash: state = one seen
-    flag per hash; Spark's state store gives exactly-once semantics across
-    restarts via the stream checkpoint. The shuffle key is the 64-byte
-    hash, never the document text (same rule as batch dedup_exact)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    hashed = docs_stream.select(
-        "doc_id", F.sha2(F.col(text_col), 256).alias("text_hash")
-    )
-
-    def first_seen(key, pdf_iter, state: GroupState):
-        emitted = state.exists
-        best = None
-        for pdf in pdf_iter:
-            if not emitted and len(pdf):
-                mn = int(pdf.doc_id.min())
-                best = mn if best is None else min(best, mn)
-        if best is not None:
-            state.update((1,))
-            yield pd.DataFrame({"doc_id": [best], "text_hash": [key[0]]})
-
-    return hashed.groupBy("text_hash").applyInPandasWithState(
-        first_seen,
-        outputStructType="doc_id long, text_hash string",
-        stateStructType="seen int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def preview(triples: DataFrame, limit: int = 1000) -> DataFrame:
@@ -160,167 +105,3 @@ def streaming_curate(
     if once:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def sessionize(
-    events: DataFrame,
-    gap_minutes: float = 30.0,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str | None = "value",
-) -> DataFrame:
-    """Gap-based sessionization: per user, consecutive events belong to
-    one session while the inter-event gap is <= `gap_minutes`; a larger
-    gap opens a new session. Returns one row per session:
-    (user_col, session_idx [1-based per user in time order], start_us,
-    end_us [epoch microseconds — exact longs, no float timestamps],
-    n_events, total_value [4-dp, omitted when value_col is None]).
-
-    Spark shape: a lag + running-sum island pass PARTITIONED BY USER
-    (the same per-key window discipline as dedup.duplicated_spans —
-    never a corpus-wide window; users are the natural shuffle key and
-    skew means one hot user, which AQE splits), then one
-    map-side-combined groupBy(user, session). For unbounded streams the
-    same semantics run under `applyInPandasWithState` with the gap as
-    the state timeout; this batch form is the backfill/oracle path.
-    """
-    from pyspark.sql import Window
-
-    if gap_minutes <= 0:
-        raise ValueError(f"gap_minutes must be > 0, got {gap_minutes}")
-    gap_us = int(gap_minutes * 60_000_000)
-    base = events.select(
-        F.col(user_col).alias("_u"),
-        # cast handles TIMESTAMP_NTZ sources; the engine session pins
-        # spark.sql.session.timeZone=UTC so the reinterpretation is
-        # offset-free (matching epoch_us on a naive timestamp)
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t_us"),
-        *( [F.col(value_col).alias("v")] if value_col else [] ),
-    )
-    win = Window.partitionBy("_u").orderBy("t_us")
-    brk = (
-        F.when(F.lag("t_us").over(win).isNull(), 1)
-        .when(F.col("t_us") - F.lag("t_us").over(win) > gap_us, 1)
-        .otherwise(0)
-    )
-    marked = base.withColumn("brk", brk).withColumn(
-        "session_idx",
-        F.sum("brk").over(
-            win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    aggs = [
-        F.min("t_us").alias("start_us"),
-        F.max("t_us").alias("end_us"),
-        F.count("*").alias("n_events"),
-    ]
-    if value_col:
-        from ..utils import round4
-
-        aggs.append(round4(F.sum("v")).alias("total_value"))
-    return marked.groupBy(F.col("_u").alias(user_col), "session_idx").agg(*aggs)
-
-
-def streaming_sessionize(
-    events_stream: DataFrame,
-    gap_minutes: float = 30.0,
-    watermark: str = "2 hours",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming twin of `sessionize` — gap-based sessions as a custom
-    stateful operator (`applyInPandasWithState` keyed by user). State
-    per user = the one OPEN session (start, last-event, count, sum,
-    ordinal). Each micro-batch folds its events in time order into the
-    open session, emitting a session row whenever a gap > `gap_minutes`
-    is PROVEN by a later event; idle sessions are flushed by an
-    event-time timeout at last_event + gap once the watermark passes it
-    (so results eventually match the batch `sessionize` on the same
-    data, session_idx included). Late events older than the watermark
-    are dropped by the watermark operator before they reach state —
-    the standard trade; the batch form is the backfill path.
-
-    Output: (user_id, session_idx, start_us, end_us, n_events,
-    total_value) — the batch operator's schema.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if gap_minutes <= 0:
-        raise ValueError(f"gap_minutes must be > 0, got {gap_minutes}")
-    gap_us = int(gap_minutes * 60_000_000)
-
-    # project/cast FIRST, watermark LAST: a cast projection applied on
-    # top of withWatermark produces a new attribute without the
-    # watermark tag, and event-time timeout then refuses the plan
-    ev = events_stream.select(
-        F.col(user_col).alias("user_id"),
-        F.col(ts_col).cast("timestamp").alias("ts"),
-        F.col(value_col).cast("double").alias("v"),
-    ).withWatermark("ts", watermark)
-
-    def fold(key, pdf_iter, state: GroupState):
-        uid = key[0]
-
-        def emit(tup):
-            start, last, n, tot, idx = tup
-            return pd.DataFrame(
-                {
-                    "user_id": [uid],
-                    "session_idx": [int(idx)],
-                    "start_us": [int(start)],
-                    "end_us": [int(last)],
-                    "n_events": [int(n)],
-                    # math.floor matches the batch round4 (floor-based
-                    # half-up) exactly — int() truncates toward zero,
-                    # which disagrees for negative value sums (ADVICE r6)
-                    "total_value": [float(math.floor(tot * 10000 + 0.5) / 10000)],
-                }
-            )
-
-        if state.hasTimedOut:
-            tup = state.get
-            state.remove()
-            yield emit(tup)
-            return
-        events = []
-        for pdf in pdf_iter:
-            if len(pdf):
-                t_us = (pdf["ts"].astype("int64") // 1000).tolist()
-                events.extend(zip(t_us, pdf["v"].tolist()))
-        events.sort()
-        cur = list(state.get) if state.exists else None
-        for t, v in events:
-            if cur is None:
-                cur = [t, t, 1, v, 1]
-            elif t - cur[1] > gap_us:
-                nxt = [t, t, 1, v, cur[4] + 1]
-                yield emit(cur)
-                cur = nxt
-            else:
-                cur[1] = max(cur[1], t)
-                cur[2] += 1
-                cur[3] += v
-        if cur is not None:
-            state.update(tuple(cur))
-            # flush when the watermark passes the gap after the last
-            # event; if the watermark already passed it (this batch's
-            # events were themselves near-late), clamp to watermark+1 ms
-            # so the session flushes at the very next batch — Spark
-            # refuses a timeout at or before the current watermark
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max((cur[1] + gap_us) // 1000, wm + 1))
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=(
-            "user_id long, session_idx long, start_us long, end_us long, "
-            "n_events long, total_value double"
-        ),
-        stateStructType=(
-            "start_us long, last_us long, n long, tot double, idx long"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -54,16 +54,12 @@ def main() -> None:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        sql = oracles.get(name)
-        status = ""
+        sql = oracles[name]
         try:
             sdf = fn(spark, SF).toPandas()
         except Exception as e:  # noqa: BLE001
             failures.append(name)
             print(f"[FAIL-spark] {name}: {type(e).__name__}: {str(e)[:300]}")
-            continue
-        if sql is None:
-            print(f"[rows-only] {name}: {len(sdf)} rows")
             continue
         try:
             odf = con.sql(sql).df()

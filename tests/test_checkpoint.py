@@ -208,3 +208,24 @@ def test_run_ids_follow_commit_record_not_mtime(spark, tmp_path):
     for rid, t in (("zz", 2_000_000_000), ("aa", 1_000_000_000)):
         os.utime(os.path.join(cp.processed_path, f"run_id={rid}"), (t, t))
     assert cp.run_ids() == ["zz", "aa"]
+
+
+@pytest.mark.parametrize(
+    "lang,content",
+    [("N-Triples", ""), ("Turtle", "# comments only\n@prefix ex: <http://example.org/> .\n")],
+    ids=["empty", "comment-only"],
+)
+def test_file_with_no_triples_commits_empty_run(spark, tmp_path, lang, content):
+    """A new file that parses to zero triples and zero errors writes an
+    empty triples directory; the run still commits: one metrics row with
+    zero counts, the file in the processed ledger, skipped on rerun."""
+    cp = ImportCheckpoint(spark, str(tmp_path / "ckpt_empty"))
+    row = {"repo": "r", "path": "empty", "commit": "c1", "lang": lang, "content": content}
+    src = spark.createDataFrame(pd.DataFrame([row]))
+    r = cp.run(src)
+    assert r.new_files == 1 and r.triples.count() == 0
+    met = cp.metrics().toPandas()
+    assert len(met) == 1
+    assert int(met.triples.iloc[0]) == 0 and int(met.parse_errors.iloc[0]) == 0
+    assert cp.run_ids() == [r.run_id] and cp.processed().count() == 1
+    assert cp.run(src).new_files == 0

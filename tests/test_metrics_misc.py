@@ -261,14 +261,7 @@ def test_entry_contract_queries_all_have_oracles():
     q = set(e.queries().keys())
     o = set(e.oracle_sql().keys())
     assert o <= q, f"orphaned oracles: {o - q}"
-    # the only oracle-less entries allowed are the BPE merge-loop pair:
-    # 20 sequential merges where round t+1's pair counts depend on round
-    # t's greedy rewrite — not SQL-replayable; pinned value-exactly by
-    # tests/test_bpe.py against a pure-Python reference instead (the
-    # corpus-sized stage, bpe_word_hist, DOES have a full hash oracle)
-    rows_only = {"bpe_merges", "bpe_encode"}
-    assert rows_only <= q
-    assert q - o == rows_only, f"unexpected oracle-less queries: {q - o - rows_only}"
+    assert q == o, f"oracle-less queries: {q - o}"
 
 
 def test_taxonomy_path_explain_search(spark):

@@ -1,17 +1,11 @@
 """Streaming ingest, JSON-as-tree import, delete semantics."""
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from neosemantics_spark.operators.delete import apply_delete
 from neosemantics_spark.sources.json_tree import import_json_as_tree
 from neosemantics_spark.sources.parse import extract_triples
-from neosemantics_spark.streaming.stream import (
-    run_stream_to_parquet,
-    stream_triples,
-    windowed_event_counts,
-)
+from neosemantics_spark.streaming.stream import run_stream_to_parquet, stream_triples
 
 
 def _src(spark, rows):
@@ -45,77 +39,6 @@ def test_streaming_triples(spark, tmp_path):
     q2 = run_stream_to_parquet(stream_triples(spark, src_dir), out_dir, ckpt, once=True)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == 4
-
-
-def test_windowed_event_counts_stream(spark, tmp_path, sf_dir):
-    src = str(tmp_path / "events")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    ).parquet(src)
-    agg = windowed_event_counts(stream, "1 hour", "2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("winagg")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from winagg")
-    # append mode emits only watermark-closed windows; at least the early
-    # ones must be present and match the batch equivalent
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-    g = got.select("window_start", "event_type", "n").toPandas()
-    b = batch.toPandas()
-    merged = g.merge(b, on=["window_start", "event_type"], suffixes=("_s", "_b"))
-    assert len(merged) == len(g) > 0
-    assert (merged.n_s == merged.n_b).all()
-
-
-def test_streaming_dedup_exact(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): first-seen wins
-    ACROSS micro-batches — duplicates arriving in later batches drop."""
-    from neosemantics_spark.streaming.stream import streaming_dedup_exact
-
-    src_dir = str(tmp_path / "docs")
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-    b1 = pd.DataFrame(
-        [{"doc_id": 1, "text": "A"}, {"doc_id": 2, "text": "B"},
-         {"doc_id": 3, "text": "A"}, {"doc_id": 4, "text": "C"}]
-    )
-    b2 = pd.DataFrame([{"doc_id": 5, "text": "A"}, {"doc_id": 6, "text": "D"}])
-    spark.createDataFrame(b1).coalesce(1).write.parquet(src_dir)
-    spark.createDataFrame(b2).coalesce(1).write.mode("append").parquet(src_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(src_dir)
-    )
-    q = (
-        streaming_dedup_exact(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.read.parquet(out_dir).toPandas().sort_values("doc_id")
-    # exactly one row per distinct text (A B C D), duplicates dropped
-    # ACROSS batches by the state store; the A-winner depends on which
-    # file's micro-batch ran first (1 or 5) but never both, and 3 (same
-    # batch as 1) never survives
-    assert len(out) == 4 and out.text_hash.nunique() == 4
-    got = set(out.doc_id)
-    assert got in ({1, 2, 4, 6}, {2, 4, 5, 6})
-    assert 3 not in got
 
 
 def test_json_as_tree(spark):
@@ -175,102 +98,3 @@ ex:root ex:child [ ex:name "anon" ] .
     assert res.not_deleted == 3
     left = res.remaining.toPandas()
     assert '1' in set(left.object) and '2' not in set(left[left.predicate == "http://example.org/p"].object)
-
-
-def test_sessionize_gap_islands(spark):
-    import datetime as dt
-
-    from neosemantics_spark.streaming.stream import sessionize
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    rows = [
-        # user 1: events at 0, 10, 25 (one session), then 70, 75 (second)
-        (1, ts(0), 1.0), (1, ts(10), 2.0), (1, ts(25), 3.0),
-        (1, ts(70), 4.0), (1, ts(75), 5.0),
-        # user 2: single event
-        (2, ts(5), 9.5),
-    ]
-    ev = spark.createDataFrame(rows, "user_id int, ts timestamp, value double")
-    got = {
-        (r["user_id"], r["session_idx"]): r
-        for r in sessionize(ev, gap_minutes=30).collect()
-    }
-    assert len(got) == 3
-    s11 = got[(1, 1)]
-    assert s11["n_events"] == 3 and s11["total_value"] == 6.0
-    assert (s11["end_us"] - s11["start_us"]) == 25 * 60_000_000
-    s12 = got[(1, 2)]
-    assert s12["n_events"] == 2 and s12["total_value"] == 9.0
-    assert got[(2, 1)]["n_events"] == 1
-    # exact-gap boundary: 30.0 min gap does NOT break (<= gap keeps)
-    ev2 = spark.createDataFrame(
-        [(3, ts(0), 1.0), (3, ts(30), 1.0)], "user_id int, ts timestamp, value double"
-    )
-    assert sessionize(ev2, gap_minutes=30).count() == 1
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Stateful streaming sessions (applyInPandasWithState, event-time
-    timeout): gaps proven by later events close sessions mid-stream;
-    idle sessions flush when the watermark passes last_event + gap. Two
-    micro-batches whose final watermark is far past every session's
-    flush point -> the emitted set must equal batch sessionize."""
-    import datetime as dt
-
-    from neosemantics_spark.streaming.stream import sessionize, streaming_sessionize
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def ts(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    src_dir = str(tmp_path / "ev")
-    out_dir, ckpt = str(tmp_path / "sout"), str(tmp_path / "sck")
-    b1 = [(1, ts(0), 1.0), (1, ts(10), 2.0), (2, ts(5), 4.0)]
-    b2 = [
-        (1, ts(90), 3.0),            # proves user 1's first session closed
-        (2, ts(200), 1.0),           # proves user 2's session closed
-        (3, ts(6000), 9.0),          # advances the watermark (2h default)
-        (3, ts(6601), 1.0),          # ... far enough to flush everything
-    ]
-    schema = "user_id int, ts timestamp, value double"
-    spark.createDataFrame(b1, schema).coalesce(1).write.parquet(src_dir)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    q = (
-        streaming_sessionize(stream, gap_minutes=30)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["session_idx"]): (
-            r["start_us"], r["end_us"], r["n_events"], r["total_value"]
-        )
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    all_events = spark.createDataFrame(b1 + b2, schema)
-    batch = {
-        (r["user_id"], r["session_idx"]): (
-            r["start_us"], r["end_us"], r["n_events"], r["total_value"]
-        )
-        for r in sessionize(all_events, gap_minutes=30).collect()
-    }
-    # sessions provably closed or watermark-flushed by end of stream:
-    # everything except user 3's last session (no later watermark)
-    open_keys = {(3, 2)}
-    assert set(batch) - set(got) <= open_keys
-    for k, v in got.items():
-        assert batch[k] == v, (k, v, batch[k])
