@@ -75,8 +75,6 @@ def main() -> None:
             "linking unless --no-entity-linking)."
         )
 
-    from pyspark.sql import SparkSession
-
     from neosemantics_spark.checkpoint import ImportCheckpoint
     from neosemantics_spark.config import GraphConfig
     from neosemantics_spark.operators.cc import canonical_map, canonicalize_triples
@@ -87,8 +85,9 @@ def main() -> None:
         write_node_props_partitioned,
     )
     from neosemantics_spark.operators.prefixes import build_prefix_map, collect_namespaces
+    from neosemantics_spark.session import get_submitted_spark
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_submitted_spark("neosemantics-import-job")
     cfg = GraphConfig(
         handle_vocab_uris=args.vocab,
         handle_multival=args.multival,

@@ -11,8 +11,7 @@ from typing import Dict
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..config import PREFIX_SEPARATOR
-from ..operators.prefixes import NS_SPLIT_RE
+from ..operators.prefixes import NS_SPLIT_RE, expand_short_form, shorten_expr
 from ..rdf.terms import XSD
 
 # the reference's three literal-string patterns (Params.java:21-31):
@@ -77,20 +76,12 @@ def get_lang_value(col: Column, lang: str) -> Column:
 
 def short_form_from_full_uri(col: Column, ns_to_prefix: Dict[str, str]) -> Column:
     """n10s.rdf.shortFormFromFullUri (RDFProcedures.java:367-381)."""
-    from ..operators.prefixes import shorten_expr
-
     return shorten_expr(col, ns_to_prefix)
 
 
 def full_uri_from_short_form(col: Column, ns_to_prefix: Dict[str, str]) -> Column:
     """n10s.rdf.fullUriFromShortForm (RDFProcedures.java:349-365)."""
-    expr = col
-    for ns, pfx in sorted(ns_to_prefix.items(), key=lambda kv: kv[1]):
-        p = pfx + PREFIX_SEPARATOR
-        expr = F.when(
-            col.startswith(p), F.concat(F.lit(ns), F.substring(col, len(p) + 1, 1_000_000))
-        ).otherwise(expr)
-    return expr
+    return expand_short_form(col, {p: ns for ns, p in ns_to_prefix.items()})
 
 
 def dt_check(expected_xsd: str, col: Column) -> Column:

@@ -41,7 +41,6 @@ def sameas_edges(triples: DataFrame, extra_predicates: list[str] | None = None) 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
-    on_round=None,
     scratch_dir: str | None = None,
     broadcast_limit: int = 1_000_000,
     small_graph_limit: int = 2_000,
@@ -50,11 +49,6 @@ def connected_components(
     lexicographic-min uri of the equivalence class (deterministic canonical
     representative). Only nodes that appear in an edge are returned —
     isolated uris are their own component by definition (callers coalesce).
-
-    `on_round(round_idx, contracted_edges, seconds)` is an optional
-    observability hook (used by scripts/cc_skew_bench.py to publish
-    rounds/shuffle evidence); when set, the convergence check uses the
-    exact count it already pays for instead of isEmpty().
 
     `scratch_dir` is where the every-few-rounds parquet pins go (see
     below); on a multi-executor cluster pass a shared path (the Iceberg
@@ -83,7 +77,6 @@ def connected_components(
     import gc as _gc
     import os as _os
     import tempfile as _tempfile
-    import time as _time
 
     from pyspark.storagelevel import StorageLevel as _StorageLevel
 
@@ -124,18 +117,16 @@ def connected_components(
     # materializations, not round count, dominated the fixed cost).
     # an edge with a null endpoint links nothing; dropping it here keeps
     # the fast path's non-null schema and the loop's output identical
-    e = edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull()).localCheckpoint(
-        eager=True
-    )
-    if on_round is None and small_graph_limit > 0:
+    e = edges.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+    if small_graph_limit > 0:
         # ---- small-graph fast path: the iterative loop's fixed cost is
         # ~10 eager-materialization jobs (pins, convergence probes,
         # flatten rounds) — for an edge set that fits comfortably on the
-        # driver, a single bounded collect + union-find produces the
-        # IDENTICAL (uri, min-uri component) table in 2 jobs. Same
-        # bounded-driver-state discipline as the broadcast gates here
-        # and in canonicalize_triples: the count is checked BEFORE
-        # collecting, and the distributed loop remains the ≥limit path
+        # driver, ONE bounded collect (at most limit + 1 rows, so driver
+        # state stays bounded, the discipline of the broadcast gates here
+        # and in canonicalize_triples) + union-find produces the
+        # IDENTICAL (uri, min-uri component) table in one job; its length
+        # decides the path. The distributed loop remains the >limit path
         # (UTF-8 binary min == Python str min — code-point order is
         # preserved by UTF-8, so representatives agree byte-for-byte).
         # The default limit is deliberately LOW (2k edges): measured
@@ -143,8 +134,8 @@ def connected_components(
         # local-relation round trip already loses to the distributed
         # loop (kg_cc 3.4/2.4 s vs 2.4 s cold isolated), while the
         # few-hundred-edge graphs of near-dup clustering win outright.
-        n_e = e.limit(small_graph_limit + 1).count()
-        if n_e <= small_graph_limit:
+        rows = e.limit(small_graph_limit + 1).collect()
+        if len(rows) <= small_graph_limit:
             parent: dict = {}
 
             def _find(x: str) -> str:
@@ -155,7 +146,7 @@ def connected_components(
                     parent[x], x = root, parent[x]
                 return root
 
-            for r in e.collect():
+            for r in rows:
                 a, b = r["a"], r["b"]
                 if a not in parent:
                     parent[a] = a
@@ -182,6 +173,7 @@ def connected_components(
                     ]
                 ),
             )
+    e = e.localCheckpoint(eager=True)
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # current component per node
     comp = (
@@ -202,7 +194,6 @@ def connected_components(
     def _map_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if _bcast else df
 
-    _t0 = _time.perf_counter()
     for _round in range(max_iter):
         _reset = _round % _STATS_RESET_EVERY == _STATS_RESET_EVERY - 1
         # rewrite edge endpoints to current components (star contraction).
@@ -216,14 +207,7 @@ def connected_components(
             .distinct(),
             reset_stats=_reset,
         )
-        if on_round is not None:
-            n_ec = ec.count()
-            on_round(_round, n_ec, round(_time.perf_counter() - _t0, 2))
-            _t0 = _time.perf_counter()
-            empty = n_ec == 0
-        else:
-            empty = ec.isEmpty()
-        if empty:
+        if ec.isEmpty():
             break
         sym2 = ec.union(ec.select(F.col("cb").alias("ca"), F.col("ca").alias("cb")))
         delta = sym2.groupBy("ca").agg(F.min("cb").alias("new_c")).filter(

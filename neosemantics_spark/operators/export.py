@@ -25,23 +25,10 @@ from pyspark.sql import functions as F
 from ..config import GraphConfig
 from ..rdf.terms import RDF_LANGSTRING, RDF_TYPE, XSD
 from .materialize import GraphTables
+from .prefixes import expand_short_form
 
 XSD_STRING = XSD + "string"
 BASE_INDIV_NS = "neo4j://graph.individuals#"  # graphconfig/Params.java:10
-
-
-def expand_short_form(df: DataFrame, colname: str, prefix_to_ns: Dict[str, str]) -> DataFrame:
-    """Helper applying the SHORTEN-inverse on one column (needs a stable
-    source column name for substring arithmetic)."""
-    df = df.withColumn("_exp_src", F.col(colname))
-    expr = F.col("_exp_src")
-    for prefix, ns in sorted(prefix_to_ns.items()):
-        p = prefix + "__"
-        expr = F.when(
-            F.col("_exp_src").startswith(p),
-            F.concat(F.lit(ns), F.expr(f"substring(_exp_src, {len(p) + 1})")),
-        ).otherwise(expr)
-    return df.withColumn(colname, expr).drop("_exp_src")
 
 
 def nodes_to_triples(tables: GraphTables, cfg: GraphConfig,
@@ -55,15 +42,13 @@ def nodes_to_triples(tables: GraphTables, cfg: GraphConfig,
         .select(
             F.col("uri").alias("subject"),
             F.lit(RDF_TYPE).alias("predicate"),
-            F.col("label").alias("object"),
+            expand_short_form(F.col("label"), prefix_to_ns).alias("object"),
             F.lit(False).alias("is_literal"),
             F.lit(None).cast("string").alias("datatype"),
             F.lit(None).cast("string").alias("lang"),
             F.col("graph"),
         )
     )
-    if prefix_to_ns:
-        label_rows = expand_short_form(label_rows, "object", prefix_to_ns)
     # properties: one row per array element; reconstruct lang from "v@lang"
     # when keepLangTag was applied (string round-trip, ExportProcessor.java:136-193)
     props = tables.node_props.select(
@@ -94,7 +79,7 @@ def nodes_to_triples(tables: GraphTables, cfg: GraphConfig,
         )
     prop_rows = props.select(
         F.col("uri").alias("subject"),
-        F.col("prop").alias("predicate"),
+        expand_short_form(F.col("prop"), prefix_to_ns).alias("predicate"),
         F.col("value").alias("object"),
         F.lit(True).alias("is_literal"),
         F.when(F.col("lang").isNotNull(), F.lit(RDF_LANGSTRING))
@@ -103,8 +88,6 @@ def nodes_to_triples(tables: GraphTables, cfg: GraphConfig,
         F.col("lang"),
         F.col("graph"),
     )
-    if prefix_to_ns:
-        prop_rows = expand_short_form(prop_rows, "predicate", prefix_to_ns)
     return label_rows.unionByName(prop_rows)
 
 
@@ -114,21 +97,19 @@ def edges_to_triples(tables: GraphTables,
     (LPGRDFToRDFProcesssor.java:236-285)."""
     base = tables.edges.select(
         F.col("src").alias("subject"),
-        F.col("rel").alias("predicate"),
+        expand_short_form(F.col("rel"), prefix_to_ns).alias("predicate"),
         F.col("dst").alias("object"),
         F.lit(False).alias("is_literal"),
         F.lit(None).cast("string").alias("datatype"),
         F.lit(None).cast("string").alias("lang"),
         F.col("graph"),
     )
-    if prefix_to_ns:
-        base = expand_short_form(base, "predicate", prefix_to_ns)
     star = (
         tables.edges.filter(F.col("props").isNotNull())
         .select("src", "rel", "dst", "graph", F.explode("props").alias("prop", "value"))
         .select(
             F.lit(None).cast("string").alias("subject"),
-            F.col("prop").alias("predicate"),
+            expand_short_form(F.col("prop"), prefix_to_ns).alias("predicate"),
             F.col("value").alias("object"),
             F.lit(True).alias("is_literal"),
             F.lit(XSD_STRING).alias("datatype"),
@@ -137,8 +118,6 @@ def edges_to_triples(tables: GraphTables,
             F.array("src", "rel", "dst").alias("sspo"),
         )
     )
-    if prefix_to_ns:
-        star = expand_short_form(star, "predicate", prefix_to_ns)
     return base.withColumn("sspo", F.lit(None).cast("array<string>")).unionByName(star)
 
 

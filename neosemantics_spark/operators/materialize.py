@@ -35,10 +35,11 @@ from .prefixes import shorten_expr
 from .transforms import (
     filter_language,
     filter_predicates,
-    iri_transform_expr,
+    iri_transform_exprs,
+    is_custom_datatype,
     literal_value_expr,
     split_star_rows,
-    with_typed_values,
+    typed_value_columns,
 )
 
 def _ord():
@@ -82,38 +83,28 @@ def transform_triples(
     # edges through dropDuplicates — so paying a full extra shuffle of the
     # whole triples table up front would buy nothing. `dedup_statements`
     # stays available for callers that need a deduped statement stream.
-    t = with_typed_values(t)
     is_type = (F.col("predicate") == RDF_TYPE) & ~F.col("is_literal")
-    t = t.withColumn(
-        "pred_t", iri_transform_expr(F.col("predicate"), cfg, ns_to_prefix, "prop", mapping)
-    )
-    t = t.withColumn(
-        "rel_t", iri_transform_expr(F.col("predicate"), cfg, ns_to_prefix, "rel", mapping)
-    )
-    t = t.withColumn(
-        "label_t",
-        F.when(
-            is_type, iri_transform_expr(F.col("object"), cfg, ns_to_prefix, "label", mapping)
-        ),
-    )
-    t = t.withColumn("value", literal_value_expr(cfg))
+    pred = iri_transform_exprs(F.col("predicate"), cfg, ns_to_prefix, ("prop", "rel"), mapping)
+    label = iri_transform_exprs(F.col("object"), cfg, ns_to_prefix, ("label",), mapping)
+    value = literal_value_expr(cfg)
     if cfg.keep_custom_data_types and cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):
         # re-suffix with shortened datatype: value^^pfx__local
-        from .transforms import _KNOWN_TYPES
-
-        is_custom = F.col("datatype").isNotNull() & ~F.col("datatype").isin(list(_KNOWN_TYPES))
-        if cfg.custom_data_type_prop_list:
-            is_custom = is_custom & F.col("predicate").isin(cfg.custom_data_type_prop_list)
-        t = t.withColumn(
-            "value",
-            F.when(
-                is_custom & F.col("is_literal"),
-                F.concat(
-                    F.col("object"), F.lit("^^"), shorten_expr(F.col("datatype"), ns_to_prefix or {})
-                ),
-            ).otherwise(F.col("value")),
-        )
-    return t
+        value = F.when(
+            is_custom_datatype(cfg) & F.col("is_literal"),
+            F.concat(
+                F.col("object"), F.lit("^^"), shorten_expr(F.col("datatype"), ns_to_prefix or {})
+            ),
+        ).otherwise(value)
+    # one projection: building a plan costs the driver per call, not per row
+    return t.withColumns(
+        {
+            **typed_value_columns(),
+            "pred_t": pred["prop"],
+            "rel_t": pred["rel"],
+            "label_t": F.when(is_type, label["label"]),
+            "value": value,
+        }
+    )
 
 
 def materialize(

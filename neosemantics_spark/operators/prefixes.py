@@ -12,12 +12,13 @@ run-to-run (SURVEY.md §4 "deterministic prefix resolution").
 
 from __future__ import annotations
 
+import json
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..config import STANDARD_PREFIXES
+from ..config import PREFIX_SEPARATOR, STANDARD_PREFIXES
 
 # rdf4j-style local-name boundary: last '#' or '/'
 NS_SPLIT_RE = r"^(.*[#/])([^#/]*)$"
@@ -78,27 +79,37 @@ def validate_namespaces(triples: DataFrame, ns_to_prefix: Dict[str, str]) -> Non
         )
 
 
-def shorten_expr(col, ns_to_prefix: Dict[str, str], strict: bool = False):
-    """IRI column → 'prefix__local'. Implemented as a chained `F.when` over
-    the broadcast-sized prefix dict (compiles to JVM-side expressions, stays
-    inside whole-stage codegen — no Python). Unknown namespace: keep full
-    IRI (strict mode raises at plan-build time via validate_namespaces)."""
-    ns = namespace_of(col)
-    local = local_name_of(col)
-    expr = col  # fallback: full IRI untouched (e.g. no '#'/'/' split)
-    # Longest namespaces first so nested namespaces match correctly.
-    for namespace in sorted(ns_to_prefix, key=len, reverse=True):
-        pfx = ns_to_prefix[namespace]
-        expr = F.when(ns == namespace, F.concat(F.lit(pfx + "__"), local)).otherwise(expr)
-    return expr
+def map_literal(d: Dict[str, str]) -> Column:
+    """A constant map<string,string> column built from ONE string literal:
+    its plan is the same size for 10 entries or 1,000, and the optimizer
+    folds it into a map literal (no per-row JSON parsing)."""
+    return F.from_json(F.lit(json.dumps(d, sort_keys=True)), "map<string,string>")
 
 
-def expand_expr(col, ns_to_prefix: Dict[str, str]):
+def shorten_expr(col: Column, ns_to_prefix: Dict[str, str]) -> Column:
+    """IRI column → 'prefix__local': one constant-map lookup of the IRI's
+    namespace (the `NsPrefixMap` lookup of handleIRI,
+    RDFToLPGStatementProcessor.java:223-269). JVM-side, no Python. Unknown
+    namespace: keep the full IRI (SHORTEN_STRICT raises at plan-build time
+    via validate_namespaces)."""
+    if not ns_to_prefix:
+        return col
+    # a missing key (or a NULL IRI) gives NULL, ANSI mode included
+    m = map_literal({ns: p + PREFIX_SEPARATOR for ns, p in ns_to_prefix.items()})
+    pfx = F.element_at(m, namespace_of(col))
+    return F.coalesce(F.concat(pfx, local_name_of(col)), col)
+
+
+def expand_short_form(col: Column, prefix_to_ns: Optional[Dict[str, str]]) -> Column:
     """'prefix__local' → full IRI (fullUriFromShortForm,
-    rdf/RDFProcedures.java:349-381)."""
-    pfx = F.regexp_extract(col, r"^([^_]+(?:_[^_]+)*?)__(.*)$", 1)
-    local = F.regexp_extract(col, r"^([^_]+(?:_[^_]+)*?)__(.*)$", 2)
-    expr = col
-    for namespace, prefix in sorted(ns_to_prefix.items(), key=lambda kv: kv[1]):
-        expr = F.when(pfx == prefix, F.concat(F.lit(namespace), local)).otherwise(expr)
-    return expr
+    rdf/RDFProcedures.java:349-365). The value's prefix is the greatest
+    'prefix__' key it starts with — among keys that all prefix one value,
+    the longest — looked up once in a constant map. Values without a known
+    prefix (and NULL) pass through unchanged."""
+    if not prefix_to_ns:
+        return col
+    m = map_literal({p + PREFIX_SEPARATOR: ns for p, ns in prefix_to_ns.items()})
+    key = F.array_max(F.filter(F.map_keys(m), lambda k: col.startswith(k)))
+    return F.coalesce(
+        F.concat(F.element_at(m, key), col.substr(F.length(key) + 1, F.length(col))), col
+    )

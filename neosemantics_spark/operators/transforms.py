@@ -10,7 +10,7 @@ Reference semantics: /root/reference/src/main/java/n10s/RDFToLPGStatementProcess
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -24,7 +24,7 @@ from ..config import (
     GraphConfig,
 )
 from ..rdf.terms import RDF_LANGSTRING, XSD
-from .prefixes import local_name_of, shorten_expr
+from .prefixes import local_name_of, map_literal, shorten_expr
 
 WKT_DT = "http://www.opengis.net/ont/geosparql#wktLiteral"
 
@@ -71,6 +71,17 @@ def filter_language(triples: DataFrame, cfg: GraphConfig) -> DataFrame:
 
 
 # ------------------------------------------------------------------ T3–T5
+def is_custom_datatype(cfg: GraphConfig) -> Column:
+    """A literal's datatype is custom (not one the typed columns handle)
+    and, when customDataTypePropList is set, its predicate is listed
+    (RDFToLPGStatementProcessor.java:155-171,189-198)."""
+    dt = F.col("datatype")
+    is_custom = dt.isNotNull() & ~dt.isin(list(_KNOWN_TYPES))
+    if cfg.custom_data_type_prop_list:
+        is_custom = is_custom & F.col("predicate").isin(cfg.custom_data_type_prop_list)
+    return is_custom
+
+
 def literal_value_expr(cfg: GraphConfig) -> Column:
     """T3/T4/T5: canonical string form of a literal object, mirroring
     getObjectValue (RDFToLPGStatementProcessor.java:101-172):
@@ -88,23 +99,21 @@ def literal_value_expr(cfg: GraphConfig) -> Column:
     if cfg.keep_lang_tag:
         out = F.when(lang_tagged, F.concat(v, F.lit("@"), F.col("lang"))).otherwise(out)
     if cfg.keep_custom_data_types:
-        is_custom = dt.isNotNull() & ~dt.isin(list(_KNOWN_TYPES))
-        if cfg.custom_data_type_prop_list:
-            is_custom = is_custom & F.col("predicate").isin(cfg.custom_data_type_prop_list)
-        out = F.when(is_custom, F.concat(v, F.lit("^^"), dt)).otherwise(out)
+        out = F.when(is_custom_datatype(cfg), F.concat(v, F.lit("^^"), dt)).otherwise(out)
     return out
 
 
-def with_typed_values(triples: DataFrame) -> DataFrame:
-    """T3 datatype cast: adds `value_type` + native typed columns.
+def typed_value_columns() -> Dict[str, Column]:
+    """T3 datatype cast: `value_type` + native typed columns, by name.
     Pure `cast`/`to_timestamp`/`to_date` (try_ semantics → NULL on failure,
     matching the reference's parse-fallback-to-string behavior,
     utils/DateUtils.java:21-89)."""
     dt = F.col("datatype")
     v = F.col("object")
     is_lit = F.col("is_literal")
-    value_long = F.when(is_lit & dt.isin(_LONG_TYPES), F.expr("try_cast(object as long)"))
-    value_double = F.when(is_lit & dt.isin(_DOUBLE_TYPES), F.expr("try_cast(object as double)"))
+    is_long, is_double = dt.isin(_LONG_TYPES), dt.isin(_DOUBLE_TYPES)
+    value_long = F.when(is_lit & is_long, F.expr("try_cast(object as long)"))
+    value_double = F.when(is_lit & is_double, F.expr("try_cast(object as double)"))
     value_bool = F.when(is_lit & (dt == XSD + "boolean"), F.expr("try_cast(object as boolean)"))
     # Spark's timestamp cast accepts ISO-8601 incl. 'T', fractions, Z and
     # offsets — mirrors the reference's 3-stage fallback parse
@@ -128,8 +137,8 @@ def with_typed_values(triples: DataFrame) -> DataFrame:
     )
     value_type = (
         F.when(~is_lit, F.lit(None).cast("string"))
-        .when(dt.isin(_LONG_TYPES) & value_long.isNotNull(), "LONG")
-        .when(dt.isin(_DOUBLE_TYPES) & value_double.isNotNull(), "DOUBLE")
+        .when(is_long & value_long.isNotNull(), "LONG")
+        .when(is_double & value_double.isNotNull(), "DOUBLE")
         .when((dt == XSD + "boolean") & value_bool.isNotNull(), "BOOLEAN")
         .when((dt == XSD + "dateTime") & value_ts.isNotNull(), "DATETIME")
         .when((dt == XSD + "date") & value_date.isNotNull(), "DATE")
@@ -137,26 +146,33 @@ def with_typed_values(triples: DataFrame) -> DataFrame:
         .when(dt.isNull() | dt.isin([XSD + "string", RDF_LANGSTRING]), "STRING")
         .otherwise("STRING")  # unparseable typed literal degrades to string
     )
-    return (
-        triples.withColumn("value_long", value_long)
-        .withColumn("value_double", value_double)
-        .withColumn("value_bool", value_bool)
-        .withColumn("value_ts", value_ts)
-        .withColumn("value_date", value_date)
-        .withColumn("value_point", value_point)
-        .withColumn("value_type", value_type)
-    )
+    return {
+        "value_long": value_long,
+        "value_double": value_double,
+        "value_bool": value_bool,
+        "value_ts": value_ts,
+        "value_date": value_date,
+        "value_point": value_point,
+        "value_type": value_type,
+    }
+
+
+def with_typed_values(triples: DataFrame) -> DataFrame:
+    """Adds the `typed_value_columns` in one projection."""
+    return triples.withColumns(typed_value_columns())
 
 
 # ------------------------------------------------------------------ T6
-def iri_transform_expr(
+def iri_transform_exprs(
     col: Column,
     cfg: GraphConfig,
     ns_to_prefix: Optional[Dict[str, str]] = None,
-    kind: str = "prop",
+    kinds: Sequence[str] = ("prop",),
     mapping: Optional[Dict[str, str]] = None,
-) -> Column:
-    """T6 handleIRI (RDFToLPGStatementProcessor.java:223-269).
+) -> Dict[str, Column]:
+    """T6 handleIRI (RDFToLPGStatementProcessor.java:223-269): kind →
+    transformed `col`, all kinds built on one namespace/local-name
+    extraction and one prefix or mapping lookup.
 
     kind ∈ {'prop','rel','label'} — only IGNORE+applyNeo4jNaming cares
     (:240-257: UPPERCASE rels, Capitalised labels, camelCase props).
@@ -164,27 +180,28 @@ def iri_transform_expr(
     """
     mode = cfg.handle_vocab_uris
     if mode == KEEP:
-        return col
+        return {k: col for k in kinds}
     if mode in (SHORTEN, SHORTEN_STRICT):
-        return shorten_expr(col, ns_to_prefix or {}, strict=mode == SHORTEN_STRICT)
+        short = shorten_expr(col, ns_to_prefix or {})
+        return {k: short for k in kinds}
+    if mode not in (IGNORE, MAP):
+        raise ValueError(f"unknown handleVocabUris mode {mode}")
     # IGNORE / MAP share the local-name fallback
     local = local_name_of(col)
     local = F.when(local == "", col).otherwise(local)
-    if cfg.apply_neo4j_naming:
-        if kind == "rel":
-            local = F.upper(local)
-        elif kind == "label":
-            local = F.concat(F.upper(local.substr(1, 1)), local.substr(2, 10_000))
-        else:
-            local = F.concat(F.lower(local.substr(1, 1)), local.substr(2, 10_000))
-    if mode == IGNORE:
-        return local
-    if mode == MAP:
-        expr = local
-        for iri, mapped in sorted((mapping or {}).items()):
-            expr = F.when(col == iri, F.lit(mapped)).otherwise(expr)
-        return expr
-    raise ValueError(f"unknown handleVocabUris mode {mode}")
+    mapped = F.element_at(map_literal(mapping), col) if mode == MAP and mapping else None
+    out = {}
+    for kind in kinds:
+        name = local
+        if cfg.apply_neo4j_naming:
+            if kind == "rel":
+                name = F.upper(local)
+            elif kind == "label":
+                name = F.concat(F.upper(local.substr(1, 1)), local.substr(2, 10_000))
+            else:
+                name = F.concat(F.lower(local.substr(1, 1)), local.substr(2, 10_000))
+        out[kind] = name if mapped is None else F.coalesce(mapped, name)
+    return out
 
 
 # ------------------------------------------------------------------ rows

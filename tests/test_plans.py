@@ -266,6 +266,42 @@ def test_shacl_plan_does_not_grow_with_constraints(spark):
     assert seen[1][2] > seen[0][2], seen
 
 
+def _expression_nodes(df):
+    """Expression nodes in the analyzed plan (one treeString line each)."""
+    n, stack = 0, [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        exprs = node.expressions()
+        n += sum(len(exprs.apply(i).treeString().splitlines()) for i in range(exprs.size()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n
+
+
+def test_prefix_plans_do_not_grow_with_vocabulary(spark):
+    """SHORTEN import and export resolve prefixes by one constant-map
+    lookup: the analyzed plans of transform_triples and graph_to_triples
+    hold as many expression nodes with 200 namespaces as with 10."""
+    from neosemantics_spark.config import SHORTEN, GraphConfig
+    from neosemantics_spark.operators.export import graph_to_triples
+    from neosemantics_spark.operators.materialize import materialize, transform_triples
+    from neosemantics_spark.operators.prefixes import build_prefix_map, collect_namespaces
+    from neosemantics_spark.sources.datagen import fixture_corpus
+    from neosemantics_spark.sources.parse import extract_triples
+
+    cfg = GraphConfig(handle_vocab_uris=SHORTEN)
+    raw = extract_triples(fixture_corpus(spark))
+    used = collect_namespaces(raw)
+    seen = []
+    for n_extra in (10, 200):
+        ns = build_prefix_map(used + [f"http://v{i}.example.org/ns#" for i in range(n_extra)])
+        t = transform_triples(raw, cfg, ns)
+        g = graph_to_triples(materialize(t, cfg), cfg, {p: n for n, p in ns.items()})
+        seen.append((len(ns), _expression_nodes(t), _expression_nodes(g)))
+    assert seen[0][0] < seen[1][0], seen
+    assert seen[0][1:] == seen[1][1:], seen
+
+
 def test_tokenizer_materialized_once_in_shingles(spark, sf_dir):
     """shingle_set / top_ngrams / _doc_bigrams must evaluate the
     regex+split tokenizer ONCE per row in its own projection. If

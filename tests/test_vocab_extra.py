@@ -9,7 +9,12 @@ from pyspark.sql import functions as F
 from neosemantics_spark.config import ARRAY, IGNORE, KEEP, MAP, GraphConfig
 from neosemantics_spark.functions import full_uri_from_short_form, short_form_from_full_uri
 from neosemantics_spark.operators.materialize import materialize, transform_triples
-from neosemantics_spark.operators.prefixes import build_prefix_map
+from neosemantics_spark.operators.prefixes import (
+    build_prefix_map,
+    expand_short_form,
+    local_name_of,
+    namespace_of,
+)
 from neosemantics_spark.sources.parse import extract_triples
 
 TTL = """@prefix ex: <http://example.org/> .
@@ -102,3 +107,84 @@ def test_shortform_roundtrip_functions(spark):
         "http://other.org/ns#x",
         "http://www.w3.org/2000/01/rdf-schema#label",
     ]
+
+
+def _chain_shorten(col, ns_to_prefix):
+    """Reference: one CASE branch per namespace, longest namespace first."""
+    ns, local = namespace_of(col), local_name_of(col)
+    expr = col
+    for namespace in sorted(ns_to_prefix, key=len, reverse=True):
+        pfx = ns_to_prefix[namespace]
+        expr = F.when(ns == namespace, F.concat(F.lit(pfx + "__"), local)).otherwise(expr)
+    return expr
+
+
+def _chain_expand_export(col_name, prefix_to_ns):
+    """Reference: one CASE branch per prefix, greatest prefix first (export form)."""
+    expr = F.col(col_name)
+    for prefix, ns in sorted(prefix_to_ns.items()):
+        p = prefix + "__"
+        expr = F.when(
+            F.col(col_name).startswith(p),
+            F.concat(F.lit(ns), F.expr(f"substring({col_name}, {len(p) + 1})")),
+        ).otherwise(expr)
+    return expr
+
+
+def _chain_expand_scalar(col, ns_to_prefix):
+    """Reference: one CASE branch per prefix, greatest prefix first (scalar form)."""
+    expr = col
+    for ns, pfx in sorted(ns_to_prefix.items(), key=lambda kv: kv[1]):
+        p = pfx + "__"
+        expr = F.when(
+            col.startswith(p), F.concat(F.lit(ns), F.substring(col, len(p) + 1, 1_000_000))
+        ).otherwise(expr)
+    return expr
+
+
+@pytest.mark.parametrize(
+    "ns_to_prefix",
+    [
+        {
+            "http://a/": "a",
+            "http://a/b/": "ab",  # nested namespaces
+            "http://x.org/ns#": "ns1",
+            "http://y.org/": "ns10",  # ns1 is a prefix of ns10
+            "http://p.org/": "p",
+            "http://pu.org/": "p_",  # 'p___x' starts with 'p__' and 'p___'
+        },
+        {},
+    ],
+    ids=["vocab", "empty"],
+)
+def test_prefix_lookup_matches_case_chains(spark, ns_to_prefix):
+    """shorten_expr / expand_short_form (one constant-map lookup each) and
+    the scalar functions over them agree, value for value, with CASE
+    chains of one branch per namespace or prefix."""
+    prefix_to_ns = {p: ns for ns, p in ns_to_prefix.items()}
+    iris = [
+        "http://a/x", "http://a/b/y", "http://a/b/c/z", "http://x.org/ns#q",
+        "http://y.org/r", "http://pu.org/s", "http://y.org/", "urn:isbn:123", "plain",
+        "", None,
+    ]
+    shorts = [
+        "a__x", "ab__y", "ns1__q", "ns10__r", "ns10__", "p___x", "p__x", "p_x",
+        "a__b__c", "nounderscore", "unknown__x", "__x", "", None,
+    ]
+    df = spark.createDataFrame([(v,) for v in iris + shorts], "v string")
+    v = F.col("v")
+    rows = df.select(
+        short_form_from_full_uri(v, ns_to_prefix).alias("short"),
+        _chain_shorten(v, ns_to_prefix).alias("short_chain"),
+        expand_short_form(v, prefix_to_ns).alias("full"),
+        _chain_expand_export("v", prefix_to_ns).alias("full_export_chain"),
+        full_uri_from_short_form(v, ns_to_prefix).alias("full_scalar"),
+        _chain_expand_scalar(v, ns_to_prefix).alias("full_scalar_chain"),
+    ).collect()
+    assert len(rows) == len(iris) + len(shorts)
+    for r in rows:
+        assert r["short"] == r["short_chain"], r
+        assert r["full"] == r["full_export_chain"] == r["full_scalar"] == r["full_scalar_chain"], r
+    if ns_to_prefix:
+        assert {r["short"] for r in rows} >= {"a__x", "ab__y", "ns1__q", "ns10__r", "urn:isbn:123"}
+        assert {r["full"] for r in rows} >= {"http://pu.org/x", "http://y.org/r", "http://a/b__c"}
