@@ -162,10 +162,14 @@ def connected_components(
                 if m is None or u < m:
                     comp_min[root] = u
             out = [(u, comp_min[_find(u)]) for u in sorted(parent)]
+            import pandas as pd
             from pyspark.sql.types import StringType, StructField, StructType
 
+            # from pandas (Arrow), the table is a local relation: its rows
+            # sit in the plan, so Spark knows its exact size and
+            # canonicalize_triples needs no count to broadcast it
             return edges.sparkSession.createDataFrame(
-                out,
+                pd.DataFrame(out, columns=["uri", "component"], dtype=object),
                 StructType(
                     [
                         StructField("uri", StringType(), False),
@@ -292,8 +296,13 @@ def canonicalize_triples(
     ran SLOWER than N with an unconditional broadcast). Above the limit we
     leave the strategy to AQE (shuffle join; skew-join handles hot
     components)."""
-    small = comp.limit(broadcast_limit + 1).count() <= broadcast_limit
-    c = F.broadcast(comp) if small else comp
+    if comp.isLocal():
+        # a local relation (the CC fast path's table) carries its exact
+        # size: the planner's own broadcast threshold decides, no job
+        c = comp
+    else:
+        small = comp.limit(broadcast_limit + 1).count() <= broadcast_limit
+        c = F.broadcast(comp) if small else comp
     out = (
         triples.join(
             c.select(F.col("uri").alias("subject"), F.col("component").alias("_cs")),
