@@ -35,21 +35,18 @@ def local_name_of(col):
 def collect_namespaces(triples: DataFrame) -> List[str]:
     """Distinct namespaces of predicates + rdf:type objects + datatypes —
     the set the reference learns during import. Distributed agg, tiny result."""
-    preds = triples.select(namespace_of("predicate").alias("ns"))
-    dts = triples.filter(F.col("datatype").isNotNull()).select(
-        namespace_of("datatype").alias("ns")
+    is_type = (
+        F.col("predicate") == "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    ) & ~F.col("is_literal")
+    # one scan: the three namespaces of a row, NULL where they do not apply
+    ns = F.explode(
+        F.array(
+            namespace_of("predicate"),
+            F.when(F.col("datatype").isNotNull(), namespace_of("datatype")),
+            F.when(is_type, namespace_of("object")),
+        )
     )
-    types = triples.filter(
-        (F.col("predicate") == "http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
-        & ~F.col("is_literal")
-    ).select(namespace_of("object").alias("ns"))
-    rows = (
-        preds.unionByName(dts)
-        .unionByName(types)
-        .filter(F.col("ns") != "")
-        .distinct()
-        .collect()
-    )
+    rows = triples.select(ns.alias("ns")).filter(F.col("ns") != "").distinct().collect()
     return sorted(r["ns"] for r in rows)
 
 
