@@ -32,7 +32,6 @@ from neosemantics_spark.operators import (
     datasets,
     dedup,
     inference,
-    lm,
     search,
     similarity,
     text,
@@ -264,27 +263,6 @@ def q_span_dup_stats(spark: SparkSession, sf: str) -> DataFrame:
     return span_dup_stats(dup_view, n=8, min_docs=2).select(
         "doc_id", "n_tokens", "dup_tokens", "dup_frac"
     )
-
-
-def q_curation_prov(spark: SparkSession, sf: str) -> DataFrame:
-    """PROV-O provenance triples for an exact-dedup curation decision
-    over the dup-injected view (the same view as dedup_exact_groups, so
-    the dropped set is non-empty at every sf): kept docs get
-    prov:wasGeneratedBy, dropped get prov:wasInvalidatedBy, every doc is
-    typed prov:Entity, plus the typed+timestamped activity rows. Joins
-    only — the oracle rebuilds every row with string concatenation."""
-    from neosemantics_spark.operators.dedup import dedup_exact
-    from neosemantics_spark.operators.provenance import provenance_triples
-
-    docs = _docs(spark, sf).select("doc_id", "text")
-    tenth = docs.filter(F.col("doc_id") % 10 == 0)
-    dup_view = docs.unionByName(
-        tenth.withColumn("doc_id", F.col("doc_id") + 10_000_000)
-    ).unionByName(tenth.withColumn("doc_id", F.col("doc_id") + 20_000_000))
-    kept = dedup_exact(dup_view)
-    return provenance_triples(
-        dup_view, kept, "r6", ended_at="2026-01-01T00:00:00Z"
-    ).select("subject", "predicate", "object", "is_literal", "datatype", "lang")
 
 
 def q_kg_shorten(spark: SparkSession, sf: str) -> DataFrame:
@@ -670,16 +648,6 @@ def q_top_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     return search.top_ngrams(_docs(spark, sf), n=2, k=20).select("ngram", "cnt")
 
 
-def q_lm_score(spark: SparkSession, sf: str) -> DataFrame:
-    """Bigram-LM quality scoring: train on even doc_ids, score the held
-    out odd half (the perplexity-filter signal of a pretraining build)."""
-    docs = _docs(spark, sf)
-    model = lm.train_bigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    return lm.lm_score(docs.filter(F.col("doc_id") % 2 == 1), model).select(
-        "doc_id", "n_bigrams", "avg_logp"
-    )
-
-
 def q_dedup_containment(spark: SparkSession, sf: str) -> DataFrame:
     """Asymmetric n-gram containment over a truncation-injected view:
     every doc_id % 7 == 0 document reappears (id +40M) truncated to its
@@ -755,22 +723,6 @@ def q_token_budget_sample(spark: SparkSession, sf: str) -> DataFrame:
     return datasets.token_budget_sample(
         _docs(spark, sf), {"en": 6000, "de": 2500, "zh": 1_000_000}
     ).select("doc_id", "lang")
-
-
-def q_nb_classify(spark: SparkSession, sf: str) -> DataFrame:
-    """Multinomial NB document classifier (the deterministic analogue
-    of the fastText quality/source classifier): trained on even-id
-    documents with their language as the label, scoring the odd-id
-    half — (doc_id, predicted, score) with score the winning mean token
-    log-likelihood + log-prior. Count-table model: two groupBys to
-    train, narrow equi-joins to score, exactly SQL-replayable."""
-    from neosemantics_spark.operators import classify
-
-    docs = _docs(spark, sf)
-    train = docs.filter(F.col("doc_id") % 2 == 0)
-    test = docs.filter(F.col("doc_id") % 2 == 1)
-    model = classify.train_nb(train, "lang")
-    return classify.nb_score(test, model).select("doc_id", "predicted", "score")
 
 
 def q_temperature_mix(spark: SparkSession, sf: str) -> DataFrame:
@@ -861,250 +813,6 @@ def q_semantic_decontam_lsh(spark: SparkSession, sf: str) -> DataFrame:
     return similarity.semantic_decontaminate(
         train, bench, threshold=0.35, prefilter="lsh", nbits=4, bands=2, probe_bits=1
     ).select("vec_id", "max_bench_cosine", "n_bench_hits")
-
-
-def q_curation_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic two-batch replay of the incremental curation state
-    machine (CurationCheckpoint) — the cross-batch exact-hash anti-join,
-    persisted LSH bucket index, Jaccard verification against historical
-    reps, the no-chaining drop rule, min-id in-batch clustering, and the
-    split assignment, end to end through the persisted parquet state.
-
-    Batch 1 = docs with doc_id % 3 < 2. Batch 2 = docs with
-    doc_id % 3 > 0 re-submitted under ids +10M (the % 3 == 1 overlap is
-    exact-dup-dropped against batch 1's hash state; the % 3 == 2 docs
-    are genuinely new), plus two near-dup variant families of the
-    % 3 == 0 docs (suffix tokens, ids +20M/+30M) that must match batch
-    1's historical reps through the bucket index and be dropped without
-    chaining their in-batch neighbors away. Returns the accepted
-    (doc_id, split) set across both batches; the DuckDB oracle replays
-    the identical policy in SQL (minhash/LSH/Jaccard/recursive-CTE CC).
-    LM filtering and decontamination are disabled — they are stateless
-    per batch and carry their own oracles (lm_score*, decontam)."""
-    import shutil
-    import tempfile
-
-    from neosemantics_spark.curation import CurationCheckpoint
-
-    docs = _docs(spark, sf).select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") % 3 < 2)
-    third = docs.filter(F.col("doc_id") % 3 == 0)
-    b2 = (
-        docs.filter(F.col("doc_id") % 3 > 0)
-        .select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
-        .unionByName(
-            third.select(
-                (F.col("doc_id") + 20_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zzznear")).alias("text"),
-            )
-        )
-        .unionByName(
-            third.select(
-                (F.col("doc_id") + 30_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" qqfresh")).alias("text"),
-            )
-        )
-    )
-    root = tempfile.mkdtemp(prefix="curation_state_")
-    try:
-        cp = CurationCheckpoint(spark, root)
-        r1 = cp.run(b1, lm_quantile=0.0)
-        r2 = cp.run(b2, lm_quantile=0.0)
-        out = r1.curated.select("doc_id", "split").unionByName(
-            r2.curated.select("doc_id", "split")
-        )
-        # materialize before the state directory disappears
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q_curation_semantic(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-batch SemDeDup through the incremental curation state
-    machine: two batches of documents with all-unique synthetic texts
-    (so every text-side stage is provably a no-op) carry the sf
-    embeddings (vec_id < 250 = batch 1, rest = batch 2); semantic dedup
-    at cosine 0.5 (nbits=4, bands=2) runs in-batch for batch 1, then
-    batch 2 dedups against BOTH the persisted emb_buckets/emb_vecs
-    state and itself (no chaining through history-dropped docs). The
-    oracle replays bucketing, cross-batch matching, and both recursive
-    CC closures in SQL — hash-exact including LSH misses."""
-    import shutil
-    import tempfile
-
-    from neosemantics_spark.curation import CurationCheckpoint
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    docs = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.format_string(
-            "w%da w%db w%dc w%dd", "vec_id", "vec_id", "vec_id", "vec_id"
-        ).alias("text"),
-    )
-    vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    b1 = docs.filter(F.col("doc_id") < 250)
-    b2 = docs.filter(F.col("doc_id") >= 250)
-    root = tempfile.mkdtemp(prefix="curation_sem_")
-    try:
-        cp = CurationCheckpoint(spark, root)
-        opts = dict(
-            lm_quantile=0.0,
-            semantic_dedup_threshold=0.5,
-            semantic_nbits=4,
-            semantic_bands=2,
-            embeddings=vecs,
-        )
-        r1 = cp.run(b1, **opts)
-        r2 = cp.run(b2, **opts)
-        out = r1.curated.select("doc_id", F.lit(1).alias("batch")).unionByName(
-            r2.curated.select("doc_id", F.lit(2).alias("batch"))
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q_curation_streaming(spark: SparkSession, sf: str) -> DataFrame:
-    """The STREAMING curation layer under the same two-batch policy as
-    `curation_incremental`: batch 1 lands as a parquet file and an
-    availableNow foreachBatch stream curates it; batch 2 is appended and
-    a second stream run (same stream checkpoint — only the new file is
-    processed) curates it against the persisted state. The accepted
-    (doc_id, split) set must equal the DuckDB replay of the policy —
-    identical SQL oracle to curation_incremental, which is the point:
-    the streaming wrapper must add no semantics beyond micro-batch
-    delivery. This closes the last oracle-less component (round-3
-    verdict: incremental/streaming curation rested on pytest only)."""
-    import shutil
-    import tempfile
-
-    from neosemantics_spark.streaming.stream import streaming_curate
-
-    docs = _docs(spark, sf).select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") % 3 < 2)
-    third = docs.filter(F.col("doc_id") % 3 == 0)
-    b2 = (
-        docs.filter(F.col("doc_id") % 3 > 0)
-        .select((F.col("doc_id") + 10_000_000).alias("doc_id"), "text")
-        .unionByName(
-            third.select(
-                (F.col("doc_id") + 20_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" zzznear")).alias("text"),
-            )
-        )
-        .unionByName(
-            third.select(
-                (F.col("doc_id") + 30_000_000).alias("doc_id"),
-                F.concat(F.col("text"), F.lit(" qqfresh")).alias("text"),
-            )
-        )
-    )
-    root = tempfile.mkdtemp(prefix="curation_stream_")
-    src, out, ck, state = (f"{root}/{d}" for d in ("src", "out", "ck", "state"))
-    try:
-        b1.write.parquet(src)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        streaming_curate(stream, state, out, ck, lm_quantile=0.0).awaitTermination(600)
-        b2.write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema("doc_id long, text string").parquet(src)
-        streaming_curate(stream2, state, out, ck, lm_quantile=0.0).awaitTermination(600)
-        return (
-            spark.read.parquet(out)
-            .select("doc_id", F.col("split").cast("string").alias("split"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q_curation_streaming_semantic(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING parity for the round-5 semantic curation stage
-    (VERDICT r5 item 2): the exact `curation_semantic` scenario — two
-    batches of unique-text docs carrying the sf embeddings, SemDeDup at
-    cosine 0.5 cross-batch through the persisted emb_buckets/emb_vecs
-    state — but each batch is delivered as a parquet file through an
-    availableNow foreachBatch stream (`streaming_curate`, which forwards
-    curation opts to CurationCheckpoint.run). The oracle is the SAME SQL
-    as `curation_semantic`: the streaming wrapper must add no semantics
-    beyond micro-batch delivery."""
-    import shutil
-    import tempfile
-
-    from neosemantics_spark.streaming.stream import streaming_curate
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    docs = emb.select(
-        F.col("vec_id").alias("doc_id"),
-        F.format_string(
-            "w%da w%db w%dc w%dd", "vec_id", "vec_id", "vec_id", "vec_id"
-        ).alias("text"),
-    )
-    vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    b1 = docs.filter(F.col("doc_id") < 250)
-    b2 = docs.filter(F.col("doc_id") >= 250)
-    root = tempfile.mkdtemp(prefix="curation_stream_sem_")
-    src, out, ck, state = (f"{root}/{d}" for d in ("src", "out", "ck", "state"))
-    opts = dict(
-        lm_quantile=0.0,
-        semantic_dedup_threshold=0.5,
-        semantic_nbits=4,
-        semantic_bands=2,
-        embeddings=vecs,
-    )
-    try:
-        b1.write.parquet(src)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        streaming_curate(stream, state, out, ck, **opts).awaitTermination(600)
-        b2.write.mode("append").parquet(src)
-        stream2 = spark.readStream.schema("doc_id long, text string").parquet(src)
-        streaming_curate(stream2, state, out, ck, **opts).awaitTermination(600)
-        return (
-            spark.read.parquet(out)
-            .select(
-                "doc_id",
-                F.when(F.col("doc_id") < 250, 1).otherwise(2).alias("batch"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def q_lm_score_trigram(spark: SparkSession, sf: str) -> DataFrame:
-    """Interpolated (Jelinek-Mercer) trigram-LM scoring: train on even
-    doc_ids, score the held-out odd half. One fidelity step below KenLM
-    (fixed λ, add-α unigram floor instead of Kneser-Ney), same
-    n-gram-keyed join shape at every order."""
-    docs = _docs(spark, sf)
-    model = lm.train_trigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    return lm.lm_score_trigram(docs.filter(F.col("doc_id") % 2 == 1), model).select(
-        "doc_id", "n_trigrams", "avg_logp"
-    )
-
-
-def q_lm_score_kn(spark: SparkSession, sf: str) -> DataFrame:
-    """Interpolated Kneser-Ney trigram scoring (absolute discount +
-    continuation counts — the model-table step from JM toward KenLM
-    fidelity): train on even doc_ids, score the held-out odd half."""
-    docs = _docs(spark, sf)
-    model = lm.train_trigram_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    return lm.lm_score_kn(docs.filter(F.col("doc_id") % 2 == 1), model).select(
-        "doc_id", "n_trigrams", "avg_logp"
-    )
-
-
-def q_lm_score_kn5(spark: SparkSession, sf: str) -> DataFrame:
-    """Order-5 modified (three-discount) Kneser-Ney scoring — the
-    KenLM-fidelity boundary lm.py's header names: train on even doc_ids,
-    score the held-out odd half. The oracle replays the full
-    count-of-counts discount estimation, the continuation-count chain,
-    per-context backoff-mass buckets, and the five interpolation levels
-    hash-exact."""
-    docs = _docs(spark, sf)
-    model = lm.train_kn5_lm(docs.filter(F.col("doc_id") % 2 == 0))
-    return lm.lm_score_kn5(docs.filter(F.col("doc_id") % 2 == 1), model).select(
-        "doc_id", "n_5grams", "avg_logp"
-    )
 
 
 def q_lang_id(spark: SparkSession, sf: str) -> DataFrame:
@@ -1424,7 +1132,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dup_spans": q_dup_spans,
         "span_dup_stats": q_span_dup_stats,
         "strip_spans": q_strip_spans,
-        "curation_prov": q_curation_prov,
         "kg_shorten": q_kg_shorten,
         "kg_map": q_kg_map,
         "kg_sameas_cc": q_kg_sameas_cc,
@@ -1450,20 +1157,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_sample": q_stratified_sample,
         "bm25_search": q_bm25_search,
         "top_ngrams": q_top_ngrams,
-        "lm_score": q_lm_score,
-        "lm_score_trigram": q_lm_score_trigram,
-        "lm_score_kn": q_lm_score_kn,
-        "lm_score_kn5": q_lm_score_kn5,
-        "curation_incremental": q_curation_incremental,
-        "curation_streaming": q_curation_streaming,
-        "curation_semantic": q_curation_semantic,
-        "curation_streaming_semantic": q_curation_streaming_semantic,
         "dedup_containment": q_dedup_containment,
         "semantic_decontam": q_semantic_decontam,
         "semantic_decontam_lsh": q_semantic_decontam_lsh,
         "token_budget_sample": q_token_budget_sample,
         "temperature_mix": q_temperature_mix,
-        "nb_classify": q_nb_classify,
         "pack_sequences": q_pack_sequences,
         "quality_sample": q_quality_sample,
         "semantic_dedup": q_semantic_dedup,
@@ -1628,141 +1326,6 @@ WITH words AS (
 SELECT a, b, floor(common / (sa.sz + sb.sz - common) * 10000 + 0.5) / 10000 AS jaccard
 FROM pc JOIN sizes sa ON pc.a = sa.doc_id JOIN sizes sb ON pc.b = sb.doc_id
 WHERE floor(common / (sa.sz + sb.sz - common) * 10000 + 0.5) / 10000 >= {threshold}
-"""
-
-
-def _mh_block(src: str, p: str) -> str:
-    """Per-batch minhash/LSH CTE chain (prefix `p`): words → distinct
-    3-shingles → 8 md5 minhashes → 4 LSH bands, mirroring
-    dedup.minhash_signatures/lsh_buckets with the CurationCheckpoint
-    defaults."""
-    return f"""{p}w AS (
-  SELECT doc_id, {_WORDS} AS w FROM {src}
-), {p}sh AS MATERIALIZED (
-  SELECT doc_id, unnest({_SHINGLES}) AS shingle FROM {p}w
-), {p}sig AS MATERIALIZED (
-  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || '|' || shingle)) AS minhash
-  FROM {p}sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-  GROUP BY doc_id, seed
-), {p}band AS MATERIALIZED (
-  SELECT doc_id, seed % 4 AS band, md5(string_agg(minhash, ',' ORDER BY seed)) AS bucket
-  FROM {p}sig GROUP BY doc_id, seed % 4
-)"""
-
-
-def _verify_block(sh: str, pairs: str, p: str, threshold: float = 0.8) -> str:
-    """Exact-Jaccard verification of candidate `pairs` over shingle rows
-    `sh` (prefix `p`): rounded-4 Jaccard >= threshold, like
-    dedup.ngram_jaccard_pairs. Pairs sharing no shingle never reach
-    `{p}pc` (Jaccard 0, below any useful threshold)."""
-    return f"""{p}sz AS MATERIALIZED (
-  SELECT doc_id, count(*) AS sz FROM {sh} GROUP BY doc_id
-), {p}pc AS MATERIALIZED (
-  SELECT pr.a, pr.b, count(*) AS common
-  FROM {pairs} pr
-  JOIN {sh} l ON l.doc_id = pr.a
-  JOIN {sh} r ON r.doc_id = pr.b AND r.shingle = l.shingle
-  GROUP BY pr.a, pr.b
-), {p}ver AS (
-  SELECT pc.a, pc.b
-  FROM {p}pc pc
-  JOIN {p}sz sa ON pc.a = sa.doc_id
-  JOIN {p}sz sb ON pc.b = sb.doc_id
-  WHERE floor(pc.common / (sa.sz + sb.sz - pc.common) * 10000 + 0.5) / 10000 >= {threshold}
-)"""
-
-
-def _curation_incremental_sql() -> str:
-    """SQL replay of the CurationCheckpoint two-batch policy (see
-    q_curation_incremental): per-batch exact dedup (min id per text),
-    cross-batch hash anti-join, in-batch + bucket-index candidate pairs,
-    Jaccard verification, drop-on-historical-match without chaining,
-    survivor-only min-id clustering, md5-cutoff split."""
-    split_case = """CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'e666' THEN 'train'
-            WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'f333' THEN 'val'
-            ELSE 'test' END"""
-    return f"""
-WITH RECURSIVE
-b1 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 < 2),
-b2 AS (
-  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 3 > 0
-  UNION ALL
-  SELECT doc_id + 20000000, text || ' zzznear' FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id + 30000000, text || ' qqfresh' FROM documents WHERE doc_id % 3 = 0
-),
-f1 AS MATERIALIZED (
-  SELECT b.doc_id, b.text FROM b1 b
-  JOIN (SELECT min(doc_id) AS doc_id FROM b1 GROUP BY text) k USING (doc_id)
-),
-{_mh_block('f1', 'a')},
-apairs AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM aband l JOIN aband r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-),
-{_verify_block('ash', 'apairs', 'a')},
-asym AS (SELECT a, b FROM aver UNION SELECT b AS a, a AS b FROM aver),
-areach AS (
-  SELECT a, b FROM asym
-  UNION
-  SELECT r.a, s.b FROM areach r JOIN asym s ON r.b = s.a WHERE s.b <> r.a
-),
-acomp AS (SELECT a AS doc_id, least(min(b), a) AS cluster_id FROM areach GROUP BY a),
-reps1 AS MATERIALIZED (
-  SELECT f.doc_id, f.text FROM f1 f LEFT JOIN acomp c USING (doc_id)
-  WHERE coalesce(c.cluster_id, f.doc_id) = f.doc_id
-),
-f2 AS MATERIALIZED (
-  SELECT b.doc_id, b.text FROM b2 b
-  JOIN (SELECT min(doc_id) AS doc_id FROM b2 GROUP BY text) k USING (doc_id)
-  WHERE b.text NOT IN (SELECT text FROM b1)
-),
-{_mh_block('f2', 'n')},
-oldband AS (SELECT bd.* FROM aband bd JOIN reps1 USING (doc_id)),
-npairs AS (
-  SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-  FROM nband l JOIN nband r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-),
-xpairs AS (
-  SELECT DISTINCT least(n.doc_id, o.doc_id) AS a, greatest(n.doc_id, o.doc_id) AS b
-  FROM nband n JOIN oldband o ON n.band = o.band AND n.bucket = o.bucket
-),
-allpairs AS (SELECT a, b FROM npairs UNION SELECT a, b FROM xpairs),
-vsh AS MATERIALIZED (
-  SELECT doc_id, shingle FROM nsh
-  UNION ALL
-  SELECT s.doc_id, s.shingle FROM ash s JOIN reps1 r USING (doc_id)
-),
-{_verify_block('vsh', 'allpairs', 'v')},
-crossv AS (
-  SELECT a, b FROM vver
-  WHERE a NOT IN (SELECT doc_id FROM f2) OR b NOT IN (SELECT doc_id FROM f2)
-),
-matched AS (
-  SELECT DISTINCT id FROM (
-    SELECT a AS id FROM crossv UNION ALL SELECT b AS id FROM crossv
-  ) WHERE id IN (SELECT doc_id FROM f2)
-),
-surv AS (SELECT doc_id FROM f2 WHERE doc_id NOT IN (SELECT id FROM matched)),
-inbv AS (
-  SELECT a, b FROM vver
-  WHERE a IN (SELECT doc_id FROM surv) AND b IN (SELECT doc_id FROM surv)
-),
-nsym AS (SELECT a, b FROM inbv UNION SELECT b AS a, a AS b FROM inbv),
-nreach AS (
-  SELECT a, b FROM nsym
-  UNION
-  SELECT r.a, s.b FROM nreach r JOIN nsym s ON r.b = s.a WHERE s.b <> r.a
-),
-ncomp AS (SELECT a AS doc_id, least(min(b), a) AS cluster_id FROM nreach GROUP BY a),
-reps2 AS (
-  SELECT s.doc_id FROM surv s LEFT JOIN ncomp c USING (doc_id)
-  WHERE coalesce(c.cluster_id, s.doc_id) = s.doc_id
-),
-acc AS (SELECT doc_id FROM reps1 UNION ALL SELECT doc_id FROM reps2)
-SELECT doc_id, {split_case} AS split FROM acc
 """
 
 
@@ -1997,40 +1560,6 @@ SELECT doc_id, CAST(min(s) AS INT) AS span_start,
        CAST(max(s) + 8 AS INT) AS span_end,
        CAST(max(s) + 8 - min(s) AS INT) AS span_tokens
 FROM gs GROUP BY doc_id, grp
-"""
-    # PROV-O curation provenance: every decision row rebuilt by string
-    # concatenation over the dup-injected view's exact-dedup outcome
-    _prov = "http://www.w3.org/ns/prov#"
-    _rdf_type = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-    _act = "http://example.org/activity/r6"
-    out["curation_prov"] = f"""
-WITH dup_view AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 10000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT doc_id + 20000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-),
-kept AS (SELECT min(doc_id) AS doc_id FROM dup_view GROUP BY text),
-ids AS (
-  SELECT doc_id, 'http://example.org/doc/' || CAST(doc_id AS VARCHAR) AS iri
-  FROM dup_view
-)
-SELECT iri AS subject, '{_rdf_type}' AS predicate, '{_prov}Entity' AS object,
-       FALSE AS is_literal, CAST(NULL AS VARCHAR) AS datatype,
-       CAST(NULL AS VARCHAR) AS lang
-FROM ids
-UNION ALL
-SELECT iri, '{_prov}wasGeneratedBy', '{_act}', FALSE, NULL, NULL
-FROM ids WHERE doc_id IN (SELECT doc_id FROM kept)
-UNION ALL
-SELECT iri, '{_prov}wasInvalidatedBy', '{_act}', FALSE, NULL, NULL
-FROM ids WHERE doc_id NOT IN (SELECT doc_id FROM kept)
-UNION ALL
-SELECT '{_act}', '{_rdf_type}', '{_prov}Activity', FALSE, NULL, NULL
-UNION ALL
-SELECT '{_act}', '{_prov}endedAtTime', '2026-01-01T00:00:00Z', TRUE,
-       'http://www.w3.org/2001/XMLSchema#dateTime', NULL
 """
     # sameAs refresh: the %10==1 docs merge into their even partners
     # (component = min uri of the pair), the pair's lang prop is last-
@@ -2437,43 +1966,6 @@ SELECT ngram, CAST(count(*) AS BIGINT) AS cnt
 FROM g GROUP BY ngram
 ORDER BY cnt DESC, ngram ASC LIMIT 20
 """
-    # add-0.1-smoothed bigram LM trained on even doc_ids, scored on odd;
-    # P(w2|w1) = (c2+α)/(c1+α·V); per-bigram ln is engine-identical up to
-    # ulps, absorbed by the portable round4 on the mean
-    out["lm_score"] = """
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '') AS toks
-  FROM documents
-), bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS pair
-  FROM tok WHERE len(toks) >= 2
-), bge AS (SELECT doc_id, pair[1] AS w1, pair[2] AS w2 FROM bg),
-   c2 AS (SELECT w1, w2, count(*) AS c2 FROM bge WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-   c1 AS (SELECT w1, count(*) AS c1
-          FROM (SELECT doc_id, unnest(toks) AS w1 FROM tok WHERE doc_id % 2 = 0)
-          GROUP BY 1),
-   v AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM c1),
-   sc AS (
-  SELECT b.doc_id,
-         ln((CAST(coalesce(c2.c2, 0) AS DOUBLE) + 0.1)
-            / (CAST(coalesce(c1.c1, 0) AS DOUBLE) + 0.1 * v.v)) AS logp
-  FROM bge b LEFT JOIN c2 USING (w1, w2) LEFT JOIN c1 USING (w1) CROSS JOIN v
-  WHERE b.doc_id % 2 = 1
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       floor(avg(logp) * 10000 + 0.5) / 10000 AS avg_logp
-FROM sc GROUP BY doc_id
-"""
-    # Jelinek-Mercer interpolated trigram LM (λ = 0.6/0.3/0.1, add-0.1
-    # unigram floor), trained on even doc_ids, scored on odd; round4 on
-    # the mean absorbs cross-engine ulps as in lm_score / bm25_search
-    out["curation_incremental"] = _curation_incremental_sql()
-    # the streaming wrapper must be policy-identical to the incremental
-    # state machine — same SQL replay
-    out["curation_streaming"] = _curation_incremental_sql()
     # truncation-injected containment view; same shingle machinery as
     # _jaccard_sql, ratios |A∩B|/|A| and /|B| instead of the union
     out["dedup_containment"] = f"""
@@ -2632,60 +2124,6 @@ WHERE (lang = 'en' AND (6000 >= tot OR p < printf('%04x', CAST(greatest(1, floor
    OR (lang = 'de' AND (2500 >= tot OR p < printf('%04x', CAST(greatest(1, floor(2500 / tot * 65536)) AS BIGINT))))
    OR (lang = 'zh' AND (1000000 >= tot OR p < printf('%04x', CAST(greatest(1, floor(1000000 / tot * 65536)) AS BIGINT))))
 """
-    # multinomial NB replay: count tables from the even-id train half,
-    # add-1 smoothed mean log-likelihood + log-prior per (doc, class),
-    # arg-max with lexicographic tie-break. Zero-token docs (none at
-    # this sf, but the branch is replayed) get the prior-only decision.
-    out["nb_classify"] = """
-WITH tok AS MATERIALIZED (
-  SELECT doc_id, lang,
-         unnest(list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                            t -> t <> '')) AS token
-  FROM documents WHERE doc_id % 2 = 0
-), lik AS MATERIALIZED (
-  SELECT token, lang AS label, count(*) AS cnt FROM tok GROUP BY 1, 2
-), cls AS MATERIALIZED (
-  SELECT d.lang AS label, count(*) AS n_docs, coalesce(t.n_tokens, 0) AS n_tokens
-  FROM (SELECT lang, count(*) AS cnt FROM documents WHERE doc_id % 2 = 0 GROUP BY lang) x
-  JOIN documents d ON d.lang = x.lang AND d.doc_id % 2 = 0
-  LEFT JOIN (SELECT lang, count(*) AS n_tokens FROM tok GROUP BY lang) t ON t.lang = d.lang
-  GROUP BY d.lang, t.n_tokens
-), vb AS (SELECT CAST(count(DISTINCT token) AS DOUBLE) AS v FROM tok),
-   nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents WHERE doc_id % 2 = 0),
-   tt AS MATERIALIZED (
-  SELECT doc_id,
-         unnest(list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                            t -> t <> '')) AS token
-  FROM documents WHERE doc_id % 2 = 1
-), sc AS (
-  SELECT t.doc_id, c.label,
-         ln(c.n_docs / nd.n)
-           + avg(ln((coalesce(l.cnt, 0) + 1.0) / (c.n_tokens + vb.v))) AS score
-  FROM tt t
-  CROSS JOIN cls c CROSS JOIN vb CROSS JOIN nd
-  LEFT JOIN lik l ON l.token = t.token AND l.label = c.label
-  GROUP BY t.doc_id, c.label, c.n_docs, c.n_tokens, nd.n, vb.v
-), best AS (
-  SELECT doc_id, label, score,
-         row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, label ASC) AS rn
-  FROM sc
-), emptydoc AS (
-  SELECT d.doc_id FROM documents d
-  WHERE d.doc_id % 2 = 1
-    AND len(list_filter(string_split(trim(regexp_replace(lower(d.text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                        t -> t <> '')) = 0
-), eb AS (
-  SELECT e.doc_id, c.label, ln(c.n_docs / nd.n) AS score,
-         row_number() OVER (PARTITION BY e.doc_id
-                            ORDER BY ln(c.n_docs / nd.n) DESC, c.label ASC) AS rn
-  FROM emptydoc e CROSS JOIN cls c CROSS JOIN nd
-)
-SELECT doc_id, label AS predicted,
-       floor(score * 10000 + 0.5) / 10000 AS score
-FROM (SELECT doc_id, label, score FROM best WHERE rn = 1
-      UNION ALL
-      SELECT doc_id, label, score FROM eb WHERE rn = 1)
-"""
     # temperature mixing: replay the alpha=0.5 budget formula (sqrt is
     # IEEE-correctly-rounded — bit-identical across engines) and the
     # same floor-clamped md5 cutoffs as token_budget_sample.
@@ -2739,274 +2177,6 @@ SELECT doc_id, shard, CAST(n_tokens AS INT) AS n_tokens,
        CAST(floor(st / 256.0) AS BIGINT) AS seq_id,
        CAST(st % 256 AS BIGINT) AS seq_offset
 FROM c
-"""
-    out["lm_score_trigram"] = """
-WITH tok AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '') AS toks
-  FROM documents
-), tge AS (
-  SELECT doc_id, g[1] AS w1, g[2] AS w2, g[3] AS w3
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks) - 1),
-                                     i -> [toks[i], toks[i+1], toks[i+2]])) AS g
-        FROM tok WHERE len(toks) >= 3)
-), bge AS (
-  SELECT doc_id, p[1] AS w1, p[2] AS w2
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS p
-        FROM tok WHERE len(toks) >= 2)
-), c3 AS (SELECT w1, w2, w3, count(*) AS c3 FROM tge WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
-   c2 AS (SELECT w1, w2, count(*) AS c2 FROM bge WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-   c1 AS (SELECT w1, count(*) AS c1
-          FROM (SELECT doc_id, unnest(toks) AS w1 FROM tok WHERE doc_id % 2 = 0)
-          GROUP BY 1),
-   vt AS (SELECT CAST(count(*) AS DOUBLE) AS v, CAST(sum(c1) AS DOUBLE) AS t FROM c1),
-   sc AS (
-  SELECT d.doc_id,
-         ln(0.6 * (CASE WHEN coalesce(x2.c2, 0) > 0
-                        THEN CAST(coalesce(t3.c3, 0) AS DOUBLE) / x2.c2 ELSE 0 END)
-          + 0.3 * (CASE WHEN coalesce(u2.c1, 0) > 0
-                        THEN CAST(coalesce(b23.c2, 0) AS DOUBLE) / u2.c1 ELSE 0 END)
-          + 0.1 * (CAST(coalesce(u3.c1, 0) AS DOUBLE) + 0.1) / (vt.t + 0.1 * vt.v)) AS logp
-  FROM tge d
-  LEFT JOIN c3 t3 ON d.w1 = t3.w1 AND d.w2 = t3.w2 AND d.w3 = t3.w3
-  LEFT JOIN c2 x2 ON d.w1 = x2.w1 AND d.w2 = x2.w2
-  LEFT JOIN c2 b23 ON d.w2 = b23.w1 AND d.w3 = b23.w2
-  LEFT JOIN c1 u2 ON d.w2 = u2.w1
-  LEFT JOIN c1 u3 ON d.w3 = u3.w1
-  CROSS JOIN vt
-  WHERE d.doc_id % 2 = 1
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-       floor(avg(logp) * 10000 + 0.5) / 10000 AS avg_logp
-FROM sc GROUP BY doc_id
-"""
-    # interpolated Kneser-Ney replay: same token/count CTEs as the JM
-    # oracle plus the four type-count tables; D=0.75, α=0.1. The tok/
-    # n-gram CTEs are multiply-referenced — MATERIALIZED (DuckDB inlines
-    # CTEs per reference otherwise).
-    out["lm_score_kn"] = """
-WITH tok AS MATERIALIZED (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '') AS toks
-  FROM documents
-), tge AS MATERIALIZED (
-  SELECT doc_id, g[1] AS w1, g[2] AS w2, g[3] AS w3
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks) - 1),
-                                     i -> [toks[i], toks[i+1], toks[i+2]])) AS g
-        FROM tok WHERE len(toks) >= 3)
-), bge AS MATERIALIZED (
-  SELECT doc_id, p[1] AS w1, p[2] AS w2
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS p
-        FROM tok WHERE len(toks) >= 2)
-), c3 AS MATERIALIZED (SELECT w1, w2, w3, count(*) AS c3 FROM tge WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
-   c2 AS MATERIALIZED (SELECT w1, w2, count(*) AS c2 FROM bge WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-   c1 AS (SELECT w1, count(*) AS c1
-          FROM (SELECT doc_id, unnest(toks) AS w1 FROM tok WHERE doc_id % 2 = 0)
-          GROUP BY 1),
-   vv AS (SELECT CAST(count(*) AS DOUBLE) AS v FROM c1),
-   ctxt AS (SELECT w1, w2, CAST(count(*) AS DOUBLE) AS n3t FROM c3 GROUP BY 1, 2),
-   contb AS (SELECT w2, w3, CAST(count(*) AS DOUBLE) AS cont23 FROM c3 GROUP BY 1, 2),
-   midt AS (SELECT w2, CAST(count(*) AS DOUBLE) AS mid_types FROM c3 GROUP BY 1),
-   folt AS (SELECT w1 AS w2, CAST(count(*) AS DOUBLE) AS follow_types FROM c2 GROUP BY 1),
-   contu AS (SELECT w2 AS w3, CAST(count(*) AS DOUBLE) AS cont1 FROM c2 GROUP BY 1),
-   nb AS (SELECT CAST(count(*) AS DOUBLE) AS b FROM c2),
-   lvl AS (
-  SELECT doc_id, c2v, c3v, n3tv,
-         CASE WHEN midv > 0
-              THEN greatest(cont23v - 0.75, 0) / midv + 0.75 * foltv / midv * pc
-              ELSE pc END AS p2
-  FROM (
-    SELECT d.doc_id,
-           coalesce(x2.c2, 0)::DOUBLE AS c2v,
-           coalesce(t3.c3, 0)::DOUBLE AS c3v,
-           coalesce(ct.n3t, 0) AS n3tv,
-           coalesce(cb.cont23, 0) AS cont23v,
-           coalesce(mt.mid_types, 0) AS midv,
-           coalesce(ft.follow_types, 0) AS foltv,
-           (coalesce(cu.cont1, 0) + 0.1) / (nb.b + 0.1 * vv.v) AS pc
-    FROM tge d
-    LEFT JOIN c3 t3 ON d.w1 = t3.w1 AND d.w2 = t3.w2 AND d.w3 = t3.w3
-    LEFT JOIN c2 x2 ON d.w1 = x2.w1 AND d.w2 = x2.w2
-    LEFT JOIN ctxt ct ON d.w1 = ct.w1 AND d.w2 = ct.w2
-    LEFT JOIN contb cb ON d.w2 = cb.w2 AND d.w3 = cb.w3
-    LEFT JOIN midt mt ON d.w2 = mt.w2
-    LEFT JOIN folt ft ON d.w2 = ft.w2
-    LEFT JOIN contu cu ON d.w3 = cu.w3
-    CROSS JOIN nb CROSS JOIN vv
-    WHERE d.doc_id % 2 = 1
-  )
-), sc AS (
-  SELECT doc_id,
-         ln(CASE WHEN c2v > 0 AND n3tv > 0
-                 THEN greatest(c3v - 0.75, 0) / c2v + 0.75 * n3tv / c2v * p2
-                 ELSE p2 END) AS logp
-  FROM lvl
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-       floor(avg(logp) * 10000 + 0.5) / 10000 AS avg_logp
-FROM sc GROUP BY doc_id
-"""
-    # order-5 modified Kneser-Ney replay: raw n-gram counts at orders
-    # 2-5, the continuation-count chain (each order's c' derived from
-    # the NEXT order's raw TYPE table), per-context denominator+bucket
-    # tables, count-of-counts discount triples per level (with the
-    # degenerate-fallback and 0.05 clamp mirroring lm._mkn_discounts),
-    # then the five interpolation levels chained through CTEs. α=0.1
-    # add-α floor at the unigram level (the engine's positivity
-    # convention).
-    _mkn_d = """
-  SELECT CASE WHEN least(n1, n2, n3, n4) <= 0 THEN 0.75
-              ELSE greatest(1 - 2 * (n1 / (n1 + 2 * n2)) * n2 / n1, 0.05) END AS d1,
-         CASE WHEN least(n1, n2, n3, n4) <= 0 THEN 0.75
-              ELSE greatest(2 - 3 * (n1 / (n1 + 2 * n2)) * n3 / n2, 0.05) END AS d2,
-         CASE WHEN least(n1, n2, n3, n4) <= 0 THEN 0.75
-              ELSE greatest(3 - 4 * (n1 / (n1 + 2 * n2)) * n4 / n3, 0.05) END AS d3
-  FROM (SELECT CAST(sum(CASE WHEN {c} = 1 THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-               CAST(sum(CASE WHEN {c} = 2 THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-               CAST(sum(CASE WHEN {c} = 3 THEN 1 ELSE 0 END) AS DOUBLE) AS n3,
-               CAST(sum(CASE WHEN {c} = 4 THEN 1 ELSE 0 END) AS DOUBLE) AS n4
-        FROM {t})"""
-
-    def _lvl_sql(p, c, den, n1, n2, n3p, d, lower):
-        disc = (
-            f"(CASE WHEN coalesce({c}, 0) >= 3 THEN {d}_d3 "
-            f"WHEN coalesce({c}, 0) = 2 THEN {d}_d2 ELSE {d}_d1 END)"
-        )
-        gamma = (
-            f"({d}_d1 * coalesce({n1}, 0) + {d}_d2 * coalesce({n2}, 0) "
-            f"+ {d}_d3 * coalesce({n3p}, 0))"
-        )
-        buckets = f"(coalesce({n1}, 0) + coalesce({n2}, 0) + coalesce({n3p}, 0))"
-        return (
-            f"CASE WHEN coalesce({den}, 0) > 0 AND {buckets} > 0 "
-            f"THEN greatest(CAST(coalesce({c}, 0) AS DOUBLE) - {disc}, 0) "
-            f"/ CAST({den} AS DOUBLE) "
-            f"+ {gamma} / CAST({den} AS DOUBLE) * {lower} "
-            f"ELSE {lower} END AS {p}"
-        )
-
-    _lvl2 = _lvl_sql("p2", "l2_c", "d2_den", "d2_n1", "d2_n2", "d2_n3p", "ds2", "p1")
-    _lvl3 = _lvl_sql("p3", "l3_c", "d3_den", "d3_n1", "d3_n2", "d3_n3p", "ds3", "p2")
-    _lvl4 = _lvl_sql("p4", "l4_c", "d4_den", "d4_n1", "d4_n2", "d4_n3p", "ds4", "p3")
-    _lvl5 = _lvl_sql("p5", "l5_c", "l5_den", "g5_n1", "g5_n2", "g5_n3p", "ds5", "p4")
-
-    out["lm_score_kn5"] = f"""
-WITH tok AS MATERIALIZED (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' '),
-                     t -> t <> '') AS toks
-  FROM documents
-), g5e AS MATERIALIZED (
-  SELECT doc_id, g[1] AS w1, g[2] AS w2, g[3] AS w3, g[4] AS w4, g[5] AS w5
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks) - 3),
-                     i -> [toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]])) AS g
-        FROM tok WHERE len(toks) >= 5)
-), g4e AS (
-  SELECT doc_id, g[1] AS w1, g[2] AS w2, g[3] AS w3, g[4] AS w4
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks) - 2),
-                     i -> [toks[i], toks[i+1], toks[i+2], toks[i+3]])) AS g
-        FROM tok WHERE len(toks) >= 4)
-), g3e AS (
-  SELECT doc_id, g[1] AS w1, g[2] AS w2, g[3] AS w3
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks) - 1),
-                     i -> [toks[i], toks[i+1], toks[i+2]])) AS g
-        FROM tok WHERE len(toks) >= 3)
-), g2e AS (
-  SELECT doc_id, p[1] AS w1, p[2] AS w2
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(toks)), i -> [toks[i], toks[i+1]])) AS p
-        FROM tok WHERE len(toks) >= 2)
-), t5 AS MATERIALIZED (
-  SELECT w1, w2, w3, w4, w5, count(*) AS c FROM g5e WHERE doc_id % 2 = 0
-  GROUP BY 1, 2, 3, 4, 5
-), c4r AS MATERIALIZED (
-  SELECT w1, w2, w3, w4, count(*) AS c FROM g4e WHERE doc_id % 2 = 0
-  GROUP BY 1, 2, 3, 4
-), t3t AS (SELECT w1, w2, w3 FROM g3e WHERE doc_id % 2 = 0 GROUP BY 1, 2, 3),
-   t2t AS (SELECT w1, w2 FROM g2e WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-   c4p AS MATERIALIZED (SELECT w2, w3, w4, w5, count(*) AS cc FROM t5 GROUP BY 1, 2, 3, 4),
-   c3p AS MATERIALIZED (
-  SELECT w2 AS w3, w3 AS w4, w4 AS w5, count(*) AS cc FROM c4r GROUP BY 1, 2, 3
-), c2p AS MATERIALIZED (
-  SELECT w2 AS w4, w3 AS w5, count(*) AS cc FROM t3t GROUP BY 1, 2
-), c1p AS MATERIALIZED (SELECT w2 AS w5, count(*) AS cc FROM t2t GROUP BY 1),
-   g5t AS (
-  SELECT w1, w2, w3, w4,
-         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-         CAST(sum(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-         CAST(sum(CASE WHEN c >= 3 THEN 1 ELSE 0 END) AS DOUBLE) AS n3p
-  FROM t5 GROUP BY 1, 2, 3, 4
-), d4t AS (
-  SELECT w2, w3, w4, CAST(sum(cc) AS DOUBLE) AS den,
-         CAST(sum(CASE WHEN cc = 1 THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-         CAST(sum(CASE WHEN cc = 2 THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-         CAST(sum(CASE WHEN cc >= 3 THEN 1 ELSE 0 END) AS DOUBLE) AS n3p
-  FROM c4p GROUP BY 1, 2, 3
-), d3t AS (
-  SELECT w3, w4, CAST(sum(cc) AS DOUBLE) AS den,
-         CAST(sum(CASE WHEN cc = 1 THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-         CAST(sum(CASE WHEN cc = 2 THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-         CAST(sum(CASE WHEN cc >= 3 THEN 1 ELSE 0 END) AS DOUBLE) AS n3p
-  FROM c3p GROUP BY 1, 2
-), d2t AS (
-  SELECT w4, CAST(sum(cc) AS DOUBLE) AS den,
-         CAST(sum(CASE WHEN cc = 1 THEN 1 ELSE 0 END) AS DOUBLE) AS n1,
-         CAST(sum(CASE WHEN cc = 2 THEN 1 ELSE 0 END) AS DOUBLE) AS n2,
-         CAST(sum(CASE WHEN cc >= 3 THEN 1 ELSE 0 END) AS DOUBLE) AS n3p
-  FROM c2p GROUP BY 1
-), ds5 AS ({_mkn_d.format(c='c', t='t5')}),
-   ds4 AS ({_mkn_d.format(c='cc', t='c4p')}),
-   ds3 AS ({_mkn_d.format(c='cc', t='c3p')}),
-   ds2 AS ({_mkn_d.format(c='cc', t='c2p')}),
-   nbv AS (
-  SELECT CAST((SELECT sum(cc) FROM c1p) AS DOUBLE) AS nb,
-         CAST((SELECT count(DISTINCT w)
-               FROM (SELECT unnest(toks) AS w FROM tok
-                     WHERE doc_id % 2 = 0)) AS DOUBLE) AS v
-), j AS (
-  SELECT d.doc_id,
-         t5.c AS l5_c, c4r.c AS l5_den, g5t.n1 AS g5_n1, g5t.n2 AS g5_n2, g5t.n3p AS g5_n3p,
-         c4p.cc AS l4_c, d4t.den AS d4_den, d4t.n1 AS d4_n1, d4t.n2 AS d4_n2, d4t.n3p AS d4_n3p,
-         c3p.cc AS l3_c, d3t.den AS d3_den, d3t.n1 AS d3_n1, d3t.n2 AS d3_n2, d3t.n3p AS d3_n3p,
-         c2p.cc AS l2_c, d2t.den AS d2_den, d2t.n1 AS d2_n1, d2t.n2 AS d2_n2, d2t.n3p AS d2_n3p,
-         c1p.cc AS l1_c
-  FROM g5e d
-  LEFT JOIN t5 ON d.w1 = t5.w1 AND d.w2 = t5.w2 AND d.w3 = t5.w3 AND d.w4 = t5.w4 AND d.w5 = t5.w5
-  LEFT JOIN c4r ON d.w1 = c4r.w1 AND d.w2 = c4r.w2 AND d.w3 = c4r.w3 AND d.w4 = c4r.w4
-  LEFT JOIN g5t ON d.w1 = g5t.w1 AND d.w2 = g5t.w2 AND d.w3 = g5t.w3 AND d.w4 = g5t.w4
-  LEFT JOIN c4p ON d.w2 = c4p.w2 AND d.w3 = c4p.w3 AND d.w4 = c4p.w4 AND d.w5 = c4p.w5
-  LEFT JOIN d4t ON d.w2 = d4t.w2 AND d.w3 = d4t.w3 AND d.w4 = d4t.w4
-  LEFT JOIN c3p ON d.w3 = c3p.w3 AND d.w4 = c3p.w4 AND d.w5 = c3p.w5
-  LEFT JOIN d3t ON d.w3 = d3t.w3 AND d.w4 = d3t.w4
-  LEFT JOIN c2p ON d.w4 = c2p.w4 AND d.w5 = c2p.w5
-  LEFT JOIN d2t ON d.w4 = d2t.w4
-  LEFT JOIN c1p ON d.w5 = c1p.w5
-  WHERE d.doc_id % 2 = 1
-), l1 AS (
-  SELECT j.*, ds2.*, ds3.*, ds4.*, ds5.*, nbv.nb, nbv.v,
-         (CAST(coalesce(l1_c, 0) AS DOUBLE) + 0.1) / (nbv.nb + 0.1 * nbv.v) AS p1
-  FROM j CROSS JOIN nbv
-  CROSS JOIN (SELECT d1 AS ds2_d1, d2 AS ds2_d2, d3 AS ds2_d3 FROM ds2) ds2
-  CROSS JOIN (SELECT d1 AS ds3_d1, d2 AS ds3_d2, d3 AS ds3_d3 FROM ds3) ds3
-  CROSS JOIN (SELECT d1 AS ds4_d1, d2 AS ds4_d2, d3 AS ds4_d3 FROM ds4) ds4
-  CROSS JOIN (SELECT d1 AS ds5_d1, d2 AS ds5_d2, d3 AS ds5_d3 FROM ds5) ds5
-), l2 AS (SELECT *, {_lvl2} FROM l1
-), l3 AS (SELECT *, {_lvl3} FROM l2
-), l4 AS (SELECT *, {_lvl4} FROM l3
-), l5 AS (SELECT *, {_lvl5} FROM l4
-), sc AS (SELECT doc_id, ln(p5) AS logp FROM l5)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_5grams,
-       floor(avg(logp) * 10000 + 0.5) / 10000 AS avg_logp
-FROM sc GROUP BY doc_id
 """
     # embedding-space decontamination: bench = vec_id % 20 == 0,
     # max cosine + hit count per training vector above 0.35
@@ -3125,78 +2295,6 @@ SELECT vec_id,
        / 10000 AS max_err
 FROM qc GROUP BY 1
 """
-    # cross-batch SemDeDup through the curation state machine: batch 1
-    # in-batch closure; batch 2 drops docs matching batch-1 ACCEPTED
-    # embeddings (append-only policy), then closes over the remaining
-    # survivors only (no chaining through history-dropped docs).
-    # the stage normalizes ONCE (unit_vectors) and buckets the
-    # normalized vectors; the replay mirrors both (bucket signs can
-    # differ between raw and normalized only on exact hyperplane
-    # boundaries, so the formula must match bit-for-bit)
-    _cos = "floor(list_dot_product({l}.v, {r}.v) * 10000 + 0.5) / 10000"
-    out["curation_semantic"] = f"""
-WITH RECURSIVE e0 AS (
-  SELECT vec_id AS id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-), e AS (
-  SELECT id, list_transform(v, x -> x / nrm) AS v
-  FROM (SELECT id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e0)
-), bk AS MATERIALIZED (
-  SELECT id, v, 0 AS band, {_lsh_bucket_sql('v', 4, band=0)} AS bucket FROM e
-  UNION ALL
-  SELECT id, v, 1 AS band, {_lsh_bucket_sql('v', 4, band=1)} AS bucket FROM e
-), b1 AS MATERIALIZED (SELECT * FROM bk WHERE id < 250),
-p1 AS MATERIALIZED (
-  SELECT DISTINCT l.id AS a, r.id AS b
-  FROM b1 l JOIN b1 r ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id
-  WHERE {_cos.format(l='l', r='r')} >= 0.5
-),
-sym1 AS (SELECT a, b FROM p1 UNION SELECT b AS a, a AS b FROM p1),
-reach1 AS (
-  SELECT a, b FROM sym1
-  UNION
-  SELECT r.a, s.b FROM reach1 r JOIN sym1 s ON r.b = s.a WHERE s.b <> r.a
-),
-comp1 AS (SELECT a AS id, least(min(b), a) AS cid FROM reach1 GROUP BY a),
-acc1 AS MATERIALIZED (
-  SELECT e.id FROM e LEFT JOIN comp1 c ON e.id = c.id
-  WHERE e.id < 250 AND coalesce(c.cid, e.id) = e.id
-),
-b2 AS MATERIALIZED (SELECT * FROM bk WHERE id >= 250),
-hb AS MATERIALIZED (SELECT b1.* FROM b1 JOIN acc1 ON b1.id = acc1.id),
-xmatch AS MATERIALIZED (
-  SELECT DISTINCT n.id
-  FROM b2 n JOIN hb o ON n.band = o.band AND n.bucket = o.bucket
-  WHERE {_cos.format(l='n', r='o')} >= 0.5
-),
-s2 AS MATERIALIZED (
-  SELECT b2.* FROM b2 LEFT JOIN xmatch x ON b2.id = x.id WHERE x.id IS NULL
-),
-p2 AS MATERIALIZED (
-  SELECT DISTINCT l.id AS a, r.id AS b
-  FROM s2 l JOIN s2 r ON l.band = r.band AND l.bucket = r.bucket AND l.id < r.id
-  WHERE {_cos.format(l='l', r='r')} >= 0.5
-),
-sym2 AS (SELECT a, b FROM p2 UNION SELECT b AS a, a AS b FROM p2),
-reach2 AS (
-  SELECT a, b FROM sym2
-  UNION
-  SELECT r.a, s.b FROM reach2 r JOIN sym2 s ON r.b = s.a WHERE s.b <> r.a
-),
-comp2 AS (SELECT a AS id, least(min(b), a) AS cid FROM reach2 GROUP BY a),
-s2ids AS (SELECT DISTINCT id FROM s2),
-acc2 AS (
-  SELECT s.id FROM s2ids s LEFT JOIN comp2 c ON s.id = c.id
-  WHERE coalesce(c.cid, s.id) = s.id
-)
-SELECT id AS doc_id, 1 AS batch FROM acc1
-UNION ALL
-SELECT id AS doc_id, 2 AS batch FROM acc2
-"""
-    # the streaming wrapper must add no semantics beyond micro-batch
-    # delivery: identical replay to curation_semantic (the same pairing
-    # as curation_streaming ≡ curation_incremental)
-    out["curation_streaming_semantic"] = out["curation_semantic"]
     # SemDeDup action: the embedding_near_dups pair replay + recursive
     # transitive closure (the dedup_clusters shape) + min-id rep flag.
     out["semantic_dedup"] = f"""

@@ -77,14 +77,12 @@ def main() -> None:
 
     from neosemantics_spark.checkpoint import ImportCheckpoint
     from neosemantics_spark.config import GraphConfig
-    from neosemantics_spark.operators.cc import canonical_map, canonicalize_triples
     from neosemantics_spark.operators.materialize import (
-        materialize,
-        transform_triples,
         write_edges_partitioned,
         write_node_props_partitioned,
     )
-    from neosemantics_spark.operators.prefixes import build_prefix_map, collect_namespaces
+    from neosemantics_spark.operators.prefixes import shorten_iri
+    from neosemantics_spark.pipeline import build_graph
     from neosemantics_spark.session import get_submitted_spark
 
     spark = get_submitted_spark("neosemantics-import-job")
@@ -97,7 +95,6 @@ def main() -> None:
     cp = ImportCheckpoint(spark, args.checkpoint)
     from pyspark.sql import functions as F
 
-    ns = {}
     if args.incremental:
         import os
 
@@ -142,12 +139,7 @@ def main() -> None:
         triples = (
             cp.all_triples().filter(F.col("parse_error").isNull()).drop("run_id").cache()
         )
-        if cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):
-            ns = build_prefix_map(collect_namespaces(triples))
-        t = transform_triples(triples, cfg, ns)
-        if not args.no_entity_linking:
-            t = canonicalize_triples(t, canonical_map(t))
-        tables = materialize(t, cfg, cache_intermediate=True)
+        _, tables, ns = build_graph(triples, cfg, link_entities=not args.no_entity_linking)
     tables.nodes.write.mode("overwrite").parquet(f"{args.output}/nodes")
     write_edges_partitioned(tables.edges, f"{args.output}/edges", cfg)
     write_node_props_partitioned(tables.node_props, f"{args.output}/node_props", cfg)
@@ -166,19 +158,10 @@ def main() -> None:
             store.import_shapes(fh.read())
     shapes = store.compiled()
     if shapes is not None:
-        from neosemantics_spark.config import PREFIX_SEPARATOR
-
-        def iri_map(iri: str) -> str:
-            # vocab elements are stored transformed; node URIs stay full
-            for nsp, pref in sorted(ns.items(), key=lambda kv: -len(kv[0])):
-                if iri.startswith(nsp):
-                    return pref + PREFIX_SEPARATOR + iri[len(nsp):]
-            return iri
-
         # a replayed run (see ingest_batch) is validated like a new one
         n_violations = 0
         for rid in runs:
-            violations = ShaclValidator(tables, iri_map if ns else None).validate_delta(
+            violations = ShaclValidator(tables, shorten_iri(ns)).validate_delta(
                 shapes, touched_nodes(cp, rid)
             )
             vdir = f"{args.output}/violations/run_id={rid}"

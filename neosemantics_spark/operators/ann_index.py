@@ -3,7 +3,7 @@
 should stop recomputing assignment per run; a new corpus batch appends
 like `search.append_postings`).
 
-Layout (the BM25/NB layout discipline — manifest + atomic HEAD rename,
+Layout (the BM25 layout discipline — manifest + atomic HEAD rename,
 driver-local root guard, content-fingerprint batch ids):
 
 - `centroids/`                 parquet (centroid_id, cvec) — the trained

@@ -370,8 +370,8 @@ def quality_weighted_sample(
     engine via the 0x-cast) rather than lexicographic. Shuffle-free,
     seed-free, pushdown-able; the same row makes the same decision on
     every run, engine, and cluster size. Deterministic given the score
-    column — pair it with any of the engine's score producers
-    (lm_score, text_quality, nb_score) or a plain column."""
+    column — pair it with the engine's `text_quality` or any plain
+    numeric column."""
     span = hi - lo
     if span <= 0:
         raise ValueError("quality_weighted_sample requires hi > lo")
@@ -460,10 +460,6 @@ def corpus_profile(
     partition to |groups| rows before the shuffle, and count(distinct
     digest) is Spark's standard two-phase distinct-agg expansion — at
     100 TB the shuffled payload is digests + counters, never text.
-
-    This is the reporting complement to the curation metrics ledger
-    (`curation.py` metrics): that tracks per-batch decisions, this
-    summarizes a finished corpus.
     """
     from .text import _words
 

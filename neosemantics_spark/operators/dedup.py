@@ -68,10 +68,8 @@ def shingle_rows(
 def exact_dup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: sha2(text, 256) → (text_hash, cnt,
     keep_id). One shuffle; partial aggregation map-side. Keyed on the
-    SAME hash identity as `dedup_exact` and the curation checkpoint's
-    text_hashes state table — one definition of "the same document"
-    across the whole engine (two hash identities invite a state-join
-    bug the first time a groups output meets the checkpoint state)."""
+    SAME hash identity as `dedup_exact` — one definition of "the same
+    document" across the engine."""
     return (
         docs.groupBy(F.sha2(F.col(text_col), 256).alias("text_hash"))
         .agg(F.count("*").alias("cnt"), F.min("doc_id").alias("keep_id"))
@@ -504,8 +502,7 @@ def chunk_hash_table(
 ) -> DataFrame:
     """Distinct normalized-chunk hashes (column `ch`) of the corpus's
     non-oversized documents — the persistable ownership set for
-    cross-batch `dedup_chunks(claimed=...)` (the chunk-level analogue of
-    the curation checkpoint's text_hashes table)."""
+    cross-batch `dedup_chunks(claimed=...)`."""
     _, ch = _chunk_rows(docs, chunk_tokens, id_col, text_col, max_doc_tokens)
     return ch.select("ch").distinct()
 
@@ -654,8 +651,8 @@ def elect_cluster_reps(
     member of a duplicate cluster, not an arbitrary one — min-id
     election (the `doc_id == cluster_id` convention elsewhere) is only
     the right default when no quality signal exists; this operator is
-    the drop-in upgrade once one does (lm_score, text_quality,
-    nb_score, or any numeric column).
+    the drop-in upgrade once one does (text_quality or any numeric
+    column).
 
     Plan: scores are first collapsed to one row per id (max — the best
     known score; a duplicate-id scores table would otherwise duplicate

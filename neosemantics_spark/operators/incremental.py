@@ -122,8 +122,8 @@ class IncrementalGraphStore:
         n_buckets: int = 16,
         max_live_versions: int = 8,
     ):
-        # same driver-local commit protocol as CurationCheckpoint: a
-        # remote-scheme root would silently lose the manifest
+        # driver-local commit protocol: a remote-scheme root would
+        # silently lose the manifest
         m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", root)
         if m:
             if m.group(1) != "file":

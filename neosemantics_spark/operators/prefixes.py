@@ -13,7 +13,8 @@ run-to-run (SURVEY.md §4 "deterministic prefix resolution").
 from __future__ import annotations
 
 import json
-from typing import Dict, List, Optional
+import re
+from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -95,6 +96,21 @@ def shorten_expr(col: Column, ns_to_prefix: Dict[str, str]) -> Column:
     m = map_literal({ns: p + PREFIX_SEPARATOR for ns, p in ns_to_prefix.items()})
     pfx = F.element_at(m, namespace_of(col))
     return F.coalesce(F.concat(pfx, local_name_of(col)), col)
+
+
+def shorten_iri(ns_to_prefix: Dict[str, str]) -> Callable[[str], str]:
+    """The driver-side twin of `shorten_expr` for one IRI (a SHACL shape's
+    class or path, say): the same namespace split and the same exact map
+    lookup, so it yields the form the transforms stored. Unknown
+    namespace: the full IRI."""
+    split = re.compile(NS_SPLIT_RE)
+
+    def shorten(iri: str) -> str:
+        m = split.match(iri)
+        pfx = ns_to_prefix.get(m.group(1)) if m else None
+        return iri if pfx is None else pfx + PREFIX_SEPARATOR + m.group(2)
+
+    return shorten
 
 
 def expand_short_form(col: Column, prefix_to_ns: Optional[Dict[str, str]]) -> Column:

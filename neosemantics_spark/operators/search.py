@@ -175,16 +175,15 @@ def write_postings(
       the per-query scalar jobs of the index-less path become one tiny
       agg at index open.
 
-    The index survives corpus growth the way the curation state does:
-    `append_postings` folds a new document batch into its own batch
-    directories under the same term-bucket layout and commits with a
-    single HEAD rename (commits/MANIFEST-<n> snapshot pointer); readers
+    The index survives corpus growth: `append_postings` folds a new
+    document batch into its own batch directories under the same
+    term-bucket layout and commits with a single HEAD rename
+    (commits/MANIFEST-<n> snapshot pointer); readers
     see only committed batches, a crash mid-append leaves the previous
     snapshot fully live, and a replay overwrites its own partial
     directories (content-fingerprint batch ids). `write_postings`
     itself (re)initializes the index to exactly one batch. The path must
-    be driver-local: the commit protocol is POSIX manifest + HEAD rename
-    (same guard as CurationCheckpoint / save_nb)."""
+    be driver-local: the commit protocol is POSIX manifest + HEAD rename."""
     path = require_local_root(path, "BM25 index")
     postings, doclens = build_postings(docs, id_col, text_col)
     doclens = doclens.localCheckpoint(eager=True)

@@ -549,7 +549,7 @@ def _assign_numpy(
     (||x||² − 2xCᵀ + ||c||², clamped at 0) instead of n×k interpreted
     zip_with/aggregate lambdas — measured 5.4× on the whole
     cluster_balanced_sample stage at 200k vectors × 447 centroids
-    (81 → 15 s including the non-assignment work; `stress_r5_ops.py`).
+    (81 → 15 s including the non-assignment work).
     The centroid matrix is collected to the driver and shipped in the
     task closure — it is bounded by the centroid count (sqrt corpus),
     never corpus-scale.
@@ -1029,8 +1029,8 @@ def semantic_dedup(
     on survivors). Filtering is_rep=1 is the dedup pass; keeping the
     full table is the audit view.
 
-    With `scores` (an (id_col, score_col) table — lm_score,
-    quality_score, nb_score, any numeric signal), the representative is
+    With `scores` (an (id_col, score_col) table — quality_score or any
+    numeric signal), the representative is
     instead the HIGHEST-scoring cluster member via
     `dedup.elect_cluster_reps` (ties → min id; all-unscored clusters
     degrade to min-id) — production SemDeDup keeps the best-quality

@@ -40,6 +40,29 @@ class ImportResult:
     config_hash: str = ""  # fingerprint of (cfg, mapping) — lineage record
 
 
+def build_graph(
+    triples: DataFrame,
+    cfg: GraphConfig,
+    link_entities: bool = True,
+    mapping: Optional[Dict[str, str]] = None,
+    cache: bool = True,
+) -> Tuple[DataFrame, GraphTables, Dict[str, str]]:
+    """The batch chain over parsed triples: prefix map (SHORTEN modes) →
+    transforms (T1–T10) → owl:sameAs canonicalization (J3, with
+    `link_entities`) → materialize (A1–A5). `cache` persists the
+    transformed triples and the graph tables. Returns (transformed
+    triples, tables, namespace → prefix map)."""
+    ns_to_prefix: Dict[str, str] = {}
+    if cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):
+        ns_to_prefix = build_prefix_map(collect_namespaces(triples))
+    t = transform_triples(triples, cfg, ns_to_prefix, mapping)
+    if link_entities:
+        t = canonicalize_triples(t, canonical_map(t))
+    if cache:
+        t = t.cache()
+    return t, materialize(t, cfg, cache_intermediate=cache), ns_to_prefix
+
+
 def import_rdf(
     src_files: DataFrame,
     cfg: Optional[GraphConfig] = None,
@@ -56,17 +79,7 @@ def import_rdf(
     # one job for both counts: count(parse_error) skips the null rows
     triples_parsed, parse_errors = raw.agg(F.count("*"), F.count("parse_error")).first()
 
-    ns_to_prefix = {}
-    if cfg.handle_vocab_uris in ("SHORTEN", "SHORTEN_STRICT"):
-        ns_to_prefix = build_prefix_map(collect_namespaces(raw))
-
-    t = transform_triples(raw, cfg, ns_to_prefix, mapping)
-    if link_entities:
-        comp = canonical_map(t)
-        t = canonicalize_triples(t, comp)
-    if cache_triples:
-        t = t.cache()
-    tables = materialize(t, cfg, cache_intermediate=cache_triples)
+    t, tables, ns_to_prefix = build_graph(raw, cfg, link_entities, mapping, cache_triples)
     loaded = t.count()  # transform_triples already drops quarantined rows
     from .checkpoint import config_fingerprint
 

@@ -12,8 +12,6 @@ StatementStreamer.java:40-56). The Spark-native engine adds true streaming:
   the processed-file anti-join.
 - `preview`: the reference's bounded preview (L1/L2 stream-triple-limit,
   RDFParserConfig.java:18) as a plain limit over the batch parse.
-- `streaming_curate`: foreachBatch wrapper that runs the incremental
-  corpus curation (curation.CurationCheckpoint) per micro-batch.
 """
 
 from __future__ import annotations
@@ -59,49 +57,3 @@ def preview(triples: DataFrame, limit: int = 1000) -> DataFrame:
     """n10s.rdf.preview / streamTripleLimit analogue: bounded sample of the
     parsed-but-unmaterialized triples (RDFProcedures.java:101-132)."""
     return triples.limit(limit)
-
-
-def streaming_curate(
-    docs_stream: DataFrame,
-    state_root: str,
-    output_root: str,
-    checkpoint_dir: str,
-    bench: DataFrame | None = None,
-    once: bool = True,
-    **curation_opts,
-):
-    """Continuous corpus curation: every micro-batch runs the FULL
-    incremental curation pipeline (curation.CurationCheckpoint.run —
-    cross-batch exact + near-dup dedup against all previously accepted
-    documents, decontamination, reference-LM filter, hash split) and
-    appends accepted rows to `output_root` partitioned by split.
-
-    foreachBatch is the right integration point: the pipeline is a
-    multi-join batch program (bucket joins, CC clustering, LM joins), not
-    a single keyed stateful operator, so `applyInPandasWithState` cannot
-    express it. The stream checkpoint gives batch-boundary replay; the
-    curation state's hash-set anti-join makes a replayed batch a no-op
-    (n_fresh = 0), so the at-least-once side effect converges to
-    effectively-once for the state tables. The curated parquet append is
-    the standard foreachBatch caveat: a crash between the output write
-    and the stream commit can duplicate ONE batch's output rows —
-    downstream readers dedupe on doc_id (or the output is re-derivable
-    from the state's reps table, which is exactly-once).
-    """
-    from ..curation import CurationCheckpoint
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        res = CurationCheckpoint(spark, state_root).run(
-            batch_df, bench, **curation_opts
-        )
-        res.curated.write.mode("append").partitionBy("split").parquet(output_root)
-
-    w = docs_stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if once:
-        w = w.trigger(availableNow=True)
-    return w.start()

@@ -52,10 +52,9 @@ def require_local_root(root: str, component: str) -> str:
     atomic HEAD rename) must run through this guard: on an hdfs:// or
     s3a:// root the parquet would land remotely while the POSIX half
     writes to a bogus driver-local path — a silent split where half the
-    artifact is invisible (the hazard CurationCheckpoint and
-    IncrementalGraphStore refuse loudly; ADVICE r5 extended the guard to
-    save_nb/load_nb and the BM25 index). file:/ is accepted and
-    stripped, since Spark and POSIX agree on it."""
+    artifact is invisible (the hazard IncrementalGraphStore and the BM25
+    index refuse loudly). file:/ is accepted and stripped, since Spark
+    and POSIX agree on it."""
     import re
 
     m = re.match(r"^([A-Za-z][A-Za-z0-9+.-]*):", root)

@@ -1,11 +1,10 @@
-"""Training-data pipeline operators: dedup, similarity, text, multimodal,
-scalar functions, inference."""
+"""Training-data pipeline operators: dedup, similarity, text, multimodal."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from neosemantics_spark.operators import dedup, inference, similarity, text
+from neosemantics_spark.operators import dedup, similarity, text
 from neosemantics_spark.operators.multimodal import (
     extract_features,
     media_stats,
@@ -319,70 +318,6 @@ def test_codec_roundtrips_and_corruption():
         png_decode(bytes(bad))
     with _pytest.raises(ValueError):
         wav_decode(b"RIFFxxxxNOPE")
-
-
-def test_scalar_functions(spark):
-    from neosemantics_spark.functions import (
-        get_datatype,
-        get_iri_local_name,
-        get_iri_namespace,
-        get_lang_tag,
-        get_value,
-    )
-
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "v": [
-                    "http://example.org/voc#name",
-                    "3.14^^http://www.w3.org/2001/XMLSchema#decimal",
-                    "320^^ns1__horsepower",
-                    "hola@es",
-                    "plain",
-                ]
-            }
-        )
-    )
-    out = df.select(
-        get_iri_local_name(F.col("v")).alias("local"),
-        get_iri_namespace(F.col("v")).alias("ns"),
-        get_value(F.col("v")).alias("val"),
-        get_datatype(F.col("v")).alias("dt"),
-        get_lang_tag(F.col("v")).alias("tag"),
-    ).collect()
-    assert out[0]["local"] == "name" and out[0]["ns"] == "http://example.org/voc#"
-    assert out[1]["val"] == "3.14" and out[1]["dt"].endswith("decimal")
-    assert out[2]["val"] == "320" and out[2]["dt"] == "ns1__horsepower"
-    assert out[3]["val"] == "hola" and out[3]["tag"] == "es"
-    assert out[4]["val"] == "plain" and out[4]["dt"].endswith("string")
-
-
-def test_inference_closure(spark):
-    edges = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {"src": "Cat", "rel": "SCO", "dst": "Mammal"},
-                {"src": "Mammal", "rel": "SCO", "dst": "Animal"},
-                {"src": "Dog", "rel": "SCO", "dst": "Mammal"},
-            ]
-        )
-    )
-    clo = inference.transitive_closure(edges).toPandas()
-    anc = set(clo[clo.descendant == "Cat"].ancestor)
-    assert anc == {"Cat", "Mammal", "Animal"}
-    nodes = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                {"uri": "u1", "labels": ["Cat"]},
-                {"uri": "u2", "labels": ["Animal"]},
-                {"uri": "u3", "labels": ["Robot"]},
-            ]
-        )
-    )
-    got = inference.nodes_labelled_with_inference(
-        nodes, inference.transitive_closure(edges), "Animal"
-    ).toPandas()
-    assert sorted(got.uri) == ["u1", "u2"]
 
 
 def test_ivf_centroids_non_dense_ids(spark, emb):

@@ -1,7 +1,7 @@
 """Every `neosemantics_spark` import in the package, the jobs, the scripts,
-the examples and the driver contract resolves — including lazy imports
-inside functions, which only fail when their code path runs. Reads the
-sources with `ast`; starts no Spark session."""
+the examples, the benchmark, the tests and the driver contract resolves —
+including lazy imports inside functions, which only fail when their code
+path runs. Reads the sources with `ast`; starts no Spark session."""
 
 import ast
 import importlib
@@ -13,7 +13,7 @@ PKG = "neosemantics_spark"
 
 
 def _sources():
-    for d in (PKG, "jobs", "scripts", "examples"):
+    for d in (PKG, "jobs", "scripts", "examples", "kgbench", "tests"):
         yield from sorted((ROOT / d).rglob("*.py"))
     yield ROOT / "__spark_entry__.py"
 

@@ -5,6 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from neosemantics_spark.operators import inference
 from neosemantics_spark.operators.inference import (
     assemble_restrictions,
     route_ontology,
@@ -101,3 +102,31 @@ def test_skos_label_props_xl_two_leg(spark):
         ("http://e/c1", "altLabel", "alt-via-xl"),
         ("http://e/c1", "prefLabel", "direct"),
     ], got
+
+
+def test_inference_closure(spark):
+    edges = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {"src": "Cat", "rel": "SCO", "dst": "Mammal"},
+                {"src": "Mammal", "rel": "SCO", "dst": "Animal"},
+                {"src": "Dog", "rel": "SCO", "dst": "Mammal"},
+            ]
+        )
+    )
+    clo = inference.transitive_closure(edges).toPandas()
+    anc = set(clo[clo.descendant == "Cat"].ancestor)
+    assert anc == {"Cat", "Mammal", "Animal"}
+    nodes = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {"uri": "u1", "labels": ["Cat"]},
+                {"uri": "u2", "labels": ["Animal"]},
+                {"uri": "u3", "labels": ["Robot"]},
+            ]
+        )
+    )
+    got = inference.nodes_labelled_with_inference(
+        nodes, inference.transitive_closure(edges), "Animal"
+    ).toPandas()
+    assert sorted(got.uri) == ["u1", "u2"]

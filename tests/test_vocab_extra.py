@@ -14,6 +14,8 @@ from neosemantics_spark.operators.prefixes import (
     expand_short_form,
     local_name_of,
     namespace_of,
+    shorten_expr,
+    shorten_iri,
 )
 from neosemantics_spark.sources.parse import extract_triples
 
@@ -188,3 +190,57 @@ def test_prefix_lookup_matches_case_chains(spark, ns_to_prefix):
     if ns_to_prefix:
         assert {r["short"] for r in rows} >= {"a__x", "ab__y", "ns1__q", "ns10__r", "urn:isbn:123"}
         assert {r["full"] for r in rows} >= {"http://pu.org/x", "http://y.org/r", "http://a/b__c"}
+
+
+def test_shorten_iri_matches_shorten_expr(spark):
+    """The driver-side shape-IRI mapping stores an IRI the way the
+    transforms do: only its own namespace counts, never a shorter mapped
+    prefix of it."""
+    ns_to_prefix = build_prefix_map(["http://ex.org/", "http://ex.org/voc#"])
+    cases = {
+        "http://ex.org/a/B": "http://ex.org/a/B",  # only a shorter namespace is mapped
+        "http://ex.org/voc#name": "ns1__name",
+        "http://www.w3.org/2000/01/rdf-schema#label": "rdfs__label",
+        "http://other.org/x": "http://other.org/x",
+    }
+    df = spark.createDataFrame([(v,) for v in cases], "v string")
+    rows = df.select("v", shorten_expr(F.col("v"), ns_to_prefix).alias("s")).collect()
+    shorten = shorten_iri(ns_to_prefix)
+    assert {r["v"]: r["s"] for r in rows} == cases
+    assert {v: shorten(v) for v in cases} == cases
+
+
+def test_scalar_functions(spark):
+    from neosemantics_spark.functions import (
+        get_datatype,
+        get_iri_local_name,
+        get_iri_namespace,
+        get_lang_tag,
+        get_value,
+    )
+
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "v": [
+                    "http://example.org/voc#name",
+                    "3.14^^http://www.w3.org/2001/XMLSchema#decimal",
+                    "320^^ns1__horsepower",
+                    "hola@es",
+                    "plain",
+                ]
+            }
+        )
+    )
+    out = df.select(
+        get_iri_local_name(F.col("v")).alias("local"),
+        get_iri_namespace(F.col("v")).alias("ns"),
+        get_value(F.col("v")).alias("val"),
+        get_datatype(F.col("v")).alias("dt"),
+        get_lang_tag(F.col("v")).alias("tag"),
+    ).collect()
+    assert out[0]["local"] == "name" and out[0]["ns"] == "http://example.org/voc#"
+    assert out[1]["val"] == "3.14" and out[1]["dt"].endswith("decimal")
+    assert out[2]["val"] == "320" and out[2]["dt"] == "ns1__horsepower"
+    assert out[3]["val"] == "hola" and out[3]["tag"] == "es"
+    assert out[4]["val"] == "plain" and out[4]["dt"].endswith("string")
