@@ -84,12 +84,11 @@ def train_nb(
 def save_nb(model: NBModel, path: str) -> None:
     """Persist the count-table model: two parquet directories + a
     meta.json with the scalars — the same layout discipline as the
-    persisted LM (`CurationCheckpoint`) and BM25 index. Write-once
-    (overwrite replaces atomically enough for a model artifact — the
-    curation state's snapshot protocol is for INCREMENTAL tables; a
-    model is re-trained, not appended). The path must be driver-local
-    (same guard as CurationCheckpoint — the parquet writers would accept
-    a remote scheme but meta.json would silently land on the driver)."""
+    BM25 index. Write-once (overwrite replaces atomically enough for a
+    model artifact; a model is re-trained, not appended). The path must
+    be driver-local (`require_local_root` — the parquet writers would
+    accept a remote scheme but meta.json would silently land on the
+    driver)."""
     import json
     import os
 

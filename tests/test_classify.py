@@ -99,34 +99,3 @@ def test_save_load_reject_remote_scheme(spark, model_and_docs, tmp_path):
     loaded = classify.load_nb(spark, "file://" + path)
     assert loaded.vocab_size == model.vocab_size
 
-
-def test_curate_corpus_nb_filter(spark, tmp_path):
-    """Classifier-filter stage: docs predicted as the junk class are
-    dropped; nb_model without nb_keep_label is a loud error."""
-    import pytest as _pytest
-
-    from neosemantics_spark.curation import curate_corpus
-
-    labeled = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta words fine prose", "good"),
-            (2, "epsilon zeta eta theta normal text here", "good"),
-            (3, "zzz zzz zzz spam spam spam", "junk"),
-        ],
-        ["doc_id", "text", "label"],
-    )
-    model = classify.train_nb(labeled, "label")
-    docs = spark.createDataFrame(
-        [
-            (10, "alpha beta words fine prose gamma delta here"),
-            (11, "spam spam zzz zzz spam zzz"),
-        ],
-        ["doc_id", "text"],
-    )
-    res = curate_corpus(
-        docs, lm_quantile=0.0, nb_model=model, nb_keep_label="good"
-    )
-    assert res.metrics["n_after_nb_filter"] == 1
-    assert {r["doc_id"] for r in res.curated.collect()} == {10}
-    with _pytest.raises(ValueError, match="nb_keep_label"):
-        curate_corpus(docs, lm_quantile=0.0, nb_model=model)
