@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from neosemantics_spark.config import KEEP, SHORTEN, GraphConfig
-from neosemantics_spark.utils import round4
 from neosemantics_spark.functions import (
     get_datatype,
     get_iri_local_name,
@@ -44,12 +43,6 @@ from neosemantics_spark.operators.export import (
     to_turtle_blocks,
 )
 from neosemantics_spark.operators.materialize import materialize, transform_triples
-from neosemantics_spark.operators.multimodal import (
-    extract_features,
-    media_stats,
-    synthetic_media,
-    synthetic_media_real,
-)
 from neosemantics_spark.operators.prefixes import build_prefix_map, collect_namespaces
 from neosemantics_spark.sources.datagen import src_files_from_documents
 from neosemantics_spark.sources.parse import extract_triples
@@ -1066,54 +1059,6 @@ def q_corpus_profile(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_embedding_quantize(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-dimension min-max int8 codes (exploded to (vec_id, pos, q)
-    so the oracle compares scalar ints, not array renderings); the
-    engine path is the broadcast-scales zip_with chain, the oracle
-    recomputes per-element from the exploded stats join."""
-    from neosemantics_spark.operators.embed import quantize_embeddings
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    return quantize_embeddings(emb, bits=8).select(
-        "vec_id", F.posexplode("qvec").alias("pos", "q")
-    )
-
-
-def q_embedding_quant_error(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-trip max |x - dequant(quant(x))| per vector at 8 bits —
-    the bit-width audit table."""
-    from neosemantics_spark.operators.embed import quantization_error
-
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    return quantization_error(emb, bits=8).select("vec_id", "max_err")
-
-
-def q_multimodal_stats(spark: SparkSession, sf: str) -> DataFrame:
-    return media_stats(synthetic_media(spark, 256)).select(
-        "kind", "n", "total_bytes", "avg_width", "avg_duration_ms"
-    )
-
-
-def q_multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """REAL decode path: actual PNG/WAV/NSV payloads built then decoded by
-    the pure-stdlib codecs; the oracle reproduces every feature from the
-    deterministic generation formulas."""
-    feats = extract_features(synthetic_media_real(spark, 256))
-    return feats.select(
-        "media_id",
-        "kind",
-        "width",
-        "height",
-        round4(F.col("mean_r")).alias("mean_r"),
-        round4(F.col("mean_g")).alias("mean_g"),
-        round4(F.col("mean_b")).alias("mean_b"),
-        round4(F.col("duration_ms")).alias("duration_ms"),
-        "n_samples",
-        round4(F.col("rms")).alias("rms"),
-        "n_frames",
-    )
-
-
 # ================================================================ driver
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full KG-construction pipeline (parse → transform →
@@ -1182,13 +1127,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "skos_route": q_skos_route,
         "skos_xl": q_skos_xl,
         "di_model": q_di_model,
-        "multimodal_stats": q_multimodal_stats,
-        "multimodal_features": q_multimodal_features,
         "kg_json_tree": q_kg_json_tree,
         "embedding_near_dups": q_embedding_near_dups,
         "corpus_profile": q_corpus_profile,
-        "embedding_quantize": q_embedding_quantize,
-        "embedding_quant_error": q_embedding_quant_error,
         "sco_closure": q_sco_closure,
     }
 
@@ -1826,53 +1767,6 @@ SELECT 'http://example.org/concept/' || doc_id,
        'http://www.w3.org/2008/05/skos-xl#altLabel', lang
 FROM documents
 """
-    out["multimodal_stats"] = """
-WITH m AS (
-  SELECT unnest(generate_series(0, 255)) AS id
-), t AS (
-  SELECT CASE id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         72 AS nbytes, id % 640 + 1 AS width, (id * 1000) % 60000 AS dur
-  FROM m
-)
-SELECT kind, count(*) AS n, CAST(sum(nbytes) AS BIGINT) AS total_bytes,
-       floor(avg(width) * 10000 + 0.5) / 10000 AS avg_width, floor(avg(dur) * 10000 + 0.5) / 10000 AS avg_duration_ms
-FROM t GROUP BY kind
-"""
-    # features of the REAL decoded payloads, reproduced analytically from
-    # the deterministic generation formulas in operators/multimodal.py
-    mean_sql = (
-        "floor(list_avg(flatten(list_transform(generate_series(0, h - 1), y -> "
-        "list_transform(generate_series(0, w - 1), x -> "
-        "CAST((id * 7 + x * 3 + y * 5 + {c} * 11) % 256 AS DOUBLE))))) * 10000 + 0.5) / 10000"
-    )
-    out["multimodal_features"] = f"""
-WITH m AS (
-  SELECT unnest(generate_series(0, 255)) AS id
-), base AS (
-  SELECT id,
-         CASE id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         4 + id % 5 AS w, 3 + id % 4 AS h,
-         160 + id % 80 AS ns, 2 + id % 3 AS nf
-  FROM m
-)
-SELECT id AS media_id, kind,
-  CASE WHEN kind <> 'audio' THEN w END AS width,
-  CASE WHEN kind <> 'audio' THEN h END AS height,
-  CASE WHEN kind <> 'audio' THEN {mean_sql.format(c=0)} END AS mean_r,
-  CASE WHEN kind <> 'audio' THEN {mean_sql.format(c=1)} END AS mean_g,
-  CASE WHEN kind <> 'audio' THEN {mean_sql.format(c=2)} END AS mean_b,
-  CASE WHEN kind = 'audio' THEN floor(CAST(ns AS DOUBLE) * 1000 / 8000 * 10000 + 0.5) / 10000
-       WHEN kind = 'video' THEN floor(CAST(nf AS DOUBLE) * 1000 / 10 * 10000 + 0.5) / 10000
-  END AS duration_ms,
-  CASE WHEN kind = 'audio' THEN ns END AS n_samples,
-  CASE WHEN kind = 'audio' THEN
-    floor(sqrt(list_avg(list_transform(generate_series(0, ns - 1), t ->
-      CAST(((id * 31 + t * 17) % 2048 - 1024) * ((id * 31 + t * 17) % 2048 - 1024) AS DOUBLE))))
-      * 10000 + 0.5) / 10000
-  END AS rms,
-  CASE WHEN kind = 'video' THEN nf END AS n_frames
-FROM base
-"""
     out["kg_json_tree"] = """
 WITH b AS (
   SELECT doc_id, lang, n_chars, source,
@@ -2250,25 +2144,6 @@ WITH e0 AS (
 )
 SELECT a, b, score FROM s WHERE score >= 0.5
 """
-    # int8 min-max quantization: parallel unnests zip positionally in
-    # DuckDB, giving the same (pos, value) rows as Spark's posexplode
-    _qx = """
-WITH x AS (
-  SELECT vec_id,
-         CAST(unnest(embedding) AS DOUBLE) AS v,
-         CAST(unnest(range(len(embedding))) AS INT) AS pos
-  FROM embeddings
-),
-s AS (SELECT pos, min(v) AS dmin, max(v) AS dmax FROM x GROUP BY 1),
-qc AS (
-  SELECT x.vec_id, x.pos, x.v, s.dmin, s.dmax,
-         CASE WHEN s.dmax - s.dmin = 0 THEN 0.0
-              ELSE greatest(0.0, least(255.0,
-                   floor((x.v - s.dmin) / (s.dmax - s.dmin) * 255 + 0.5)))
-         END AS code
-  FROM x JOIN s USING (pos)
-)
-"""
     out["corpus_profile"] = f"""
 WITH r AS (
   SELECT lang, source, length(text) AS c, len({_WORDS}) AS t, text
@@ -2285,15 +2160,6 @@ SELECT lang, source,
        CAST(min(c) AS BIGINT) AS min_chars,
        CAST(max(c) AS BIGINT) AS max_chars
 FROM r GROUP BY 1, 2
-"""
-    out["embedding_quantize"] = (
-        _qx + "SELECT vec_id, pos, CAST(code AS INT) AS q FROM qc"
-    )
-    out["embedding_quant_error"] = _qx + """
-SELECT vec_id,
-       floor(max(abs(v - (dmin + code / 255.0 * (dmax - dmin)))) * 10000 + 0.5)
-       / 10000 AS max_err
-FROM qc GROUP BY 1
 """
     # SemDeDup action: the embedding_near_dups pair replay + recursive
     # transitive closure (the dedup_clusters shape) + min-id rep flag.

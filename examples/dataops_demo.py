@@ -1,4 +1,4 @@
-"""Drive: dedup / similarity / text / multimodal operators on the sf0.01 corpus.
+"""Drive: dedup / similarity / text operators on the sf0.01 corpus.
 
 Run: spark-submit --py-files /tmp/ns_spark.zip examples/dataops_demo.py
 """
@@ -6,7 +6,6 @@ Run: spark-submit --py-files /tmp/ns_spark.zip examples/dataops_demo.py
 from pyspark.sql import functions as F
 
 from neosemantics_spark.operators import dedup, similarity, text
-from neosemantics_spark.operators.multimodal import extract_features, synthetic_media
 from neosemantics_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
@@ -33,8 +32,6 @@ def main() -> None:
     text.language_id(docs).groupBy("pred_lang").count().orderBy("pred_lang").show()
     print("[demo] quality features:")
     text.quality_features(docs.limit(3)).show()
-    print("[demo] multimodal features (stub decode, real plumbing):")
-    extract_features(synthetic_media(spark, 6)).show(3, truncate=40)
     spark.stop()
 
 

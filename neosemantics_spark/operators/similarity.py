@@ -370,10 +370,10 @@ def _fan_out(df: DataFrame, factor: int = 2) -> DataFrame:
     stage ran on ONE core). When the scan yields fewer partitions than
     the cluster's parallelism, pay one cheap shuffle of the narrow rows
     to fan the compute out; at real scale the condition is false and no
-    shuffle is added. (Delegates to utils.fan_out_scan; measured a WIN
-    only for the vector stages — interpreted per-row math ~200 ops/row —
-    and a LOSS for the lighter text tokenize paths, which therefore do
-    not use it; see OPTIMIZATION_r07.md.)"""
+    shuffle is added. (Delegates to utils.fan_out_scan, which has no off
+    switch; measured a WIN only for the vector stages — interpreted
+    per-row math ~200 ops/row — and a LOSS for the lighter text tokenize
+    paths, which therefore do not use it; see OPTIMIZATION_r07.md.)"""
     from ..utils import fan_out_scan
 
     return fan_out_scan(df, factor)

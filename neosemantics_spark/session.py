@@ -37,7 +37,9 @@ _CONF = {
 
 def get_spark(app: str = "neosemantics-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        # SPARK_GRAFT_CPUS, else (also when empty) the cores this process
+        # may run on
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{cpus}]")

@@ -30,10 +30,6 @@ def fan_out_scan(df, factor: int = 2):
     shuffle is added. Apply to the *pre-explode* table so any
     order-sensitive per-row fold (e.g. float sums over exploded
     coordinates) stays contiguous within its row."""
-    import os
-
-    if os.environ.get("SPARK_FANOUT_SCAN", "1") == "0":
-        return df
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
         n = df.rdd.getNumPartitions()

@@ -44,7 +44,7 @@ COSINES = [0.952, 0.97, 0.99]
 
 def main() -> None:
     threshold = float(sys.argv[1]) if len(sys.argv) > 1 else 0.95
-    spark = get_spark(CPUS)
+    spark = get_spark("decontam-recall", cpus=CPUS)
     emb = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .select(

@@ -9,10 +9,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from neosemantics_spark.session import get_spark
 
-    # get_spark reads SPARK_GRAFT_CPUS; without it, use the cores this
-    # process may run on
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
-    s = get_spark("neosemantics-tests", cpus=cpus)
+    s = get_spark("neosemantics-tests")
     yield s
     s.stop()
 

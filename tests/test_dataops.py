@@ -1,15 +1,10 @@
-"""Training-data pipeline operators: dedup, similarity, text, multimodal."""
+"""Training-data pipeline operators: dedup, similarity, text."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from neosemantics_spark.operators import dedup, similarity, text
-from neosemantics_spark.operators.multimodal import (
-    extract_features,
-    media_stats,
-    synthetic_media,
-)
 
 
 @pytest.fixture(scope="module")
@@ -140,186 +135,6 @@ def test_fingerprints(spark, docs):
     assert set(fp.shingle_fp.str.len()) == {128}
 
 
-def test_multimodal_plumbing(spark):
-    media = synthetic_media(spark, 32)
-    stats = media_stats(media).toPandas()
-    assert sorted(stats.kind) == ["audio", "image", "video"]
-    # opaque (non-decodable) payloads quarantine, not crash
-    feats = extract_features(media).toPandas()
-    assert len(feats) == 32
-    assert feats.decode_error.notna().all()
-
-
-def test_multimodal_real_decode(spark):
-    from neosemantics_spark.operators.multimodal import (
-        _img_dims,
-        _img_pixel,
-        _wav_samples,
-        synthetic_media_real,
-    )
-
-    media = synthetic_media_real(spark, 24)
-    pdf = extract_features(media).toPandas().sort_values("media_id")
-    assert len(pdf) == 24 and pdf.decode_error.isna().all()
-    img = pdf[pdf.kind == "image"].iloc[0]
-    mid = int(img.media_id)
-    w, h = _img_dims(mid)
-    assert (img.width, img.height) == (w, h)
-    px = _img_pixel(mid)
-    exp_r = sum(px(x, y, 0) for x in range(w) for y in range(h)) / (w * h)
-    assert abs(img.mean_r - exp_r) < 1e-9
-    aud = pdf[pdf.kind == "audio"].iloc[0]
-    s = _wav_samples(int(aud.media_id))
-    assert aud.n_samples == len(s)
-    assert abs(aud.rms - (sum(v * v for v in s) / len(s)) ** 0.5) < 1e-9
-    assert abs(aud.duration_ms - len(s) * 1000.0 / 8000) < 1e-9
-    vid = pdf[pdf.kind == "video"].iloc[0]
-    assert vid.n_frames == 2 + int(vid.media_id) % 3
-    assert abs(vid.duration_ms - vid.n_frames * 100.0) < 1e-9
-    # deterministic: same payload → same sha
-    pdf2 = extract_features(synthetic_media_real(spark, 24)).toPandas()
-    assert list(pdf.payload_sha) == list(pdf2.sort_values("media_id").payload_sha)
-
-
-def test_codec_dispatch_prefers_pil_when_importable(monkeypatch):
-    """The production-codec swap-in point is real: with a (fake) PIL
-    importable, `_image_decoder('auto')` returns the Pillow-backed
-    kernel; without it, the from-scratch kernel; codec='stdlib' pins the
-    fallback regardless. Same contract for soundfile."""
-    import sys
-    import types
-
-    import numpy as np
-
-    from neosemantics_spark.operators.multimodal import (
-        _audio_decoder,
-        _image_decoder,
-        png_decode,
-        wav_decode,
-    )
-
-    # container truth: neither library installed → stdlib kernels
-    name, fn = _image_decoder("auto")
-    assert name == "stdlib" and fn is png_decode
-    name, fn = _audio_decoder("auto")
-    assert name == "stdlib" and fn is wav_decode
-
-    class FakeImg:
-        size = (7, 5)
-
-        def convert(self, mode):
-            assert mode == "RGB"
-            return self
-
-        def __array__(self, dtype=None, copy=None):
-            return np.full((5, 7, 3), 9, dtype=np.uint8)
-
-    fake_image_mod = types.SimpleNamespace(open=lambda buf: FakeImg())
-    fake_pil = types.ModuleType("PIL")
-    fake_pil.Image = fake_image_mod
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-    monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
-    name, fn = _image_decoder("auto")
-    assert name == "pil"
-    w, h, means = fn(b"ignored-by-fake")
-    assert (w, h) == (7, 5) and means == [9.0, 9.0, 9.0]
-    # explicit stdlib pin wins even with PIL importable
-    name, fn = _image_decoder("stdlib")
-    assert name == "stdlib" and fn is png_decode
-
-    fake_sf = types.ModuleType("soundfile")
-    fake_sf.read = lambda buf, dtype: (np.array([3, -3, 3, -3], dtype=np.int16), 8000)
-    monkeypatch.setitem(sys.modules, "soundfile", fake_sf)
-    name, fn = _audio_decoder("auto")
-    assert name == "soundfile"
-    rate, n, rms = fn(b"ignored-by-fake")
-    assert (rate, n) == (8000, 4) and abs(rms - 3.0) < 1e-12
-
-
-def test_png_decoder_all_filter_types():
-    """The decoder is a real PNG reader: it must invert every scanline
-    filter (0=None, 1=Sub, 2=Up, 3=Average, 4=Paeth), not just the one our
-    encoder emits. Build a PNG by hand with a different filter per row."""
-    import struct
-    import zlib
-
-    from neosemantics_spark.operators.multimodal import _paeth, png_decode
-
-    w, h = 5, 5
-    pix = [[[(x * 7 + y * 13 + c * 3) % 256 for c in range(3)] for x in range(w)] for y in range(h)]
-    raw = bytearray()
-    prev = [0] * (w * 3)
-    for y in range(h):
-        line = [pix[y][x][c] for x in range(w) for c in range(3)]
-        ftype = y % 5
-        raw.append(ftype)
-        filt = []
-        for i, v in enumerate(line):
-            a = line[i - 3] if i >= 3 else 0
-            b = prev[i]
-            cc = prev[i - 3] if i >= 3 else 0
-            if ftype == 0:
-                filt.append(v & 0xFF)
-            elif ftype == 1:
-                filt.append((v - a) & 0xFF)
-            elif ftype == 2:
-                filt.append((v - b) & 0xFF)
-            elif ftype == 3:
-                filt.append((v - (a + b) // 2) & 0xFF)
-            else:
-                filt.append((v - _paeth(a, b, cc)) & 0xFF)
-        raw.extend(filt)
-        prev = line
-
-    def chunk(tag, data):
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    dw, dh, means = png_decode(png)
-    assert (dw, dh) == (w, h)
-    for c in range(3):
-        exp = sum(pix[y][x][c] for x in range(w) for y in range(h)) / (w * h)
-        assert abs(means[c] - exp) < 1e-9
-
-
-def test_codec_roundtrips_and_corruption():
-    from neosemantics_spark.operators.multimodal import (
-        nsv_decode,
-        nsv_encode,
-        png_decode,
-        png_encode,
-        wav_decode,
-        wav_encode,
-    )
-
-    png = png_encode(4, 3, lambda x, y, c: x + y + c)
-    assert png_decode(png)[0:2] == (4, 3)
-    wav = wav_encode([0, 100, -100, 50], rate=16000)
-    rate, n, rms = wav_decode(wav)
-    assert (rate, n) == (16000, 4)
-    assert abs(rms - (sum(v * v for v in [0, 100, -100, 50]) / 4) ** 0.5) < 1e-9
-    nsv = nsv_encode([png, png], fps=25)
-    fps, nf, f0 = nsv_decode(nsv)
-    assert (fps, nf) == (25, 2) and f0 == png
-    # corrupt CRC rejected
-    bad = bytearray(png)
-    bad[20] ^= 0xFF
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        png_decode(bytes(bad))
-    with _pytest.raises(ValueError):
-        wav_decode(b"RIFFxxxxNOPE")
-
-
 def test_ivf_centroids_non_dense_ids(spark, emb):
     """ADVICE r2: centroid seeding must not assume dense 0..n-1 ids —
     sparse/offset ids yield a full-sized centroid set and a complete
@@ -381,55 +196,6 @@ def test_ivf_refined_recall_not_worse(spark, emb):
     ).toPandas()
     hits = lambda df: len(set(df.neighbor_id) & set(bf.neighbor_id))  # noqa: E731
     assert hits(ref) >= max(1, hits(base) - 2)  # refinement must not collapse recall
-
-
-def test_png_numpy_kernel_matches_python_reference():
-    """The vectorized unfilter (cumsum Sub, vector Up) must be
-    bit-identical to the pure-Python reference on every filter type and on
-    multi-row chains where each row's reconstruction feeds the next."""
-    import struct
-    import zlib
-
-    from neosemantics_spark.operators.multimodal import (
-        _paeth,
-        png_decode,
-        png_decode_py,
-    )
-
-    w, h = 17, 10  # non-multiple-of-anything width, rows cycle all 5 filters
-    pix = [[[(x * 31 + y * 57 + c * 101 + x * y) % 256 for c in range(3)] for x in range(w)] for y in range(h)]
-    raw = bytearray()
-    prev = [0] * (w * 3)
-    for y in range(h):
-        line = [pix[y][x][c] for x in range(w) for c in range(3)]
-        ftype = (y * 3) % 5
-        raw.append(ftype)
-        for i, v in enumerate(line):
-            a = line[i - 3] if i >= 3 else 0
-            b = prev[i]
-            cc = prev[i - 3] if i >= 3 else 0
-            pred = [0, a, b, (a + b) // 2, _paeth(a, b, cc)][ftype]
-            raw.append((v - pred) & 0xFF)
-        prev = line
-
-    def chunk(tag, data):
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    assert png_decode(png) == png_decode_py(png)
-    # and the decode is actually correct, not just self-consistent
-    dw, dh, means = png_decode(png)
-    for c in range(3):
-        exp = sum(pix[y][x][c] for x in range(w) for y in range(h)) / (w * h)
-        assert abs(means[c] - exp) < 1e-9
 
 
 def test_near_dup_clusters_transitive(spark):

@@ -303,19 +303,18 @@ def test_prefix_plans_do_not_grow_with_vocabulary(spark):
 
 
 def test_tokenizer_materialized_once_in_shingles(spark, sf_dir):
-    """shingle_set / top_ngrams / _doc_bigrams must evaluate the
+    """shingle_set / top_ngrams / decontaminate must evaluate the
     regex+split tokenizer ONCE per row in its own projection. If
     CollapseProject ever re-inlines it into the n-gram transform, the
     tokenizer re-runs per transform element (measured 4x slowdown on the
     decontam pipeline at sf0.1) and the optimized plan shows one
     regexp_replace per reference instead of one per scan side."""
-    from neosemantics_spark.operators import datasets, lm, search
+    from neosemantics_spark.operators import datasets, search
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for df, sides in (
         (datasets.shingle_set(docs, n=4), 1),
         (search.top_ngrams(docs, n=2, k=5), 1),
-        (lm._doc_bigrams(docs, "doc_id", "text"), 1),
         (
             datasets.decontaminate(
                 docs.filter(F.col("doc_id") % 2 == 0),

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from neosemantics_spark.config import ARRAY, KEEP, GraphConfig
 from neosemantics_spark.operators.materialize import materialize, transform_triples
 from neosemantics_spark.rdf.terms import SH
+from neosemantics_spark.sources.datagen import FIXTURES
 from neosemantics_spark.sources.parse import extract_triples
 from neosemantics_spark.validation.shacl import ShaclValidator, compile_shapes
 
@@ -209,3 +210,43 @@ def test_view_checks(spark, tables):
     with_plans = v.view_checks(shapes, explain=True)
     assert all("Aggregate" in r["plan"] or "Join" in r["plan"] or "Filter" in r["plan"]
                for r in with_plans)
+
+
+QUAD_SHAPES = """@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.org/> .
+ex:AShape a sh:NodeShape ;
+  sh:targetQuery "uri = 'http://example.org/a'" ;
+  sh:property [ sh:path ex:p ; sh:maxCount 1 ] ;
+  sh:property [ sh:path ex:q ; sh:minCount 2 ] .
+"""
+
+
+def test_shacl_counts_over_quads(spark):
+    """Count constraints on a node that lives in several named graphs
+    (data/dataset.trig). ex:a has one node row per graph: the default
+    graph (ex:default "d"), g1 (edge ex:p -> ex:b) and g2 (edge
+    ex:p -> ex:c, ex:q "v"). Each (uri, graph) row is one focus row, and
+    the facts join it on uri alone, so each of the three counts ex:a's
+    facts over all its graphs:
+      ex:p maxCount 1: 2 edges (g1 + g2) on each row -> 3 results of "2"
+      ex:q minCount 2: 1 value (g2) on each row -> 3 results of "1"
+    (Counted per graph, ex:p would be 0/1/1 and ex:q 0/0/1.)"""
+    lang, content = FIXTURES["data/dataset.trig"]
+    src = spark.createDataFrame(
+        pd.DataFrame(
+            [{"repo": "r", "path": "d.trig", "commit": "c" * 40, "lang": lang, "content": content}]
+        )
+    )
+    cfg = GraphConfig(handle_vocab_uris=KEEP)
+    tb = materialize(transform_triples(extract_triples(src), cfg), cfg)
+    focus = tb.nodes.filter(F.col("uri") == EX + "a").toPandas()
+    assert sorted(g or "" for g in focus.graph) == ["", EX + "g1", EX + "g2"]
+    res = ShaclValidator(tb).validate(compile_shapes(QUAD_SHAPES)).toPandas()
+    got = sorted(
+        (r.focus_node, r.property_shape.split("#")[-1], r.result_path, r.offending_value)
+        for r in res.itertuples()
+    )
+    assert got == sorted(
+        [(EX + "a", "MaxCountConstraintComponent", EX + "p", "2")] * 3
+        + [(EX + "a", "MinCountConstraintComponent", EX + "q", "1")] * 3
+    ), got
